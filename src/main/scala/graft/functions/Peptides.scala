@@ -3,8 +3,12 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
+import graft.expressions.NormalizePeptidoform
+
 /** Peptide-string functions, all built from codegen'd Spark expressions — no
-  * UDFs in any hot path.
+  * UDFs in any hot path. [[normalizeSequence]] is one native expression
+  * (graft.expressions.NormalizePeptidoform) driven by the two tables below;
+  * the others compose built-in Spark functions.
   *
   * Reference semantics:
   *  - trueStem: diann2msstats.py:133-138
@@ -94,6 +98,15 @@ object Peptides {
     * `^` marker survives the rewrite untouched, as in the reference's
     * special-casing.
     *
+    * One native expression, `graft_normalize_peptidoform`: a single
+    * left-to-right pass over the string's bytes that looks each `[…]` body
+    * up in [[massForms]] and each `(UniMod:N)` id up in [[unimodNames]]
+    * (see graft.expressions.PeptidoformKernel). The match rules are those
+    * of one `regexp_replace` per table entry: exact bracket bodies, exact
+    * decimal ids (`(UniMod:035)` stays), and a `UniMod` tag that folds
+    * case in ASCII only, like Java's `(?i)` (`UNIMOD` matches, a dotless
+    * `ı` does not). PeptidoformKernelSpec holds that chain as its oracle.
+    *
     * Covered by PropertySpec's grammar fuzz across the full unimodNames
     * table (mixed UniMod/UNIMOD/name forms, N-terminal, multi-mod,
     * nested-paren isotope-label names) plus the massForms table (both
@@ -105,19 +118,7 @@ object Peptides {
     * ambiguous at their precision, see [[massForms]]) pass through as
     * `[±m]` instead of nearest-mass resolution against the full DB.
     */
-  def normalizeSequence(c: Column): Column = {
-    val massNamed = massForms.foldLeft(c) { case (acc, (mass, name)) =>
-      regexp_replace(acc, java.util.regex.Pattern.quote(s"[$mass]"), s"($name)")
-    }
-    val renamed = unimodNames.foldLeft(massNamed) { case (acc, (id, name)) =>
-      // (?i) — DIA-NN emits both "UniMod" and "UNIMOD" casings
-      regexp_replace(acc, s"(?i)\\(UniMod:$id\\)", s"($name)")
-    }
-    val caret = renamed.startsWith("^")
-    val body = when(caret, renamed.substr(lit(2), length(renamed))).otherwise(renamed)
-    val dotted = when(body.startsWith("("), concat(lit("."), body)).otherwise(body)
-    when(caret, concat(lit("^"), dotted)).otherwise(dotted)
-  }
+  def normalizeSequence(c: Column): Column = NormalizePeptidoform(c)
 
   /** Plain residue sequence: every `(Mod)` group and terminal-dot marker
     * removed (AASequence.toUnmodifiedString, psm_conversion.py:163).

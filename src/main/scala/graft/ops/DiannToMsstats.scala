@@ -20,8 +20,19 @@ object DiannToMsstats {
 
   private val log = LoggerFactory.getLogger(getClass)
 
-  /** Run the conversion and return the MSstats rows (not yet written). */
-  def convert(report: DataFrame, design: DesignTables): DataFrame = {
+  /** Run the conversion and return the MSstats rows (not yet written).
+    *
+    * The report ⋈ design join under the rows is cached, because the
+    * unmatched-run diagnostic and the caller's write both read it. The
+    * caller owns that cache and drops it once the rows are consumed (for
+    * instance with `spark.catalog.clearCache()`); [[run]] drops exactly its
+    * own join after the write.
+    */
+  def convert(report: DataFrame, design: DesignTables): DataFrame =
+    convertCached(report, design)._1
+
+  /** [[convert]]'s rows, plus the cached join they read. */
+  private def convertCached(report: DataFrame, design: DesignTables): (DataFrame, DataFrame) = {
     val multiplexed = report.columns.contains("Channel") &&
       report.agg(countDistinct(col("Channel"))).head().getLong(0) > 1
 
@@ -83,19 +94,22 @@ object DiannToMsstats {
     // both consume `joined` — without this the full scan+join runs twice
     val joined = labeled.join(broadcast(lookup), mergeKeys, "left").cache()
 
-    val unmatchedRuns = joined.filter(col("BioReplicate").isNull)
-      .select("Run").distinct().collect().map(_.getString(0))
+    val unmatchedRuns =
+      try joined.filter(col("BioReplicate").isNull)
+        .select("Run").distinct().collect().map(_.getString(0))
+      catch { case e: Throwable => joined.unpersist(blocking = true); throw e }
     if (unmatchedRuns.nonEmpty)
       log.warn(
         s"Run(s) in DIA-NN report have no match in experimental design: " +
           s"${unmatchedRuns.mkString(", ")}. These rows will be dropped. Check that Run " +
           "names (spectra file stems) match Spectra_Filepath in the design.")
 
-    joined.filter(col("BioReplicate").isNotNull)
+    val rows = joined.filter(col("BioReplicate").isNotNull)
       .select(
         (Seq("ProteinName", "PeptideSequence", "PrecursorCharge", "Intensity", "Run",
           "IsotopeLabelType", "FragmentIon", "ProductCharge", "Fraction", "BioReplicate",
           "Condition").map(col)): _*)
+    (rows, joined)
   }
 
   /** CLI-shaped entry: read, convert, write `{design-stem}_msstats_in.csv`. */
@@ -103,14 +117,15 @@ object DiannToMsstats {
           qvalueThreshold: Double, outDir: String = "."): String = {
     val report = ReportReader.read(spark, reportPath, qvalueThreshold)
     val design = DesignReader.read(spark, designPath)
-    val out = convert(report, design)
+    val (out, joined) = convertCached(report, design)
     val stemStr = {
       val name = new java.io.File(designPath).getName
       if (name.endsWith(".d.zip")) name.dropRight(6)
       else name.replaceAll("\\.[^.]*$", "")
     }
     val target = s"$outDir/${stemStr}_msstats_in.csv"
-    SingleFileSink.csv(out, target)
+    try SingleFileSink.csv(out, target)
+    finally joined.unpersist(blocking = true)
     log.info(s"MSstats input file is saved as $target")
     target
   }

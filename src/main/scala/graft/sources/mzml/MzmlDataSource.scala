@@ -225,7 +225,7 @@ class MzmlPartitionReader(
 
   private val hPath = new Path(path)
   private val fs = hPath.getFileSystem(graft.sources.SourceEnv.toConf(confMap))
-  private val parser = new MzmlParser(fs.open(hPath))
+  private val parser = new MzmlParser(fs.open(hPath), path)
   private val fileName = UTF8String.fromString(hPath.getName)
   private var current: MzmlSpectrum = _
 

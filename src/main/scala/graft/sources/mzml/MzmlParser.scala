@@ -45,9 +45,14 @@ case class MzmlSpectrum(
   * (minute/second units), selected ion m/z MS:1000744, charge MS:1000041,
   * peak intensity MS:1000042, isolation window offsets MS:1000828/829,
   * binary encodings MS:1000521/523 (32/64-bit float), MS:1000574/576
-  * (zlib/none), array kinds MS:1000514/515 (m/z / intensity).
+  * (zlib/none), array kinds MS:1000514/515 (m/z / intensity). An m/z or
+  * intensity array in an encoding the decoder does not implement — numpress
+  * MS:1002312/1002313/1002314 or integer MS:1000519/1000522 — fails with an
+  * IllegalArgumentException naming `source`, the spectrum id and the
+  * accession, instead of decoding as 64-bit floats.
   */
-class MzmlParser(in: InputStream) extends Iterator[MzmlSpectrum] with AutoCloseable {
+class MzmlParser(in: InputStream, source: String)
+    extends Iterator[MzmlSpectrum] with AutoCloseable {
 
   private val factory = {
     val f = XMLInputFactory.newInstance()
@@ -109,6 +114,7 @@ class MzmlParser(in: InputStream) extends Iterator[MzmlSpectrum] with AutoClosea
     // per-binaryDataArray state
     var is64bit = true
     var isZlib = false
+    var unsupported: String = null // accession of an encoding we cannot decode
     var arrayKind: String = ""
     var inScan = false
     var inPrecursor = false
@@ -131,7 +137,7 @@ class MzmlParser(in: InputStream) extends Iterator[MzmlSpectrum] with AutoClosea
             case "isolationWindow" => inIsolation = true
             case "selectedIon" => inSelectedIon = true; sawSelectedIon = true
             case "binaryDataArray" =>
-              is64bit = true; isZlib = false; arrayKind = ""
+              is64bit = true; isZlib = false; unsupported = null; arrayKind = ""
             case "binary" =>
               // check the kind BEFORE decoding: extra arrays (ion mobility,
               // noise, charge — common in timsTOF/Sciex exports) skip the
@@ -139,6 +145,10 @@ class MzmlParser(in: InputStream) extends Iterator[MzmlSpectrum] with AutoClosea
               val txt = readText()
               depth -= 1 // readText consumed the END_ELEMENT of <binary>
               arrayKind match {
+                case "mz" | "intensity" if unsupported != null =>
+                  throw new IllegalArgumentException(
+                    s"$source: spectrum '$nativeId' has a $arrayKind array in unsupported " +
+                      s"binary encoding $unsupported (numpress and integer arrays are not decoded)")
                 case "mz" => mz = decodeBinary(txt, is64bit, isZlib)
                 case "intensity" => inten = decodeBinary(txt, is64bit, isZlib)
                 case _ =>
@@ -161,6 +171,8 @@ class MzmlParser(in: InputStream) extends Iterator[MzmlSpectrum] with AutoClosea
                 case "MS:1000523" => is64bit = true
                 case "MS:1000574" => isZlib = true
                 case "MS:1000576" => isZlib = false
+                case "MS:1002312" | "MS:1002313" | "MS:1002314" | "MS:1000519" | "MS:1000522" =>
+                  unsupported = acc
                 case "MS:1000514" => arrayKind = "mz"
                 case "MS:1000515" => arrayKind = "intensity"
                 case _ =>

@@ -2,8 +2,13 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, Expression, RegExpReplace}
+import org.apache.spark.sql.catalyst.plans.QueryPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 
+import graft.expressions.NormalizePeptidoform
 import graft.io.{DesignReader, ReportReader}
 import graft.ops.DiannToMsstats
 
@@ -118,4 +123,38 @@ class DiannToMsstatsSpec extends SparkSpec {
     assert(out.select("IsotopeLabelType").collect().map(_.getString(0)).toSet === Set("L", "H"))
     assert(out.select("BioReplicate").distinct().head().getString(0) === "1")
   }
+
+  test("plan shape: PeptideSequence is one normalize kernel over at most one regexp_replace") {
+    // guards against the per-table-entry regexp_replace chain creeping back;
+    // the design side's trueStem regexes produce other columns. Earlier
+    // cases cached convert results; drop them so this plan is built afresh.
+    spark.catalog.clearCache()
+    val out = DiannToMsstats.convert(ReportReader.read(spark, reportTsv, 0.01),
+      DesignReader.read(spark, resource("designs/PXD026600.sdrf_openms_design.tsv")))
+    val optimized = out.queryExecution.optimizedPlan
+    // the join under the rows is cached: its plan sits in the InMemoryRelation
+    val nodes: Seq[QueryPlan[_]] = optimized.collect { case p => p } ++
+      optimized.collect { case m: InMemoryRelation => m.cacheBuilder.cachedPlan }
+        .flatMap(AdaptivePlans.collect(_) { case p => p })
+    val producers: Seq[Expression] = nodes.flatMap(_.expressions).flatMap(_.collect {
+      case a: Alias if a.name == "PeptideSequence" && !a.child.isInstanceOf[Attribute] => a.child
+    })
+    assert(producers.size === 1, optimized)
+    val e = producers.head
+    assert(e.collect { case k: NormalizePeptidoform => k }.size === 1, e)
+    assert(e.collect { case r: RegExpReplace => r }.size <= 1, e)
+    spark.catalog.clearCache()
+  }
+
+  test("run releases the join it caches") {
+    spark.catalog.clearCache()
+    val outDir = Files.createTempDirectory("msstats-run").toString
+    val target = DiannToMsstats.run(spark, reportTsv,
+      resource("designs/PXD026600.sdrf_openms_design.tsv"), 0.01, outDir)
+    assert(Files.size(java.nio.file.Paths.get(target)) > 0)
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
 }
+
+/** Plan walks that descend into adaptive (AQE) plans. */
+private object AdaptivePlans extends AdaptiveSparkPlanHelper

@@ -98,4 +98,50 @@ class SourceRobustnessSpec extends SparkSpec {
       .collect().map(_.getLong(0))
     assert(df(0) === df(1), "null tokens must not affect the signature")
   }
+
+  /** One-spectrum mzML whose intensity array declares `accession`. */
+  private def encodedRun(accession: String): String = {
+    val dir = Files.createTempDirectory("mzml-encoding")
+    val intensity = MzmlFixtures.binaryArrayPublic(Array(10.0, 20.0), "intensity")
+      .replace("MS:1000523", accession)
+    val xml =
+      s"""<?xml version="1.0" encoding="utf-8"?>
+         |<mzML xmlns="http://psi.hupo.org/ms/mzml" version="1.1.0">
+         |<run id="r">
+         |<spectrumList count="1">
+         |<spectrum index="0" id="scan=7" defaultArrayLength="2">
+         |<cvParam cvRef="MS" accession="MS:1000511" name="ms level" value="1"/>
+         |<binaryDataArrayList count="2">
+         |${MzmlFixtures.binaryArrayPublic(Array(100.0, 200.0), "mz")}
+         |$intensity
+         |</binaryDataArrayList>
+         |</spectrum>
+         |</spectrumList>
+         |</run>
+         |</mzML>""".stripMargin
+    val f = dir.resolve("encoded.mzML")
+    Files.writeString(f, xml)
+    f.toString
+  }
+
+  private def assertEncodingRejected(accession: String): Unit = {
+    val path = encodedRun(accession)
+    val e = intercept[Exception] {
+      spark.read.format("graft.sources.mzml.MzmlDataSource")
+        .option("path", path).load().select("intensity_array").collect()
+    }
+    def chain(t: Throwable): Seq[Throwable] = if (t == null) Nil else t +: chain(t.getCause)
+    val cause = chain(e).collectFirst { case x: IllegalArgumentException => x }
+    assert(cause.isDefined, chain(e).map(_.toString).mkString(" | "))
+    val msg = cause.get.getMessage
+    assert(msg.contains("encoded.mzML") && msg.contains("scan=7") && msg.contains(accession), msg)
+  }
+
+  test("numpress-encoded arrays fail loudly, naming file, spectrum and accession") {
+    Seq("MS:1002312", "MS:1002313", "MS:1002314").foreach(assertEncodingRejected)
+  }
+
+  test("integer-encoded arrays fail loudly, naming file, spectrum and accession") {
+    Seq("MS:1000519", "MS:1000522").foreach(assertEncodingRejected)
+  }
 }
