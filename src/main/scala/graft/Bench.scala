@@ -63,20 +63,10 @@ object Bench {
     // Deterministic name-sorted order: HashMap iteration reshuffles whenever
     // a query is added, which moves every other query's GC/memory context and
     // made round-over-round per-query diffs noise (r03-r05 triage tax).
-    // SPARK_GRAFT_ONLY (comma-separated names) is a builder-local iteration
-    // knob: time just the named queries with the full bench discipline
-    // (warm-up, prewarm, gc+drain, min-of-3). The driver never sets it, so
-    // the contract run is unchanged.
-    // blank tokens are dropped (an empty SPARK_GRAFT_ONLY means "all", not
-    // a silent 0-query sweep) and names matching no registered query fail
-    // fast instead of being silently ignored (a typo'd subset run would
-    // otherwise time the wrong thing and look like a regression)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").iterator.map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty[String])
-    val unknown = only.diff(SparkEntry.queries.keySet)
-    require(unknown.isEmpty,
-      s"SPARK_GRAFT_ONLY names match no registered query: ${unknown.toSeq.sorted.mkString(", ")}")
+    // SPARK_GRAFT_ONLY (comma-separated names, see SparkEntry.queryNames)
+    // times just the named queries with the full bench discipline (warm-up,
+    // prewarm, gc+drain, min-of-3); unset or empty, every query is timed.
+    val only = SparkEntry.queryNames(sys.env.getOrElse("SPARK_GRAFT_ONLY", "")).toSet
     val ordered = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.isEmpty || only(n) }
 

@@ -16,6 +16,22 @@ object SparkEntry {
       graft.queries.Temporal.all ++
       graft.queries.Extended.queries
 
+  /** Parse a comma-separated query-name list — Bench's SPARK_GRAFT_ONLY,
+    * Verify's subset argument, StreamProf's and PlanDump's name lists.
+    * Blank tokens are dropped, and a name matching no registered query
+    * fails fast (a typo'd subset would otherwise run the wrong thing and
+    * look like a regression). Returns the names in the given order,
+    * without duplicates; an empty result means every query, never a
+    * silent 0-query run.
+    */
+  def queryNames(spec: String): Seq[String] = {
+    val names = spec.split(",").iterator.map(_.trim).filter(_.nonEmpty).toSeq.distinct
+    val unknown = names.filterNot(queries.keySet)
+    require(unknown.isEmpty,
+      s"names match no registered query: ${unknown.sorted.mkString(", ")}")
+    names
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

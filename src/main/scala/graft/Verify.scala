@@ -5,10 +5,10 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
-    // optional 3rd arg: comma-separated query names — builder-local
-    // iteration on a subset; the driver always calls with 2 args (= all)
-    val only: Set[String] =
-      if (args.length > 2) args(2).split(",").toSet else Set.empty
+    // optional 3rd arg: comma-separated query names (see
+    // SparkEntry.queryNames) — dump only that subset, oracle SQL included;
+    // with 2 args (or an empty list) every query is dumped
+    val only = SparkEntry.queryNames(if (args.length > 2) args(2) else "").toSet
     val spark = Sessions.local(Sessions.cpusOr("4"))
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
@@ -36,7 +36,8 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSqlFor(spark, sfDir)
+    val oracle = SparkEntry.oracleSqlFor(spark, sfDir)
+    val json = (if (only.isEmpty) oracle else oracle.filter { case (k, _) => only(k) })
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     graft.queries.SessionCaches.releaseAll(spark)

@@ -33,12 +33,24 @@ object Similarity {
   private def dot(a: Column, b: Column): Column =
     VectorExpressions.dot(a, b)
 
+  /** Exact probe (qv, qn) to candidate (v, nrm) cosine at the oracle's 6dp. */
+  private def cosine: Column =
+    round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6)
+
   /** The corpus with vectors cast to double and the L2 norm precomputed —
     * the common scan every IVF participant starts from.
     */
   private def ivfBase(s: SparkSession, d: String): DataFrame =
     fanOut(embeddings(s, d), s)
       .select(col("vec_id"), asDouble(col("embedding")).as("v"))
+      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
+
+  /** [[ivfBase]] with each vector's `label` riding along — the scan every
+    * filtered-ANN participant starts from.
+    */
+  private def labeledBase(s: SparkSession, d: String): DataFrame =
+    fanOut(embeddings(s, d), s)
+      .select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
       .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
 
   /** The raw covariance moments (i, j, Σxy, Σx, Σy, n) over the upper
@@ -802,12 +814,10 @@ object Similarity {
       .filter(col("crank") <= 2)
       .select(col("vec_id").as("q_id"), col("v").as("qv"),
         col("nrm").as("qn"), col("c_id"))
-    val cos = round(
-      dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6)
     val wTop = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("vec_id"))
     assigned.join(broadcast(probes), Seq("c_id"))
       .filter(col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id"), cos.as("cos"))
+      .select(col("q_id"), col("vec_id"), cosine.as("cos"))
       .withColumn("rank", row_number().over(wTop))
       .filter(col("rank") <= 5)
   }
@@ -821,9 +831,7 @@ object Similarity {
     * identical index.
     */
   private def ivfLabeledFrames(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val base = fanOut(embeddings(s, d), s)
-      .select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
-      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
+    val base = labeledBase(s, d)
     val cents = base.filter(col("vec_id") < 16)
       .select(col("vec_id").as("c_id"), col("v").as("cv"), col("nrm").as("cn"))
     val csim = round(dot(col("v"), col("cv")) / (col("nrm") * col("cn")), 6)
@@ -849,21 +857,32 @@ object Similarity {
     * (q_id, tgt, vec_id, cos, rank ≤ 5).
     */
   private def filteredExact(s: SparkSession, d: String): DataFrame = {
-    val base = fanOut(embeddings(s, d), s)
-      .select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
-      .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
-    val p1 = base.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("label").as("tgt"),
-        col("v").as("qv"), col("nrm").as("qn"))
-    val cos = round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6)
+    val base = labeledBase(s, d)
+    val p1 = walkProbes(base, col("label").as("tgt"))
     val wTop = Window.partitionBy(col("q_id"))
       .orderBy(col("cos").desc, col("vec_id"))
     base.join(broadcast(p1))
       .filter(col("vec_id") =!= col("q_id") && col("label") === col("tgt"))
-      .select(col("q_id"), col("tgt"), col("vec_id"), cos.as("cos"))
+      .select(col("q_id"), col("tgt"), col("vec_id"), cosine.as("cos"))
       .withColumn("rank", row_number().over(wTop))
       .filter(col("rank") <= 5)
   }
+
+  /** Per-probe recall of each filtered-ANN leg against [[filteredExact]]:
+    * (q_id, target_label, n_exact, <leg>_hits…, <leg>_recall…), where leg
+    * `name` is a (q_id, vec_id, <name>_hit) frame of its top-5.
+    */
+  private def filteredLegRecalls(s: SparkSession, d: String,
+      legs: (String, DataFrame)*): DataFrame =
+    legs.foldLeft(filteredExact(s, d)) { case (t, (_, leg)) =>
+        t.join(leg, Seq("q_id", "vec_id"), "left") }
+      .groupBy(col("q_id"), col("tgt"))
+      .agg(count(lit(1)).as("n_exact"), legs.map { case (n, _) =>
+        sum(coalesce(col(s"${n}_hit"), lit(0))).as(s"${n}_hits") }: _*)
+      .select(Seq(col("q_id"), col("tgt").as("target_label"), col("n_exact")) ++
+        legs.map { case (n, _) => col(s"${n}_hits") } ++
+        legs.map { case (n, _) =>
+          round(col(s"${n}_hits") / col("n_exact"), 6).as(s"${n}_recall") }: _*)
 
   /** (vec_id, sub, wd, xu) — every vector's coordinates in integer
     * micro-units, keyed by PQ subspace (`sub` = dim div 8) and
@@ -1175,26 +1194,12 @@ object Similarity {
     * emitted under `outCol`.
     */
   private def pqRecallAtDepth(s: SparkSession, d: String, adcr: DataFrame,
-      scheme: String, depth: Int, outCol: String): DataFrame = {
-    val wShort = Window.partitionBy(col("q_id")).orderBy(col("adc_u"), col("vec_id"))
-    val shortlist = adcr
-      .withColumn("r", row_number().over(wShort)).filter(col("r") <= depth)
-      .select(col("q_id"), col("vec_id"))
-    val vu = pqVu(s, d)
-    val probes = vu.filter(col("vec_id") < 10)
-      .select(col("vec_id").as("q_id"), col("vu").as("qu"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("d2"), col("vec_id"))
-    val top5 = vu.join(broadcast(shortlist), Seq("vec_id"))
-      .join(broadcast(probes), Seq("q_id"))
-      .select(col("q_id"), col("vec_id"),
-        graft.expressions.VectorExpressions.l2sq(col("qu"), col("vu")).as("d2"))
-      .withColumn("rank", row_number().over(w)).filter(col("rank") <= 5)
-      .select(col("q_id"), col("vec_id"))
-    top5.join(pqExactTop5(s, d), Seq("q_id", "vec_id"))
+      scheme: String, depth: Int, outCol: String): DataFrame =
+    ivfpqExactTail(s, d, adcr, depth).select(col("q_id"), col("vec_id"))
+      .join(pqExactTop5(s, d), Seq("q_id", "vec_id"))
       .agg(count(lit(1)).as("n_hits"))
       .select(lit(scheme).as("scheme"),
         round(col("n_hits").cast("double") / 50.0, 6).as(outCol))
-  }
 
   /** Session-scoped cache of the hybrid stack's two RANKED leg tables —
     * (q_id, cand, rank, leg) at depth 50, leg ∈ {dense, lex}. FOUR
@@ -1393,38 +1398,65 @@ object Similarity {
   }
 
   /** The IVF-PQ pipeline downstream of cell scoring: corpus cells by
-    * argmin, nprobe=2 probe cells, candidate equi-join, ADC over the
-    * shared code table restricted to candidates, top-50 shortlist, exact
-    * integer-L2 re-rank to top-5. Shared by the fixture-cell and
-    * trained-cell variants.
+    * argmin, nprobe=2 candidate ADC over the shared code table, top-50
+    * shortlist, exact integer-L2 re-rank to top-5. Shared by the
+    * fixture-cell and trained-cell variants.
     */
   private def ivfpqFrom(s: SparkSession, d: String, scores: DataFrame,
-      cells: DataFrame): DataFrame = {
-    val wCell = Window.partitionBy(col("vec_id")).orderBy(col("d2"), col("c16"))
-    val probeCells = scores.filter(col("vec_id") < 10)
-      .withColumn("r", row_number().over(wCell)).filter(col("r") <= 2)
-      .select(col("vec_id").as("q_id"), col("c16").as("cell"))
-    val cand = cells.join(broadcast(probeCells), Seq("cell"))
+      cells: DataFrame): DataFrame =
+    ivfpqExactTail(s, d, ivfpqAdc(scores, cells, pqCodesShared(s, d), pqLut(s, d)), 50)
+
+  /** Nprobe=2 candidate ADC totals (q_id, vec_id, adc_u): every vector of
+    * `cells` in the probe's 2 nearest coarse cells under `scores` (never
+    * the probe itself), scored over `codes` with the per-probe `lut`.
+    */
+  private def ivfpqAdc(scores: DataFrame, cells: DataFrame, codes: DataFrame,
+      lut: DataFrame): DataFrame =
+    cells.join(broadcast(probeCellsOf(scores, 2)), Seq("cell"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"))
-    val adcr = cand
-      .join(pqCodesShared(s, d), Seq("vec_id"))
-      .join(broadcast(pqLut(s, d)), Seq("q_id", "sub", "c_id"))
+      .join(codes, Seq("vec_id"))
+      .join(broadcast(lut), Seq("q_id", "sub", "c_id"))
       .groupBy(col("q_id"), col("vec_id"))
       .agg(sum(col("d2")).as("adc_u"))
-    ivfpqExactTail(s, d, adcr)
+
+  /** Each probe's `nprobe` nearest coarse cells (q_id, cell, pr) under
+    * cell `scores` (vec_id, c16, d2), `pr` the cell's probe rank — the
+    * ≤10·nprobe-row broadcast every IVF-PQ probe starts from.
+    */
+  private def probeCellsOf(scores: DataFrame, nprobe: Int): DataFrame = {
+    val wCell = Window.partitionBy(col("vec_id")).orderBy(col("d2"), col("c16"))
+    scores.filter(col("vec_id") < 10)
+      .withColumn("pr", row_number().over(wCell)).filter(col("pr") <= nprobe)
+      .select(col("vec_id").as("q_id"), col("c16").as("cell"), col("pr"))
+  }
+
+  /** The nprobe-sweep candidates (q_id, vec_id, adc_u, np): every
+    * candidate of a probe's 8 nearest cells is tagged ONCE with the probe
+    * rank `pr` of the cell that admits it (a vector lives in exactly one
+    * cell), ADC-scored once, and exploded to each nprobe ∈ {1, 2, 4, 8}
+    * with np ≥ pr — never one corpus scan per nprobe. Shared by
+    * sim_ivfpq_probe_sweep and sim_ivfpq_grid.
+    */
+  private def ivfpqSweptCandidates(s: SparkSession, d: String): DataFrame = {
+    val scores = ivfpqCellScores(s, d)
+    val cells = ivfpqCellsShared(s, d)
+    val cand = cells.join(broadcast(probeCellsOf(scores, 8)), Seq("cell"))
+      .filter(col("vec_id") =!= col("q_id"))
+      .select(col("q_id"), col("vec_id"), col("pr"))
+    val adcr = cand.join(pqCodesShared(s, d), Seq("vec_id"))
+      .join(broadcast(pqLut(s, d)), Seq("q_id", "sub", "c_id"))
+      .groupBy(col("q_id"), col("vec_id"), col("pr"))
+      .agg(sum(col("d2")).as("adc_u"))
+    adcr.select(col("q_id"), col("vec_id"), col("adc_u"),
+      explode(expr("filter(array(1, 2, 4, 8), v -> v >= pr)")).as("np"))
   }
 
   /** Nprobe=2 probe cells against the FIXTURE coarse quantizer
-    * (q_id, cell) — the ≤20-row broadcast every fixture-cell IVF-PQ
-    * probe starts from, exposed for the streamed serving variants.
+    * (q_id, cell), exposed for the streamed serving variants.
     */
-  private[graft] def ivfpqProbeCells(s: SparkSession, d: String): DataFrame = {
-    val wCell = Window.partitionBy(col("vec_id")).orderBy(col("d2"), col("c16"))
-    ivfpqCellScores(s, d).filter(col("vec_id") < 10)
-      .withColumn("r", row_number().over(wCell)).filter(col("r") <= 2)
-      .select(col("vec_id").as("q_id"), col("c16").as("cell"))
-  }
+  private[graft] def ivfpqProbeCells(s: SparkSession, d: String): DataFrame =
+    probeCellsOf(ivfpqCellScores(s, d), 2).drop("pr")
 
   /** The ~10% salted-md5 forget set of the index-erasure pair — shared
     * verbatim with the DuckDB oracle (the knnBatchSql convention), so
@@ -1509,16 +1541,19 @@ object Similarity {
     nf
   }
 
-  /** The IVF-PQ pipeline's exact tail downstream of the per-(probe,
-    * candidate) ADC totals: top-50 shortlist, exact integer-L2 re-rank,
-    * top-5 with 6dp distances. Shared by [[ivfpqFrom]] and the streamed
-    * compacted-layout probe (whose ADC stage runs in-stream).
+  /** The PQ pipelines' exact tail downstream of the per-(probe,
+    * candidate) ADC totals (q_id, vec_id, adc_u): top-`depth` shortlist,
+    * exact integer-L2 re-rank, top-5 (q_id, vec_id, exact_d2, rank) with
+    * 6dp distances. Every ADC shortlist → re-rank path runs it: the IVF-PQ
+    * variants and the streamed compacted-layout probe (depth 50), the
+    * whole-corpus re-rank ([[RerankShortlist]]) and the shrunk-shortlist
+    * audits ([[pqRecallAtDepth]]).
     */
   private[graft] def ivfpqExactTail(
-      s: SparkSession, d: String, adcr: DataFrame): DataFrame = {
+      s: SparkSession, d: String, adcr: DataFrame, depth: Int): DataFrame = {
     val wShort = Window.partitionBy(col("q_id")).orderBy(col("adc_u"), col("vec_id"))
     val shortlist = adcr
-      .withColumn("r", row_number().over(wShort)).filter(col("r") <= 50)
+      .withColumn("r", row_number().over(wShort)).filter(col("r") <= depth)
       .select(col("q_id"), col("vec_id"))
     val vu = pqVu(s, d)
     val probes = vu.filter(col("vec_id") < 10)
@@ -1727,6 +1762,17 @@ object Similarity {
       rows += ((8, null, residual))
       rows.toSeq
     })
+
+  /** Per-probe recall audit (q_id, n_hits, recall) of an approximate
+    * top-5 (q_id, vec_id, …) against its `truth` top-5 (q_id, vec_id):
+    * truth ⟕ approx, hits counted per probe, recall = hits / 5.
+    */
+  private def recallAt5(approx: DataFrame, truth: DataFrame): DataFrame =
+    truth.join(approx.select(col("q_id"), col("vec_id"), lit(1).as("hit")),
+        Seq("q_id", "vec_id"), "left")
+      .groupBy(col("q_id"))
+      .agg(sum(coalesce(col("hit"), lit(0))).as("n_hits"))
+      .select(col("q_id"), col("n_hits"), round(col("n_hits") / 5.0, 6).as("recall"))
 
   /** Exact integer-L2² top-5 per probe — the declared brute-force baseline
     * both PQ recall audits compare against.
@@ -2298,13 +2344,7 @@ object Similarity {
     "sim_ivf_recall" -> ((s, d) => {
       val exact = queries("sim_cosine_topk")(s, d)
         .select(col("q_id"), col("vec_id"))
-      val approx = queries("sim_ivf_topk")(s, d)
-        .select(col("q_id"), col("vec_id"), lit(1).as("hit"))
-      exact.join(approx, Seq("q_id", "vec_id"), "left")
-        .groupBy(col("q_id"))
-        .agg(sum(coalesce(col("hit"), lit(0))).as("n_hits"))
-        .select(col("q_id"), col("n_hits"),
-          round(col("n_hits") / 5.0, 6).as("recall"))
+      recallAt5(queries("sim_ivf_topk")(s, d), exact)
     }),
 
     // FILTERED ANN — predicate + vector search in ONE query, the serving
@@ -2322,13 +2362,12 @@ object Similarity {
     // broadcast-probe brute-force baseline class (PlanSpec allowlist).
     "sim_ivf_filtered" -> ((s, d) => {
       val (assigned, probes) = ivfLabeledFrames(s, d)
-      val cos = round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6)
       val wTop = Window.partitionBy(col("q_id"))
         .orderBy(col("cos").desc, col("vec_id"))
       // IVF leg: predicate INSIDE the probed cells, before the top-k
       val ivf = assigned.join(broadcast(probes), Seq("c_id"))
         .filter(col("vec_id") =!= col("q_id") && col("label") === col("tgt"))
-        .select(col("q_id"), col("vec_id"), cos.as("cos"))
+        .select(col("q_id"), col("vec_id"), cosine.as("cos"))
         .withColumn("rank", row_number().over(wTop))
         .filter(col("rank") <= 5)
         .select(col("q_id"), col("vec_id"), lit(1).as("hit"))
@@ -2353,33 +2392,22 @@ object Similarity {
     // the results" in an ANN design review.
     "sim_ivf_filtered_sweep" -> ((s, d) => {
       val (assigned, probes) = ivfLabeledFrames(s, d)
-      val cos = round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6)
       val wTop = Window.partitionBy(col("q_id"))
         .orderBy(col("cos").desc, col("vec_id"))
       val cands = assigned.join(broadcast(probes), Seq("c_id"))
         .filter(col("vec_id") =!= col("q_id"))
       // pre-filter: predicate BEFORE the top-5 (the right way)
       val pre = cands.filter(col("label") === col("tgt"))
-        .select(col("q_id"), col("vec_id"), cos.as("cos"))
+        .select(col("q_id"), col("vec_id"), cosine.as("cos"))
         .withColumn("rank", row_number().over(wTop)).filter(col("rank") <= 5)
         .select(col("q_id"), col("vec_id"), lit(1).as("pre_hit"))
       // post-filter: unfiltered top-5, THEN the predicate (the naive way)
       val post = cands
-        .select(col("q_id"), col("tgt"), col("label"), col("vec_id"), cos.as("cos"))
+        .select(col("q_id"), col("tgt"), col("label"), col("vec_id"), cosine.as("cos"))
         .withColumn("rank", row_number().over(wTop)).filter(col("rank") <= 5)
         .filter(col("label") === col("tgt"))
         .select(col("q_id"), col("vec_id"), lit(1).as("post_hit"))
-      filteredExact(s, d)
-        .join(pre, Seq("q_id", "vec_id"), "left")
-        .join(post, Seq("q_id", "vec_id"), "left")
-        .groupBy(col("q_id"), col("tgt"))
-        .agg(count(lit(1)).as("n_exact"),
-          sum(coalesce(col("pre_hit"), lit(0))).as("pre_hits"),
-          sum(coalesce(col("post_hit"), lit(0))).as("post_hits"))
-        .select(col("q_id"), col("tgt").as("target_label"), col("n_exact"),
-          col("pre_hits"), col("post_hits"),
-          round(col("pre_hits") / col("n_exact"), 6).as("pre_recall"),
-          round(col("post_hits") / col("n_exact"), 6).as("post_recall"))
+      filteredLegRecalls(s, d, "pre" -> pre, "post" -> post)
     }),
 
     // Product quantization + asymmetric distance (the Jégou et al. PQ
@@ -2424,25 +2452,8 @@ object Similarity {
     // the same exact integer L2² arithmetic as sim_pq_recall's baseline.
     // sim_pq_rerank_recall audits the end-to-end recall the way
     // sim_ivf_recall audits IVF.
-    "sim_pq_rerank" -> ((s, d) => {
-      val wShort = Window.partitionBy(col("q_id")).orderBy(col("adc_u"), col("vec_id"))
-      val shortlist = adcScores(s, d)
-        .withColumn("srank", row_number().over(wShort))
-        .filter(col("srank") <= RerankShortlist)
-        .select(col("q_id"), col("vec_id"))
-      val vu = pqVu(s, d)
-      val probes = vu.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("vu").as("qu"))
-      val w = Window.partitionBy(col("q_id")).orderBy(col("d2"), col("vec_id"))
-      vu.join(broadcast(shortlist), Seq("vec_id"))
-        .join(broadcast(probes), Seq("q_id"))
-        .select(col("q_id"), col("vec_id"),
-          graft.expressions.VectorExpressions.l2sq(col("qu"), col("vu")).as("d2"))
-        .withColumn("rank", row_number().over(w)).filter(col("rank") <= 5)
-        .select(col("q_id"), col("vec_id"),
-          round(col("d2").cast("double") / 1000000000000.0, 6).as("exact_d2"),
-          col("rank"))
-    }),
+    "sim_pq_rerank" -> ((s, d) =>
+      ivfpqExactTail(s, d, adcScores(s, d), RerankShortlist)),
 
     // Recall audit of the two-stage path: re-ranked top-5 vs the exact
     // top-5 — the promotion gate that justifies replacing brute force with
@@ -2450,15 +2461,8 @@ object Similarity {
     // recall 1.0 per probe (pinned in WideOpsSpec); a shortlist the exact
     // top-5 escapes would show up here, not in a silent quality regression
     // downstream.
-    "sim_pq_rerank_recall" -> ((s, d) => {
-      val approx = queries("sim_pq_rerank")(s, d)
-        .select(col("q_id"), col("vec_id"), lit(1).as("hit"))
-      pqExactTop5(s, d).join(approx, Seq("q_id", "vec_id"), "left")
-        .groupBy(col("q_id"))
-        .agg(sum(coalesce(col("hit"), lit(0))).as("n_hits"))
-        .select(col("q_id"), col("n_hits"),
-          round(col("n_hits") / 5.0, 6).as("recall"))
-    }),
+    "sim_pq_rerank_recall" -> ((s, d) =>
+      recallAt5(queries("sim_pq_rerank")(s, d), pqExactTop5(s, d))),
 
     // SCALAR (SQ8) quantization recall — the 4×-compression rung of the
     // quantization ladder (float32 2048 bits → SQ8 512 → PQ 64 → binary
@@ -2566,15 +2570,8 @@ object Similarity {
     // sim_pq_rerank_recall (1.0, no cell filter) to read the cell-miss
     // cost, and with sim_pq_recall (~0.32, no re-rank) to read what the
     // exact re-rank recovers.
-    "sim_ivfpq_recall" -> ((s, d) => {
-      val approx = queries("sim_ivfpq_topk")(s, d)
-        .select(col("q_id"), col("vec_id"), lit(1).as("hit"))
-      pqExactTop5(s, d).join(approx, Seq("q_id", "vec_id"), "left")
-        .groupBy(col("q_id"))
-        .agg(sum(coalesce(col("hit"), lit(0))).as("n_hits"))
-        .select(col("q_id"), col("n_hits"),
-          round(col("n_hits") / 5.0, 6).as("recall"))
-    }),
+    "sim_ivfpq_recall" -> ((s, d) =>
+      recallAt5(queries("sim_ivfpq_topk")(s, d), pqExactTop5(s, d))),
 
     // The nprobe TUNING CURVE for IVF-PQ: recall@5 and scanned fraction at
     // nprobe ∈ {1, 2, 4, 8} against the exact baseline — the recall/cost
@@ -2597,21 +2594,7 @@ object Similarity {
     // cell-coverage knee the binding constraint is shortlist depth, not
     // cell coverage — tune nprobe and the shortlist together.
     "sim_ivfpq_probe_sweep" -> ((s, d) => {
-      val scores = ivfpqCellScores(s, d)
-      val wCell = Window.partitionBy(col("vec_id")).orderBy(col("d2"), col("c16"))
-      val cells = ivfpqCellsShared(s, d)
-      val probeCells8 = scores.filter(col("vec_id") < 10)
-        .withColumn("pr", row_number().over(wCell)).filter(col("pr") <= 8)
-        .select(col("vec_id").as("q_id"), col("c16").as("cell"), col("pr"))
-      val cand = cells.join(broadcast(probeCells8), Seq("cell"))
-        .filter(col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("vec_id"), col("pr"))
-      val adcr = cand.join(pqCodesShared(s, d), Seq("vec_id"))
-        .join(broadcast(pqLut(s, d)), Seq("q_id", "sub", "c_id"))
-        .groupBy(col("q_id"), col("vec_id"), col("pr"))
-        .agg(sum(col("d2")).as("adc_u"))
-      val swept = adcr.select(col("q_id"), col("vec_id"), col("adc_u"),
-        explode(expr("filter(array(1, 2, 4, 8), v -> v >= pr)")).as("np"))
+      val swept = ivfpqSweptCandidates(s, d)
       val wShort = Window.partitionBy(col("np"), col("q_id"))
         .orderBy(col("adc_u"), col("vec_id"))
       val shortlist = swept
@@ -2656,21 +2639,7 @@ object Similarity {
     // then joined back under every (np, depth) leg — never 16 corpus scans,
     // and the same pair is never re-ranked twice.
     "sim_ivfpq_grid" -> ((s, d) => {
-      val scores = ivfpqCellScores(s, d)
-      val wCell = Window.partitionBy(col("vec_id")).orderBy(col("d2"), col("c16"))
-      val cells = ivfpqCellsShared(s, d)
-      val probeCells8 = scores.filter(col("vec_id") < 10)
-        .withColumn("pr", row_number().over(wCell)).filter(col("pr") <= 8)
-        .select(col("vec_id").as("q_id"), col("c16").as("cell"), col("pr"))
-      val cand = cells.join(broadcast(probeCells8), Seq("cell"))
-        .filter(col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("vec_id"), col("pr"))
-      val adcr = cand.join(pqCodesShared(s, d), Seq("vec_id"))
-        .join(broadcast(pqLut(s, d)), Seq("q_id", "sub", "c_id"))
-        .groupBy(col("q_id"), col("vec_id"), col("pr"))
-        .agg(sum(col("d2")).as("adc_u"))
-      val swept = adcr.select(col("q_id"), col("vec_id"), col("adc_u"),
-        explode(expr("filter(array(1, 2, 4, 8), v -> v >= pr)")).as("np"))
+      val swept = ivfpqSweptCandidates(s, d)
       val wShort = Window.partitionBy(col("np"), col("q_id"))
         .orderBy(col("adc_u"), col("vec_id"))
       val ranked = swept
@@ -2711,38 +2680,14 @@ object Similarity {
     // dimension, and the pipeline downstream (50-shortlist → exact
     // re-rank) is identical to sim_ivfpq_topk's, so the two are directly
     // comparable at equal bytes per vector.
-    "sim_ivfpq_residual" -> ((s, d) => {
-      val adcr = ivfpqResidualAdc(s, d)
-      val wShort = Window.partitionBy(col("q_id")).orderBy(col("adc_u"), col("vec_id"))
-      val shortlist = adcr
-        .withColumn("r", row_number().over(wShort)).filter(col("r") <= 50)
-        .select(col("q_id"), col("vec_id"))
-      val vu = pqVu(s, d)
-      val probes = vu.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("vu").as("qu"))
-      val w = Window.partitionBy(col("q_id")).orderBy(col("d2"), col("vec_id"))
-      vu.join(broadcast(shortlist), Seq("vec_id"))
-        .join(broadcast(probes), Seq("q_id"))
-        .select(col("q_id"), col("vec_id"),
-          graft.expressions.VectorExpressions.l2sq(col("qu"), col("vu")).as("d2"))
-        .withColumn("rank", row_number().over(w)).filter(col("rank") <= 5)
-        .select(col("q_id"), col("vec_id"),
-          round(col("d2").cast("double") / 1000000000000.0, 6).as("exact_d2"),
-          col("rank"))
-    }),
+    "sim_ivfpq_residual" -> ((s, d) =>
+      ivfpqExactTail(s, d, ivfpqResidualAdc(s, d), 50)),
 
     // End-to-end recall of the residual variant vs the exact top-5 — read
     // against sim_ivfpq_recall (raw codes, same cells/nprobe/shortlist) to
     // see what residual encoding buys at equal index bytes.
-    "sim_ivfpq_residual_recall" -> ((s, d) => {
-      val approx = queries("sim_ivfpq_residual")(s, d)
-        .select(col("q_id"), col("vec_id"), lit(1).as("hit"))
-      pqExactTop5(s, d).join(approx, Seq("q_id", "vec_id"), "left")
-        .groupBy(col("q_id"))
-        .agg(sum(coalesce(col("hit"), lit(0))).as("n_hits"))
-        .select(col("q_id"), col("n_hits"),
-          round(col("n_hits") / 5.0, 6).as("recall"))
-    }),
+    "sim_ivfpq_residual_recall" -> ((s, d) =>
+      recallAt5(queries("sim_ivfpq_residual")(s, d), pqExactTop5(s, d))),
 
     // Where residual coding actually shows up: at shortlist depth 50 the
     // exact re-rank forgives most code noise (both schemes sit at the
@@ -2761,25 +2706,10 @@ object Similarity {
     // frames come from the already-shared code tables and one extra
     // bounded rank window each.
     "sim_ivfpq_code_gain" -> ((s, d) => {
-      def recallAtDepth10(adcr: DataFrame, scheme: String): DataFrame =
-        ivfpqRecallAtDepth10(s, d, adcr, scheme)
-      val rawAdcr = {
-        val scores = ivfpqCellScores(s, d)
-        val wCell = Window.partitionBy(col("vec_id")).orderBy(col("d2"), col("c16"))
-        val cells = ivfpqCellsShared(s, d)
-        val probeCells = scores.filter(col("vec_id") < 10)
-          .withColumn("r", row_number().over(wCell)).filter(col("r") <= 2)
-          .select(col("vec_id").as("q_id"), col("c16").as("cell"))
-        cells.join(broadcast(probeCells), Seq("cell"))
-          .filter(col("vec_id") =!= col("q_id"))
-          .select(col("q_id"), col("vec_id"))
-          .join(pqCodesShared(s, d), Seq("vec_id"))
-          .join(broadcast(pqLut(s, d)), Seq("q_id", "sub", "c_id"))
-          .groupBy(col("q_id"), col("vec_id"))
-          .agg(sum(col("d2")).as("adc_u"))
-      }
-      recallAtDepth10(rawAdcr, "raw")
-        .unionAll(recallAtDepth10(ivfpqResidualAdc(s, d), "residual"))
+      val rawAdcr = ivfpqAdc(ivfpqCellScores(s, d), ivfpqCellsShared(s, d),
+        pqCodesShared(s, d), pqLut(s, d))
+      ivfpqRecallAtDepth10(s, d, rawAdcr, "raw")
+        .unionAll(ivfpqRecallAtDepth10(s, d, ivfpqResidualAdc(s, d), "residual"))
     }),
 
     // OPQ-STYLE ROTATION AUDIT (Ge et al. 2013): does rotating the corpus
@@ -2910,18 +2840,9 @@ object Similarity {
     // re-rank top-5 → recall vs exact top-5.
     "sim_opq_ivfpq_gain" -> ((s, d) => {
       val scores = ivfpqCellScores(s, d)
-      val wCell = Window.partitionBy(col("vec_id")).orderBy(col("d2"), col("c16"))
-      val probeCells = scores.filter(col("vec_id") < 10)
-        .withColumn("r", row_number().over(wCell)).filter(col("r") <= 2)
-        .select(col("vec_id").as("q_id"), col("c16").as("cell"))
-      val cand = ivfpqCellsShared(s, d).join(broadcast(probeCells), Seq("cell"))
-        .filter(col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("vec_id"))
+      val cells = ivfpqCellsShared(s, d)
       def adcOver(codes: DataFrame, lut: DataFrame): DataFrame =
-        cand.join(codes, Seq("vec_id"))
-          .join(broadcast(lut), Seq("q_id", "sub", "c_id"))
-          .groupBy(col("q_id"), col("vec_id"))
-          .agg(sum(col("d2")).as("adc_u"))
+        ivfpqAdc(scores, cells, codes, lut)
       ivfpqRecallAtDepth10(s, d, adcOver(pqCodesShared(s, d), pqLut(s, d)), "raw")
         .unionAll(
           ivfpqRecallAtDepth10(s, d, adcOver(opqCodesShared(s, d), opqLut(s, d)), "opq"))
@@ -3158,15 +3079,8 @@ object Similarity {
     // recall measures quantization loss alone, never float noise. The
     // production promotion decision ("are 8-byte codes good enough?")
     // reads exactly this table.
-    "sim_pq_recall" -> ((s, d) => {
-      val approx = queries("sim_pq_adc")(s, d)
-        .select(col("q_id"), col("vec_id"), lit(1).as("hit"))
-      pqExactTop5(s, d).join(approx, Seq("q_id", "vec_id"), "left")
-        .groupBy(col("q_id"))
-        .agg(sum(coalesce(col("hit"), lit(0))).as("n_hits"))
-        .select(col("q_id"), col("n_hits"),
-          round(col("n_hits") / 5.0, 6).as("recall"))
-    }),
+    "sim_pq_recall" -> ((s, d) =>
+      recallAt5(queries("sim_pq_adc")(s, d), pqExactTop5(s, d))),
 
     // LSH bucketing: 16 deterministic md5-derived hyperplanes, signature =
     // sign bits. The portable plane rule (see planeMatrix) graduates this
@@ -3493,7 +3407,7 @@ object Similarity {
           .join(broadcast(pqLut(s, d)), Seq("q_id", "sub", "c_id"))
           .groupBy(col("q_id"), col("vec_id"))
           .agg(sum(col("d2")).as("adc_u"))
-        ivfpqExactTail(s, d, adcr).select(col("q_id"), col("vec_id"))
+        ivfpqExactTail(s, d, adcr, 50).select(col("q_id"), col("vec_id"))
       }
       val tomb = top5(cand.filter(!col("dead")).select(col("q_id"), col("vec_id")))
         .groupBy(col("q_id"))
@@ -3747,8 +3661,7 @@ object Similarity {
         .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
       val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("nbr"))
       val exact = vecs.join(broadcast(probes), col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("vec_id").as("nbr"),
-          round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6).as("cos"))
+        .select(col("q_id"), col("vec_id").as("nbr"), cosine.as("cos"))
         .withColumn("r", row_number().over(w)).filter(col("r") <= KnnK)
         .select(col("q_id"), col("nbr"))
       val perIter = g.groupBy(col("iter")).agg(count(lit(1)).as("n_edges"))
@@ -3900,44 +3813,16 @@ object Similarity {
       val vecs = ivfBase(s, d)
       val g = knnFinalGraphShared(s, d)
         .select(col("vec_id"), col("nbr"))
-      // bounded-frame conf scope (the sim_knn_graph_entry discipline):
-      // per-hop frames are <= probes x beam x K rows at ANY corpus size,
-      // so their plans compile with AQE off + a fixed small partition
-      // count - no per-stage AQE jobs, no re-optimization of 10^2-row
-      // exchanges; shared parents above still build at session settings
+      // bounded-frame conf scope: per-hop frames are <= probes x beam x K
+      // rows at ANY corpus size, so their plans compile with AQE off + a
+      // fixed small partition count - no per-stage AQE jobs, no
+      // re-optimization of 10^2-row exchanges; shared parents above still
+      // build at session settings
       graft.tables.Tables.withShufflePartitions(s, 4)(
         graft.tables.Tables.withAqeOff(s) {
-      val probes = vecs.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-      def score(cand: DataFrame): DataFrame =
-        cand
-          .join(vecs.select(col("vec_id").as("cand"), col("v"), col("nrm")), Seq("cand"))
-          .join(broadcast(probes), Seq("q_id"))
-          .select(col("q_id"), col("cand"),
-            round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6).as("cos"))
-      val wB = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("cand"))
-      var beam = probes.select(col("q_id"), col("q_id").as("cand"))
-      var visited: DataFrame = null
-      for (_ <- 1 to 3) {
-        val expand = beam
-          .join(g.select(col("vec_id").as("cand"), col("nbr")), Seq("cand"))
-          .select(col("q_id"), col("nbr").as("cand"))
-          .filter(col("cand") =!= col("q_id"))
-          .distinct()
-        val scored = score(expand)
-        // per-round lineage truncation (the bfsFrom discipline): beam_t
-        // references visited_t and expand_{t+1} references beam_t, so an
-        // untruncated visited doubles its plan every round (2^rounds
-        // replays of the scoring subplan)
-        visited = SessionCaches.loopCheckpoint(
-          if (visited == null) scored
-          else visited.unionByName(scored).distinct())
-        beam = visited.withColumn("r", row_number().over(wB)).filter(col("r") <= 8)
-          .select(col("q_id"), col("cand"))
-      }
-      visited.withColumn("rank", row_number().over(wB)).filter(col("rank") <= 5)
-        .select(col("q_id"), col("cand").as("vec_id"), col("cos"),
-          col("rank").cast("int").as("rank"))
+      val probes = walkProbes(vecs)
+      servedTop5(beamWalk(probes.select(col("q_id"), col("q_id").as("cand")),
+        adjacencyOf(g), cosineScore(vecs, probes), 8, 3).last)
       })
     }),
 
@@ -3958,52 +3843,21 @@ object Similarity {
     // the result set. Both walks and all three legs replay in the
     // generated CTE oracle, dead ends included.
     "sim_knn_graph_search_filtered" -> ((s, d) => {
-      val base = fanOut(embeddings(s, d), s)
-        .select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
-        .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
+      val base = labeledBase(s, d)
       val g = knnFinalGraphShared(s, d)
         .select(col("vec_id"), col("nbr"))
-      // bounded-frame conf scope - see sim_knn_graph_search
       graft.tables.Tables.withShufflePartitions(s, 4)(
         graft.tables.Tables.withAqeOff(s) {
-      val probes = base.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("label").as("tgt"),
-          col("v").as("qv"), col("nrm").as("qn"))
-      def score(cand: DataFrame): DataFrame =
-        cand
-          .join(base.select(col("vec_id").as("cand"), col("label"),
-            col("v"), col("nrm")), Seq("cand"))
-          .join(broadcast(probes), Seq("q_id"))
-          .select(col("q_id"), col("tgt"), col("cand"), col("label"),
-            round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6).as("cos"))
-      val wB = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("cand"))
-      def walkVisited(filtered: Boolean): DataFrame = {
-        var beam = probes.select(col("q_id"), col("q_id").as("cand"))
-        var visited: DataFrame = null
-        for (_ <- 1 to 3) {
-          val expand = beam
-            .join(g.select(col("vec_id").as("cand"), col("nbr")), Seq("cand"))
-            .select(col("q_id"), col("nbr").as("cand"))
-            .filter(col("cand") =!= col("q_id"))
-            .distinct()
-          val sc = score(expand)
-          val scored =
-            (if (filtered) sc.filter(col("label") === col("tgt")) else sc)
-              .select(col("q_id"), col("cand"), col("cos"))
-          // per-round lineage truncation — see the bfsFrom discipline
-          visited = SessionCaches.loopCheckpoint(
-            if (visited == null) scored
-            else visited.unionByName(scored).distinct())
-          beam = visited.withColumn("r", row_number().over(wB)).filter(col("r") <= 8)
-            .select(col("q_id"), col("cand"))
-        }
-        visited
-      }
+      val probes = walkProbes(base, col("label").as("tgt"))
+      val score = cosineScore(base, probes) _
+      def visited(sc: DataFrame => DataFrame): DataFrame =
+        beamWalk(probes.select(col("q_id"), col("q_id").as("cand")), adjacencyOf(g),
+          sc, 8, 3).last
       def top5(v: DataFrame): DataFrame =
-        v.withColumn("rk", row_number().over(wB)).filter(col("rk") <= 5)
-          .select(col("q_id"), col("cand").as("vec_id"))
-      val visU = walkVisited(filtered = false)
-      val pre = top5(walkVisited(filtered = true)).withColumn("pre_hit", lit(1))
+        walkTop(v, 5).select(col("q_id"), col("cand").as("vec_id"))
+      val visU = visited(score)
+      val pre = top5(visited(c => score(c).filter(col("label") === col("tgt"))))
+        .withColumn("pre_hit", lit(1))
       val post = top5(visU)
         .join(base.select(col("vec_id"), col("label")), Seq("vec_id"))
         .join(broadcast(probes.select(col("q_id"), col("tgt"))), Seq("q_id"))
@@ -4013,26 +3867,8 @@ object Similarity {
       // index: filter the whole visited set (≈ rounds·B·K candidates),
       // THEN take 5 — costs nothing extra at walk time and dodges the
       // top-5 starvation, but still misses what the walk never visited
-      val visLeg = top5(visU
-        .join(base.select(col("vec_id").as("cand"), col("label")), Seq("cand"))
-        .join(broadcast(probes.select(col("q_id"), col("tgt"))), Seq("q_id"))
-        .filter(col("label") === col("tgt"))
-        .select(col("q_id"), col("cand"), col("cos")))
-        .withColumn("vis_hit", lit(1))
-      filteredExact(s, d)
-        .join(pre, Seq("q_id", "vec_id"), "left")
-        .join(visLeg, Seq("q_id", "vec_id"), "left")
-        .join(post, Seq("q_id", "vec_id"), "left")
-        .groupBy(col("q_id"), col("tgt"))
-        .agg(count(lit(1)).as("n_exact"),
-          sum(coalesce(col("pre_hit"), lit(0))).as("pre_hits"),
-          sum(coalesce(col("vis_hit"), lit(0))).as("vis_hits"),
-          sum(coalesce(col("post_hit"), lit(0))).as("post_hits"))
-        .select(col("q_id"), col("tgt").as("target_label"), col("n_exact"),
-          col("pre_hits"), col("vis_hits"), col("post_hits"),
-          round(col("pre_hits") / col("n_exact"), 6).as("pre_recall"),
-          round(col("vis_hits") / col("n_exact"), 6).as("vis_recall"),
-          round(col("post_hits") / col("n_exact"), 6).as("post_recall"))
+      val visLeg = top5(onProbeLabel(visU, base, probes)).withColumn("vis_hit", lit(1))
+      filteredLegRecalls(s, d, "pre" -> pre, "vis" -> visLeg, "post" -> post)
       })
     }),
 
@@ -4090,73 +3926,26 @@ object Similarity {
     // claim, now a measured row per probe against the same shared
     // filtered-exact truth.
     "sim_knn_graph_search_labeled" -> ((s, d) => {
-      val base = fanOut(embeddings(s, d), s)
-        .select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
-        .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
+      val base = labeledBase(s, d)
       val ge = knnFinalGraphShared(s, d)
         .select(col("vec_id"), col("nbr"))
       val gl = knnLabeledGraphShared(s, d)
-      // bounded-frame conf scope - see sim_knn_graph_search
       graft.tables.Tables.withShufflePartitions(s, 4)(
         graft.tables.Tables.withAqeOff(s) {
-      val probes = base.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("label").as("tgt"),
-          col("v").as("qv"), col("nrm").as("qn"))
-      def score(cand: DataFrame): DataFrame =
-        cand
-          .join(base.select(col("vec_id").as("cand"), col("label"),
-            col("v"), col("nrm")), Seq("cand"))
-          .join(broadcast(probes), Seq("q_id"))
-          .select(col("q_id"), col("tgt"), col("cand"), col("label"),
-            round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6).as("cos"))
-      val wB = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("cand"))
-      def walkVisited(g: DataFrame, filtered: Boolean): DataFrame = {
-        var beam = probes.select(col("q_id"), col("q_id").as("cand"))
-        var visited: DataFrame = null
-        for (_ <- 1 to 3) {
-          val expand = beam
-            .join(g.select(col("vec_id").as("cand"), col("nbr")), Seq("cand"))
-            .select(col("q_id"), col("nbr").as("cand"))
-            .filter(col("cand") =!= col("q_id"))
-            .distinct()
-          val sc = score(expand)
-          val scored =
-            (if (filtered) sc.filter(col("label") === col("tgt")) else sc)
-              .select(col("q_id"), col("cand"), col("cos"))
-          // per-round lineage truncation — see the bfsFrom discipline
-          visited = SessionCaches.loopCheckpoint(
-            if (visited == null) scored
-            else visited.unionByName(scored).distinct())
-          beam = visited.withColumn("r", row_number().over(wB)).filter(col("r") <= 8)
-            .select(col("q_id"), col("cand"))
-        }
-        visited
-      }
+      val probes = walkProbes(base, col("label").as("tgt"))
+      val score = cosineScore(base, probes) _
+      val onLabel: DataFrame => DataFrame =
+        c => score(c).filter(col("label") === col("tgt"))
+      def visited(g: DataFrame, sc: DataFrame => DataFrame): DataFrame =
+        beamWalk(probes.select(col("q_id"), col("q_id").as("cand")), adjacencyOf(g),
+          sc, 8, 3).last
       def top5(v: DataFrame): DataFrame =
-        v.withColumn("rk", row_number().over(wB)).filter(col("rk") <= 5)
-          .select(col("q_id"), col("cand").as("vec_id"))
-      val lab = top5(walkVisited(gl, filtered = true)).withColumn("lab_hit", lit(1))
-      val blind = top5(walkVisited(ge, filtered = true)).withColumn("blind_hit", lit(1))
-      val vis = top5(walkVisited(gl, filtered = false)
-        .join(base.select(col("vec_id").as("cand"), col("label")), Seq("cand"))
-        .join(broadcast(probes.select(col("q_id"), col("tgt"))), Seq("q_id"))
-        .filter(col("label") === col("tgt"))
-        .select(col("q_id"), col("cand"), col("cos")))
+        walkTop(v, 5).select(col("q_id"), col("cand").as("vec_id"))
+      val lab = top5(visited(gl, onLabel)).withColumn("lab_hit", lit(1))
+      val blind = top5(visited(ge, onLabel)).withColumn("blind_hit", lit(1))
+      val vis = top5(onProbeLabel(visited(gl, score), base, probes))
         .withColumn("vis_hit", lit(1))
-      filteredExact(s, d)
-        .join(lab, Seq("q_id", "vec_id"), "left")
-        .join(blind, Seq("q_id", "vec_id"), "left")
-        .join(vis, Seq("q_id", "vec_id"), "left")
-        .groupBy(col("q_id"), col("tgt"))
-        .agg(count(lit(1)).as("n_exact"),
-          sum(coalesce(col("lab_hit"), lit(0))).as("lab_hits"),
-          sum(coalesce(col("blind_hit"), lit(0))).as("blind_hits"),
-          sum(coalesce(col("vis_hit"), lit(0))).as("vis_hits"))
-        .select(col("q_id"), col("tgt").as("target_label"), col("n_exact"),
-          col("lab_hits"), col("blind_hits"), col("vis_hits"),
-          round(col("lab_hits") / col("n_exact"), 6).as("lab_recall"),
-          round(col("blind_hits") / col("n_exact"), 6).as("blind_recall"),
-          round(col("vis_hits") / col("n_exact"), 6).as("vis_recall"))
+      filteredLegRecalls(s, d, "lab" -> lab, "blind" -> blind, "vis" -> vis)
       })
     }),
 
@@ -4197,65 +3986,24 @@ object Similarity {
         .select(col("vec_id"), col("nbr"))
       graft.tables.Tables.withShufflePartitions(s, 4)(
         graft.tables.Tables.withAqeOff(s) {
-      val probes = vecs.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-      // the sampled upper layer: ~1/8 of the corpus by salted md5 — the
-      // same standardized sampling rule as the init blocks
-      val l1 = vecs.filter(
-        conv(substring(md5(concat(lit("hl"), col("vec_id").cast("string"))), 1, 15),
-          16, 10).cast("long") % 8L === 0L)
-      def score(cand: DataFrame): DataFrame =
-        cand
-          .join(vecs.select(col("vec_id").as("cand"), col("v"), col("nrm")), Seq("cand"))
-          .join(broadcast(probes), Seq("q_id"))
-          .select(col("q_id"), col("cand"),
-            round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6).as("cos"))
-      val wB = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("cand"))
+      val probes = walkProbes(vecs)
+      val l1 = upperLayer(vecs)
       // per-probe hier entry: argmax cosine over the layer only (never
       // the probe's own node — an external query wouldn't be in L1)
-      val hier = l1.select(col("vec_id").as("cand"), col("v"), col("nrm"))
-        .join(broadcast(probes), col("cand") =!= col("q_id"))
-        .select(col("q_id"), col("cand"),
-          round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6).as("cos"))
-        .withColumn("r", row_number().over(wB)).filter(col("r") === 1)
-        .select(col("q_id"), col("cand"))
+      val hier = exactCosineTop(l1, probes, 1)
       // the one global entry: the layer's smallest id — deterministic,
       // zero per-query work (bounded 1-row frame, broadcast to probes)
       val fx = l1.agg(min(col("vec_id")).as("fixed_entry"))
-      def walk(entry: DataFrame): DataFrame = {
-        var beam = entry
-        var visited: DataFrame = null
-        for (_ <- 1 to 3) {
-          val expand = beam
-            .join(g.select(col("vec_id").as("cand"), col("nbr")), Seq("cand"))
-            .select(col("q_id"), col("nbr").as("cand"))
-            .filter(col("cand") =!= col("q_id"))
-            .distinct()
-          val scored = score(expand)
-          // per-round lineage truncation — see the bfsFrom discipline
-          visited = SessionCaches.loopCheckpoint(
-            if (visited == null) scored
-            else visited.unionByName(scored).distinct())
-          beam = visited.withColumn("r", row_number().over(wB)).filter(col("r") <= 8)
-            .select(col("q_id"), col("cand"))
-        }
-        visited
-      }
-      def top5(v: DataFrame): DataFrame =
-        v.withColumn("rk", row_number().over(wB)).filter(col("rk") <= 5)
+      def walk(entry: DataFrame): DataFrame =
+        walkTop(beamWalk(entry, adjacencyOf(g), cosineScore(vecs, probes), 8, 3).last, 5)
           .select(col("q_id"), col("cand").as("vec_id"))
-      val se = top5(walk(probes.select(col("q_id"), col("q_id").as("cand"))))
+      val se = walk(probes.select(col("q_id"), col("q_id").as("cand")))
         .withColumn("self_hit", lit(1))
-      val fxw = top5(walk(probes.select(col("q_id"))
-        .crossJoin(broadcast(fx)).select(col("q_id"), col("fixed_entry").as("cand"))))
+      val fxw = walk(probes.select(col("q_id"))
+        .crossJoin(broadcast(fx)).select(col("q_id"), col("fixed_entry").as("cand")))
         .withColumn("fixed_hit", lit(1))
-      val hrw = top5(walk(hier)).withColumn("hier_hit", lit(1))
-      val exact = vecs.join(broadcast(probes), col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("vec_id").as("cand"),
-          round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6).as("cos"))
-        .withColumn("r", row_number().over(wB)).filter(col("r") <= 5)
-        .select(col("q_id"), col("cand").as("vec_id"))
-      exact
+      val hrw = walk(hier).withColumn("hier_hit", lit(1))
+      exactCosineTop(vecs, probes, 5).withColumnRenamed("cand", "vec_id")
         .join(se, Seq("q_id", "vec_id"), "left")
         .join(fxw, Seq("q_id", "vec_id"), "left")
         .join(hrw, Seq("q_id", "vec_id"), "left")
@@ -4287,47 +4035,19 @@ object Similarity {
       val vecs = ivfBase(s, d)
       val g = knnFinalGraphShared(s, d)
         .select(col("vec_id"), col("nbr"))
-      // bounded-frame conf scope - see sim_knn_graph_search
       graft.tables.Tables.withShufflePartitions(s, 4)(
         graft.tables.Tables.withAqeOff(s) {
-      val probes = vecs.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-      def score(cand: DataFrame): DataFrame =
-        cand
-          .join(vecs.select(col("vec_id").as("cand"), col("v"), col("nrm")), Seq("cand"))
-          .join(broadcast(probes), Seq("q_id"))
-          .select(col("q_id"), col("cand"),
-            round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6).as("cos"))
-      val wB = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("cand"))
-      val exact = vecs.join(broadcast(probes), col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("vec_id").as("cand"),
-          round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6).as("cos"))
-        .withColumn("r", row_number().over(wB)).filter(col("r") <= 5)
-        .select(col("q_id"), col("cand"))
-      val cells = for (b <- Seq(4, 8, 16)) yield {
-        var beam = probes.select(col("q_id"), col("q_id").as("cand"))
-        var visited: DataFrame = null
-        (1 to 3).map { r =>
-          val expand = beam
-            .join(g.select(col("vec_id").as("cand"), col("nbr")), Seq("cand"))
-            .select(col("q_id"), col("nbr").as("cand"))
-            .filter(col("cand") =!= col("q_id"))
-            .distinct()
-          val scored = score(expand)
-          // per-round lineage truncation — see the bfsFrom discipline
-          visited = SessionCaches.loopCheckpoint(
-            if (visited == null) scored
-            else visited.unionByName(scored).distinct())
-          beam = visited.withColumn("r", row_number().over(wB)).filter(col("r") <= b)
-            .select(col("q_id"), col("cand"))
-          visited.withColumn("r", row_number().over(wB)).filter(col("r") <= 5)
-            .select(col("q_id"), col("cand"))
+      val probes = walkProbes(vecs)
+      val exact = exactCosineTop(vecs, probes, 5)
+      val cells = for (b <- Seq(4, 8, 16)) yield
+        beamWalk(probes.select(col("q_id"), col("q_id").as("cand")), adjacencyOf(g),
+          cosineScore(vecs, probes), b, 3).zipWithIndex.map { case (visited, i) =>
+          walkTop(visited, 5).select(col("q_id"), col("cand"))
             .join(exact, Seq("q_id", "cand"))
             .agg(count(lit(1)).as("n_hits"))
-            .select(lit(b).cast("int").as("beam"), lit(r).cast("int").as("rounds"),
+            .select(lit(b).cast("int").as("beam"), lit(i + 1).cast("int").as("rounds"),
               col("n_hits"), round(col("n_hits") / 50.0, 6).as("recall_at_5"))
         }
-      }
       cells.flatten.reduce(_ unionByName _)
       })
     }),
@@ -4354,40 +4074,12 @@ object Similarity {
       // control moved the other way) - the two-graph comparison's readout
       // joins benefit from AQE's runtime sizing here. Left at session
       // settings deliberately.
-      val probes = vecs.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-      def score(cand: DataFrame): DataFrame =
-        cand
-          .join(vecs.select(col("vec_id").as("cand"), col("v"), col("nrm")), Seq("cand"))
-          .join(broadcast(probes), Seq("q_id"))
-          .select(col("q_id"), col("cand"),
-            round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6).as("cos"))
-      val wB = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("cand"))
-      def walkTop5(g: DataFrame): DataFrame = {
-        var beam = probes.select(col("q_id"), col("q_id").as("cand"))
-        var visited: DataFrame = null
-        for (_ <- 1 to 3) {
-          val expand = beam
-            .join(g.select(col("vec_id").as("cand"), col("nbr")), Seq("cand"))
-            .select(col("q_id"), col("nbr").as("cand"))
-            .filter(col("cand") =!= col("q_id"))
-            .distinct()
-          val scored = score(expand)
-          // per-round lineage truncation — see the bfsFrom discipline
-          visited = SessionCaches.loopCheckpoint(
-            if (visited == null) scored
-            else visited.unionByName(scored).distinct())
-          beam = visited.withColumn("r", row_number().over(wB)).filter(col("r") <= 8)
-            .select(col("q_id"), col("cand"))
-        }
-        visited.withColumn("r", row_number().over(wB)).filter(col("r") <= 5)
+      val probes = walkProbes(vecs)
+      def walkTop5(g: DataFrame): DataFrame =
+        walkTop(beamWalk(probes.select(col("q_id"), col("q_id").as("cand")),
+          adjacencyOf(g), cosineScore(vecs, probes), 8, 3).last, 5)
           .select(col("q_id"), col("cand"))
-      }
-      val exact = vecs.join(broadcast(probes), col("vec_id") =!= col("q_id"))
-        .select(col("q_id"), col("vec_id").as("cand"),
-          round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6).as("cos"))
-        .withColumn("r", row_number().over(wB)).filter(col("r") <= 5)
-        .select(col("q_id"), col("cand"))
+      val exact = exactCosineTop(vecs, probes, 5)
       val f5 = walkTop5(full)
       val m5 = walkTop5(ginc)
       def row(tag: String, hits: DataFrame): DataFrame =
@@ -4422,46 +4114,11 @@ object Similarity {
     "sim_knn_graph_search_compacted" -> ((s, d) => {
       val dir = knnLayoutDir(s, d)
       val vecs = ivfBase(s, d)
-      // bounded-frame conf scope - see sim_knn_graph_search
       graft.tables.Tables.withShufflePartitions(s, 4)(
         graft.tables.Tables.withAqeOff(s) {
-      val probes = vecs.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-      def score(cand: DataFrame): DataFrame =
-        cand
-          .join(vecs.select(col("vec_id").as("cand"), col("v"), col("nrm")), Seq("cand"))
-          .join(broadcast(probes), Seq("q_id"))
-          .select(col("q_id"), col("cand"),
-            round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6).as("cos"))
-      val wB = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("cand"))
-      var beam = probes.select(col("q_id"), col("q_id").as("cand"))
-      var visited: DataFrame = null
-      for (_ <- 1 to 3) {
-        // bounded collect (≤ KnnBlocks ints): the hop's partition filter
-        val blocks = beam
-          .select(knnBlkOf(col("cand")).cast("int").as("blk"))
-          .distinct().collect().map(_.getInt(0)).sorted
-        val adj = s.read.parquet(dir)
-          .filter(col("blk").isin(blocks.map(Integer.valueOf): _*))
-          .select(col("vec_id").as("cand"), col("nbr"))
-        val expand = beam.join(adj, Seq("cand"))
-          .select(col("q_id"), col("nbr").as("cand"))
-          .filter(col("cand") =!= col("q_id"))
-          .distinct()
-        val scored = score(expand)
-        // per-round lineage truncation (the bfsFrom discipline): beam_t
-        // references visited_t and expand_{t+1} references beam_t, so an
-        // untruncated visited doubles its plan every round (2^rounds
-        // replays of the scoring subplan)
-        visited = SessionCaches.loopCheckpoint(
-          if (visited == null) scored
-          else visited.unionByName(scored).distinct())
-        beam = visited.withColumn("r", row_number().over(wB)).filter(col("r") <= 8)
-          .select(col("q_id"), col("cand"))
-      }
-      visited.withColumn("rank", row_number().over(wB)).filter(col("rank") <= 5)
-        .select(col("q_id"), col("cand").as("vec_id"), col("cos"),
-          col("rank").cast("int").as("rank"))
+      val probes = walkProbes(vecs)
+      servedTop5(beamWalk(probes.select(col("q_id"), col("q_id").as("cand")),
+        layoutAdjacency(s, dir), cosineScore(vecs, probes), 8, 3).last)
       })
     }),
   )
@@ -4510,6 +4167,118 @@ object Similarity {
         .select(col("vec_id"), col("nbr"), knnBlkOf(col("vec_id")).as("blk"))
         .repartition(col("blk"))
         .write.mode("overwrite").partitionBy("blk").parquet(tmp)
+    }
+  }
+
+  /** The walks' probe set (q_id, [extra,] qv, qn): the vec_id < 10 rows
+    * of `pool` (vec_id, v, nrm, …), with `extra` columns (the label
+    * walks' target) riding along.
+    */
+  private[graft] def walkProbes(pool: DataFrame, extra: Column*): DataFrame =
+    pool.filter(col("vec_id") < 10)
+      .select((col("vec_id").as("q_id") +: extra) ++
+        Seq(col("v").as("qv"), col("nrm").as("qn")): _*)
+
+  /** The walks' candidate score: (q_id, cand) rows joined to their vectors
+    * in `pool` (vec_id, v, nrm, …) and to the broadcast `probes`, plus the
+    * exact `cos`. Every pool and probe column rides along, so a label walk
+    * filters the scored rows on them.
+    */
+  private[graft] def cosineScore(pool: DataFrame, probes: DataFrame)(
+      cand: DataFrame): DataFrame =
+    cand.join(pool.withColumnRenamed("vec_id", "cand"), Seq("cand"))
+      .join(broadcast(probes), Seq("q_id"))
+      .withColumn("cos", cosine)
+
+  /** Per-probe top-`k` of a scored (q_id, cand, cos) frame under the walk's
+    * tie rule (see [[beamWalk]]), with its `rank`.
+    */
+  private def walkTop(scored: DataFrame, k: Int): DataFrame =
+    scored.withColumn("rank", row_number().over(
+      Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("cand"))))
+      .filter(col("rank") <= k)
+
+  /** A served walk's answer: the visited set's top-5 (q_id, vec_id, cos, rank). */
+  private[graft] def servedTop5(visited: DataFrame): DataFrame =
+    walkTop(visited, 5).select(col("q_id"), col("cand").as("vec_id"), col("cos"),
+      col("rank").cast("int").as("rank"))
+
+  /** Brute-force exact cosine top-`k` (q_id, cand) over `pool`, never the
+    * probe itself — the walks' ground truth (k = 5) and the hier entry
+    * (k = 1 over the upper layer).
+    */
+  private def exactCosineTop(pool: DataFrame, probes: DataFrame, k: Int): DataFrame =
+    walkTop(pool.join(broadcast(probes), col("vec_id") =!= col("q_id"))
+      .select(col("q_id"), col("vec_id").as("cand"), cosine.as("cos")), k)
+      .select(col("q_id"), col("cand"))
+
+  /** The sampled upper layer of the graph-entry strategy: ~1/8 of `vecs`
+    * by salted md5, the same standardized rule as the init blocks.
+    */
+  private[graft] def upperLayer(vecs: DataFrame): DataFrame =
+    vecs.filter(
+      conv(substring(md5(concat(lit("hl"), col("vec_id").cast("string"))), 1, 15),
+        16, 10).cast("long") % 8L === 0L)
+
+  /** Visited rows (q_id, cand, cos) whose candidate carries its probe's
+    * target label — the filter over a whole visited set.
+    */
+  private def onProbeLabel(v: DataFrame, base: DataFrame, probes: DataFrame): DataFrame =
+    v.join(base.select(col("vec_id").as("cand"), col("label")), Seq("cand"))
+      .join(broadcast(probes.select(col("q_id"), col("tgt"))), Seq("q_id"))
+      .filter(col("label") === col("tgt"))
+      .select(col("q_id"), col("cand"), col("cos"))
+
+  /** Adjacency (cand, nbr) of a session graph frame (vec_id, nbr): the
+    * same frame on every hop.
+    */
+  private def adjacencyOf(g: DataFrame): DataFrame => DataFrame = {
+    val adj = g.select(col("vec_id").as("cand"), col("nbr"))
+    _ => adj
+  }
+
+  /** Adjacency (cand, nbr) read from the partitionBy(blk) serving layout
+    * at `dir`, pruned to the beam's blocks: hop I/O is the blocks the walk
+    * visits, never the whole graph.
+    */
+  private[graft] def layoutAdjacency(s: SparkSession, dir: String)(
+      beam: DataFrame): DataFrame = {
+    // bounded collect (≤ KnnBlocks ints): the hop's partition filter
+    val blocks = beam.select(knnBlkOf(col("cand")).cast("int").as("blk"))
+      .distinct().collect().map(_.getInt(0)).sorted
+    s.read.parquet(dir).filter(col("blk").isin(blocks.map(Integer.valueOf): _*))
+      .select(col("vec_id").as("cand"), col("nbr"))
+  }
+
+  /** Greedy beam walk over a kNN graph — the one loop every graph read
+    * runs. From `beam0` (q_id, cand), each of `rounds` rounds expands the
+    * beam through `adjacency(beam)` (cand, nbr), drops the probe itself
+    * and duplicates, scores the new candidates with `score` (any frame
+    * carrying q_id, cand, cos; a filtering score keeps candidates out of
+    * the walk), and unions them into the visited set; the next beam is the
+    * visited set's best `width` per probe. Tie rule: cos descending, then
+    * the smaller cand — the oracle's order, so the walk replays CTE for
+    * CTE ([[beamWalkCtes]]). Each round's visited frame is truncated by
+    * [[SessionCaches.loopCheckpoint]]: beam_t reads visited_t and
+    * expand_{t+1} reads beam_t, so an untruncated visited set doubles its
+    * plan every round (2^rounds replays of the scoring subplan). Returns
+    * the visited frame (q_id, cand, cos) after each round.
+    */
+  private[graft] def beamWalk(beam0: DataFrame, adjacency: DataFrame => DataFrame,
+      score: DataFrame => DataFrame, width: Int, rounds: Int): Seq[DataFrame] = {
+    var beam = beam0
+    var visited: DataFrame = null
+    (1 to rounds).map { _ =>
+      val expand = beam.join(adjacency(beam), Seq("cand"))
+        .select(col("q_id"), col("nbr").as("cand"))
+        .filter(col("cand") =!= col("q_id"))
+        .distinct()
+      val scored = score(expand).select(col("q_id"), col("cand"), col("cos"))
+      visited = SessionCaches.loopCheckpoint(
+        if (visited == null) scored
+        else visited.unionByName(scored).distinct())
+      beam = walkTop(visited, width).select(col("q_id"), col("cand"))
+      visited
     }
   }
 
@@ -4573,9 +4342,7 @@ object Similarity {
     // parent materialized OUTSIDE this cache's monitor (lock discipline)
     knnGraphShared(s, d)
     sharedLabeledGraph.getOrBuild(s, d) {
-      val base = fanOut(embeddings(s, d), s)
-        .select(col("vec_id"), col("label"), asDouble(col("embedding")).as("v"))
-        .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
+      val base = labeledBase(s, d)
       def blkOf(salt: String): Column =
         conv(substring(md5(concat(lit(salt), col("vec_id").cast("string"))), 1, 15),
           16, 10).cast("long") % LblBlocks

@@ -101,7 +101,7 @@ object CompactedProbe {
         } finally StagedEvents.deleteRecursively(staged)
       }._1
       // exact shortlist/re-rank tail — batch-side, shared with sim_ivfpq_topk
-      Similarity.ivfpqExactTail(spark, sfDir, drained)
+      Similarity.ivfpqExactTail(spark, sfDir, drained, 50)
     }
 
   /** The static candidate side: the compacted layout read back with a

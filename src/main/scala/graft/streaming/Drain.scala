@@ -3,21 +3,30 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.Trigger
 
-/** Append-only log of every drained stream's per-micro-batch
+/** Log of the most recently drained streams' per-micro-batch
   * [[org.apache.spark.sql.streaming.StreamingQueryProgress]] — the
   * measurement channel for the streaming family: a stream query's wall
   * cost decomposes into the progress `durationMs` fields (queryPlanning,
   * addBatch, walCommit, commitOffsets, latestOffset) that seconds alone
-  * cannot attribute. Tooling (StreamProf) drains it; recording is a
-  * buffer append, nothing about the drain changes.
+  * cannot attribute. StreamProf drains it after every rep; recording is
+  * a buffer append, nothing about the drain changes. Nothing else drains
+  * it, so the buffer keeps only the newest [[Cap]] entries: a JVM that
+  * never drains (Bench, Verify, the CLI) holds a bounded log instead of
+  * every progress of its lifetime.
   */
 object ProgressLog {
-  private val buf = scala.collection.mutable.ArrayBuffer
+  /** Streams kept — far above the few one StreamProf rep drains. */
+  val Cap = 64
+
+  private val buf = scala.collection.mutable.ArrayDeque
     .empty[(String, Seq[org.apache.spark.sql.streaming.StreamingQueryProgress])]
 
   def record(prefix: String,
       ps: Seq[org.apache.spark.sql.streaming.StreamingQueryProgress]): Unit =
-    buf.synchronized { buf += ((prefix, ps)) }
+    buf.synchronized {
+      buf += ((prefix, ps))
+      if (buf.size > Cap) buf.removeHead()
+    }
 
   def drain(): Seq[(String, Seq[org.apache.spark.sql.streaming.StreamingQueryProgress])] =
     buf.synchronized { val out = buf.toList; buf.clear(); out }

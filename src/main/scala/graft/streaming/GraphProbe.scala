@@ -36,9 +36,7 @@ object GraphProbe {
         .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
       // the upper layer a tier serves entries from: ~N/8 by salted md5,
       // the same standardized rule as the batch query — bounded, broadcast
-      val layer = vecs.filter(
-        conv(substring(md5(concat(lit("hl"), col("vec_id").cast("string"))), 1, 15),
-          16, 10).cast("long") % 8L === 0L)
+      val layer = Similarity.upperLayer(vecs)
         .select(col("vec_id").as("cand"), col("v").as("lv"), col("nrm").as("ln_"),
           lit(1).as("k"))
       val drained = memo.getOrRun(spark, sfDir, tag = "stream_graph_probe") {
@@ -82,41 +80,9 @@ object GraphProbe {
       // entries, adjacency read per hop from the compacted layout with
       // the beam's blocks as the partition filter
       val dir = Similarity.knnLayoutDir(spark, sfDir)
-      val probes = vecs.filter(col("vec_id") < 10)
-        .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
-      def score(cand: DataFrame): DataFrame =
-        cand
-          .join(vecs.select(col("vec_id").as("cand"), col("v"), col("nrm")),
-            Seq("cand"))
-          .join(broadcast(probes), Seq("q_id"))
-          .select(col("q_id"), col("cand"),
-            round(dot(col("qv"), col("v")) / (col("qn") * col("nrm")), 6).as("cos"))
-      val wB = org.apache.spark.sql.expressions.Window
-        .partitionBy(col("q_id")).orderBy(col("cos").desc, col("cand"))
-      var beam = drained.select(col("q_id"), col("cand"))
-      var visited: DataFrame = null
-      for (_ <- 1 to 3) {
-        // bounded collect (≤ 16 block ints): the hop's partition filter
-        val blocks = beam
-          .select(Similarity.knnBlkOf(col("cand")).cast("int").as("blk"))
-          .distinct().collect().map(_.getInt(0)).sorted
-        val adj = spark.read.parquet(dir)
-          .filter(col("blk").isin(blocks.map(Integer.valueOf): _*))
-          .select(col("vec_id").as("cand"), col("nbr"))
-        val expand = beam.join(adj, Seq("cand"))
-          .select(col("q_id"), col("nbr").as("cand"))
-          .filter(col("cand") =!= col("q_id"))
-          .distinct()
-        val scored = score(expand)
-        // per-round lineage truncation — the bfsFrom discipline
-        visited = graft.queries.SessionCaches.loopCheckpoint(
-          if (visited == null) scored
-          else visited.unionByName(scored).distinct())
-        beam = visited.withColumn("r", row_number().over(wB))
-          .filter(col("r") <= 8).select(col("q_id"), col("cand"))
-      }
-      visited.withColumn("rank", row_number().over(wB)).filter(col("rank") <= 5)
-        .select(col("q_id"), col("cand").as("vec_id"), col("cos"),
-          col("rank").cast("int").as("rank"))
+      val probes = Similarity.walkProbes(vecs)
+      Similarity.servedTop5(Similarity.beamWalk(drained.select(col("q_id"), col("cand")),
+        Similarity.layoutAdjacency(spark, dir), Similarity.cosineScore(vecs, probes),
+        8, 3).last)
     }
 }

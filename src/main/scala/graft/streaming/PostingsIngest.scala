@@ -32,7 +32,7 @@ object PostingsIngest {
       // doc-parity arrival fixture: pure function of the documents table,
       // staged once per content stamp and shared (the sink + checkpoint
       // dirs above stay per-invocation — the query writes them)
-      val staged = StagedEvents.stageOnceFixture("postings_ingest_src",
+      val staged = StagedEvents.stageOnceFixture("postings_ingest_src", version = 1,
         java.nio.file.Paths.get(sfDir, "documents.parquet").toString) { tmp =>
         val docs = graft.tables.Tables.documents(spark, sfDir)
           .select(col("doc_id"), col("text"))

@@ -27,11 +27,16 @@ object StagedEvents {
     * composition is frozen with the fixture. ONLY for read-only input
     * fixtures — tables a query mutates (StreamForgetKeys), checkpoint
     * dirs, and applied logs stay per-invocation.
+    *
+    * `version` is the fixture's format version, folded into the dir name
+    * next to the content stamp: bump it whenever `build` changes what it
+    * writes, or the stale fixture of the old `build` is silently reused
+    * until the dataset is regenerated.
     */
-  def stageOnceFixture(name: String, sourcePath: String)(
+  def stageOnceFixture(name: String, version: Int, sourcePath: String)(
       build: Path => Unit): Path = {
     val key = graft.queries.ContentStamp.of(sourcePath)
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_${name}_$key"
+    val dir = s"${sys.props("java.io.tmpdir")}/graft_${name}_v${version}_$key"
     graft.ops.Multimodal.stageOnce(dir) { tmp =>
       val t = java.nio.file.Paths.get(tmp)
       build(t)
@@ -52,7 +57,7 @@ object StagedEvents {
     */
   def stage(spark: SparkSession, sfDir: String): (Path, org.apache.spark.sql.types.StructType) = {
     val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val dir = stageOnceFixture("staged_events",
+    val dir = stageOnceFixture("staged_events", version = 1,
       java.nio.file.Paths.get(sfDir, "events.parquet").toString) { tmp =>
       stageInto(spark, sfDir, tmp)
     }

@@ -30,7 +30,7 @@ object StreamCountMin {
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       // doc-parity arrival fixture: pure function of the documents table,
       // staged once per content stamp and shared across invocations
-      val staged = StagedEvents.stageOnceFixture("countmin_src",
+      val staged = StagedEvents.stageOnceFixture("countmin_src", version = 1,
         java.nio.file.Paths.get(sfDir, "documents.parquet").toString) { tmp =>
         require(docs.head(1).nonEmpty,
           s"$sfDir/documents.parquet is empty — cannot stage an ingest replay")

@@ -37,7 +37,7 @@ object StreamFunnel {
       // function of the events table — staged once per content stamp and
       // shared across invocations (StagedEvents.stageOnceFixture); each
       // invocation still runs the full 3-trigger drain
-      val staged = StagedEvents.stageOnceFixture("funnel_src",
+      val staged = StagedEvents.stageOnceFixture("funnel_src", version = 1,
         java.nio.file.Paths.get(sfDir, "events.parquet").toString) { tmp =>
         val ev = spark.read.parquet(s"$sfDir/events.parquet")
           .select(col("event_id"), col("ts"), col("user_id"),

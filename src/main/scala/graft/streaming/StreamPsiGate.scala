@@ -46,7 +46,7 @@ object StreamPsiGate {
       // the odd-slice arrival fixture is a pure function of the events
       // table — staged once per content stamp and shared across
       // invocations (StagedEvents.stageOnceFixture)
-      val staged = StagedEvents.stageOnceFixture("psi_gate_src",
+      val staged = StagedEvents.stageOnceFixture("psi_gate_src", version = 1,
         java.nio.file.Paths.get(sfDir, "events.parquet").toString) { tmp =>
         require(ev.head(1).nonEmpty,
           s"$sfDir/events.parquet is empty — cannot stage an ingest replay")

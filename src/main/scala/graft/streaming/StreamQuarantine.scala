@@ -37,7 +37,7 @@ object StreamQuarantine {
       // doc-parity arrival fixture: pure function of the documents table,
       // staged once per content stamp and shared (sink + checkpoint dirs
       // stay per-invocation — the query writes them)
-      val staged = StagedEvents.stageOnceFixture("quarantine_src",
+      val staged = StagedEvents.stageOnceFixture("quarantine_src", version = 1,
         java.nio.file.Paths.get(sfDir, "documents.parquet").toString) { tmp =>
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
           .select(col("doc_id"), col("text"), col("n_chars"))

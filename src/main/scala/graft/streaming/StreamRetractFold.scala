@@ -98,7 +98,7 @@ object StreamRetractFold {
       // staged once per content stamp (StagedEvents.stageOnceFixture) and
       // shared across invocations; each invocation still drains all 4
       // triggers through the stateful fold
-      val staged = StagedEvents.stageOnceFixture("retract_src",
+      val staged = StagedEvents.stageOnceFixture("retract_src", version = 1,
         java.nio.file.Paths.get(sfDir, "events.parquet").toString) { tmp =>
         require(ev.head(1).nonEmpty, s"$sfDir/events.parquet is empty")
         def cdc(df: DataFrame, mult: Long) = df.select(

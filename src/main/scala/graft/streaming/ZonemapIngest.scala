@@ -66,7 +66,7 @@ object ZonemapIngest {
         // staged once per content stamp and shared; the SINK (the delta
         // files + manifest the query writes, the measurand) stays in the
         // per-invocation work dir.
-        val staged = StagedEvents.stageOnceFixture("zonemap_arrivals",
+        val staged = StagedEvents.stageOnceFixture("zonemap_arrivals", version = 1,
           java.nio.file.Paths.get(sfDir, "events.parquet").toString) { tmp =>
           val ev = graft.tables.Tables.events(spark, sfDir)
             .filter(col("event_id") % 8 === 0)

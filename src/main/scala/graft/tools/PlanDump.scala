@@ -8,15 +8,16 @@ import org.apache.spark.sql.execution.ExplainMode
   * checkable plan evidence for optimization rounds.
   *
   * `graft.tools.PlanDump <sfDir> <outDir> <suffix> <q1,q2,...>` writes
-  * `<outDir>/<name>_<suffix>.txt` per query. Streaming queries (whose
-  * entry closure drains the stream and returns a memory-sink table) are
-  * skipped with a note — their plan evidence lives in the stream progress,
-  * not the drained LocalTableScan.
+  * `<outDir>/<name>_<suffix>.txt` per query (an empty list dumps every
+  * query). Streaming queries (whose entry closure drains the stream and
+  * returns a memory-sink table) are skipped with a note — their plan
+  * evidence lives in the stream progress, not the drained LocalTableScan.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir, suffix) = (args(0), args(1), args(2))
-    val names = args(3).split(",").toSeq
+    val names = Some(graft.SparkEntry.queryNames(args(3))).filter(_.nonEmpty)
+      .getOrElse(graft.SparkEntry.queries.keys.toSeq.sorted)
     val spark = graft.Sessions.local(graft.Sessions.cpusOr("32"))
     spark.sparkContext.setLogLevel("ERROR")
     Files.createDirectories(Paths.get(outDir))

@@ -9,12 +9,14 @@ package graft.tools
   * spent OUTSIDE the stream (staging writes, codebook collects, sink
   * readback).
   *
-  * `graft.tools.StreamProf <sfDir> <q1,q2,...>`
+  * `graft.tools.StreamProf <sfDir> <q1,q2,...>` (an empty list profiles
+  * every query)
   */
 object StreamProf {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
-    val names = args(1).split(",").toSeq
+    val names = Some(graft.SparkEntry.queryNames(args(1))).filter(_.nonEmpty)
+      .getOrElse(graft.SparkEntry.queries.keys.toSeq.sorted)
     val spark = graft.Sessions.local(graft.Sessions.cpusOr("32"))
     spark.sparkContext.setLogLevel("ERROR")
 

@@ -79,4 +79,35 @@ class KnnGraphSpec extends SparkSpec {
       assert(recall >= round2, s"cohort $c recall $recall below round-2 $round2")
     }
   }
+
+  // Cross-query laws of the beam-walk family: two queries that run the
+  // same walk by different routes must read the same number, so a walk
+  // kernel that breaks the width-parameterized, two-graph or label-filtered
+  // walk shows up here even where a query's own oracle is not run. Read at
+  // the gate scale, whose corpus separates the walk's rounds at beam 8.
+  private val gate = new java.io.File(sf).getParent + "/sf0.01"
+
+  test("walk law: the sweep's (beam 8, rounds 3) cell is serve_maintained's rebuilt walk") {
+    def q(name: String) = graft.queries.Similarity.queries(name)(spark, gate).collect()
+    val beam8 = q("sim_knn_graph_search_sweep")
+      .filter(_.getAs[Int]("beam") == 8)
+      .map(r => r.getAs[Int]("rounds") -> r.getAs[Double]("recall_at_5")).toMap
+    assert(beam8.keySet == Set(1, 2, 3), s"beam-8 sweep cells: ${beam8.keys}")
+    assert(beam8(2) != beam8(3), "rounds 2 and 3 read alike — the law cannot pin the round count")
+    val rebuilt = q("sim_knn_graph_serve_maintained")
+      .filter(_.getAs[String]("variant") == "rebuilt")
+    assert(rebuilt.length == 1, "one rebuilt row")
+    assert(beam8(3) == rebuilt.head.getAs[Double]("frac"))
+  }
+
+  test("walk law: the labeled search's blind leg replays the filtered search's pre leg") {
+    def recalls(name: String, leg: String): Map[Long, Double] =
+      graft.queries.Similarity.queries(name)(spark, gate).collect()
+        .map(r => r.getAs[Long]("q_id") -> r.getAs[Double](leg)).toMap
+    val blind = recalls("sim_knn_graph_search_labeled", "blind_recall")
+    val pre = recalls("sim_knn_graph_search_filtered", "pre_recall")
+    assert(blind.size == 10, s"one row per probe: ${blind.keys}")
+    assert(blind.values.exists(_ > 0.0), "no blind-walk hits — the law is vacuous")
+    assert(blind == pre)
+  }
 }

@@ -103,4 +103,29 @@ class StagingRobustnessSpec extends SparkSpec {
       graft.ops.Multimodal.stageOnce(dir) { _ => fail("must not re-stage a committed dir") }
     } finally graft.streaming.StagedEvents.deleteRecursively(root)
   }
+
+  test("stage-once fixture: the same version reuses the dir, a bumped version re-stages") {
+    import graft.streaming.StagedEvents.{deleteRecursively, stageOnceFixture}
+    val src = Files.createTempFile("graft-fixture-src", ".txt")
+    Files.writeString(src, java.util.UUID.randomUUID().toString)
+    var builds = 0
+    def stage(version: Int) = stageOnceFixture("spec_versioned", version, src.toString) { tmp =>
+      builds += 1
+      Files.createDirectories(tmp)
+      Files.writeString(tmp.resolve("v.txt"), version.toString)
+    }
+    val v1 = stage(1)
+    try {
+      assert(stage(1) == v1 && builds == 1, "same version + stamp must reuse the fixture")
+      val v2 = stage(2)
+      try {
+        assert(v2 != v1 && builds == 2, "a bumped version must stage a new fixture")
+        assert(Files.readString(v2.resolve("v.txt")) == "2")
+        assert(Files.readString(v1.resolve("v.txt")) == "1")
+      } finally deleteRecursively(v2)
+    } finally {
+      deleteRecursively(v1)
+      Files.delete(src)
+    }
+  }
 }
