@@ -43,24 +43,36 @@ object SparkEntry {
 
   /** [[oracleSql]] plus the data-dependent oracles that can only be
     * generated against a concrete data dir (emb_pca_topk embeds its
-    * eigenbasis as SQL literals). Verify dumps THIS map, so the driver's
-    * DuckDB gate sees every query fully oracled.
+    * eigenbasis as SQL literals), for the queries in `names` (empty =
+    * every query). Only the named data-dependent oracles are generated:
+    * each one is Spark work over `sfDir` (PCA/OPQ bases, hybrid legs, the
+    * isotonic fit). Verify dumps THIS map, so the driver's DuckDB gate
+    * sees every query fully oracled.
     */
-  def oracleSqlFor(spark: SparkSession, sfDir: String): Map[String, String] =
-    oracleSql +
-      ("emb_pca_topk" -> graft.queries.Similarity.pcaOracleSql(spark, sfDir)) +
-      ("emb_whitening" -> graft.queries.Similarity.whiteningOracleSql(spark, sfDir)) +
-      ("sim_opq_code_gain" -> graft.queries.Similarity.opqOracleSql(spark, sfDir)) +
-      ("sim_opq_recall" -> graft.queries.Similarity.opqRecallSql(spark, sfDir)) +
-      ("sim_opq_ivfpq_gain" -> graft.queries.Similarity.opqIvfpqGainSql(spark, sfDir)) +
-      ("sim_opq_rerank_gain" -> graft.queries.Similarity.opqRerankGainSql(spark, sfDir)) +
-      ("stream_opq_encode" -> graft.queries.Similarity.opqStreamCodesSql(spark, sfDir)) +
-      ("stream_opq_probe" -> graft.queries.Similarity.opqAdcProbeSql(spark, sfDir)) +
-      ("pipeline_hybrid_retrieval" -> graft.queries.Similarity.hybridRetrievalSql(spark, sfDir)) +
-      ("pipeline_hybrid_gain" -> graft.queries.Similarity.hybridGainSql(spark, sfDir)) +
-      ("pipeline_hybrid_ksweep" -> graft.queries.Similarity.hybridKsweepSql(spark, sfDir)) +
-      ("pipeline_hybrid_depth_curve" -> graft.queries.Similarity.hybridDepthCurveSql(spark, sfDir)) +
-      ("pipeline_retrieval_metrics" -> graft.queries.Similarity.hybridMetricsSql(spark, sfDir)) +
-      ("sim_opq_train_curve" -> graft.queries.Similarity.opqTrainCurveSql(spark, sfDir)) +
-      ("text_quality_isotonic" -> graft.queries.TextOps.isotonicOracleSql(spark, sfDir))
+  def oracleSqlFor(spark: SparkSession, sfDir: String,
+      names: Set[String]): Map[String, String] = {
+    def keep(q: String) = names.isEmpty || names(q)
+    oracleSql.filter { case (q, _) => keep(q) } ++
+      dataOracles.collect { case (q, gen) if keep(q) => q -> gen(spark, sfDir) }
+  }
+
+  private def dataOracles: Seq[(String, (SparkSession, String) => String)] = {
+    import graft.queries.Similarity._
+    Seq(
+      "emb_pca_topk" -> pcaOracleSql _,
+      "emb_whitening" -> whiteningOracleSql _,
+      "sim_opq_code_gain" -> opqOracleSql _,
+      "sim_opq_recall" -> opqRecallSql _,
+      "sim_opq_ivfpq_gain" -> opqIvfpqGainSql _,
+      "sim_opq_rerank_gain" -> opqRerankGainSql _,
+      "stream_opq_encode" -> opqStreamCodesSql _,
+      "stream_opq_probe" -> opqAdcProbeSql _,
+      "pipeline_hybrid_retrieval" -> hybridRetrievalSql _,
+      "pipeline_hybrid_gain" -> hybridGainSql _,
+      "pipeline_hybrid_ksweep" -> hybridKsweepSql _,
+      "pipeline_hybrid_depth_curve" -> hybridDepthCurveSql _,
+      "pipeline_retrieval_metrics" -> hybridMetricsSql _,
+      "sim_opq_train_curve" -> opqTrainCurveSql _,
+      "text_quality_isotonic" -> graft.queries.TextOps.isotonicOracleSql _)
+  }
 }

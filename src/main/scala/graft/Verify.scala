@@ -36,8 +36,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val oracle = SparkEntry.oracleSqlFor(spark, sfDir)
-    val json = (if (only.isEmpty) oracle else oracle.filter { case (k, _) => only(k) })
+    val json = SparkEntry.oracleSqlFor(spark, sfDir, only)
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     graft.queries.SessionCaches.releaseAll(spark)

@@ -44,20 +44,25 @@ object Relational {
     * column is written as a plain long (micros) — partitioned rewrites
     * shouldn't depend on timestamp logical-type handling.
     */
-  private def partitionedEventsDir(s: SparkSession, d: String): String = {
-    val key = ContentStamp.of(
-      java.nio.file.Paths.get(d, "events.parquet").toString)
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_events_by_type_$key"
+  private def partitionedEventsDir(s: SparkSession, d: String): String =
     // build-in-temp + atomic rename (the shared stageOnce): concurrent
     // stagings — two prewarms in one JVM or two JVMs — never write the
     // same output dir, which is how a racing FileOutputCommitter corrupts
     // a check-then-write-in-place layout
-    graft.ops.Multimodal.stageOnce(dir) { tmp =>
+    eventsFixture("events_by_type", d) { tmp =>
       events(s, d)
         .withColumn("ts", unix_micros(col("ts")))
         .write.partitionBy("event_type").mode("overwrite").parquet(tmp)
     }
-  }
+
+  /** A stage-once layout of `d`'s events table: version 1 of fixture
+    * `name` (see [[graft.streaming.StagedEvents.stageOnceFixture]]);
+    * `build` writes into the temp dir path.
+    */
+  private def eventsFixture(name: String, d: String)(build: String => Unit): String =
+    graft.streaming.StagedEvents.stageOnceFixture(name, version = 1,
+      java.nio.file.Paths.get(d, "events.parquet").toString)(t => build(t.toString))
+      .toString
 
   /** Stage-once events copy in TWO SCHEMA GENERATIONS — the schema-drift
     * layout every long-lived 100 TB dataset grows: gen=1 partitions
@@ -66,21 +71,14 @@ object Relational {
     * the oracle can replay the generation rule against the live table.
     * Same content-fingerprint staging key as [[partitionedEventsDir]].
     */
-  private def schemaEvolvedEventsDir(s: SparkSession, d: String): String = {
-    val key = ContentStamp.of(
-      java.nio.file.Paths.get(d, "events.parquet").toString)
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_events_schema_gens_$key"
-    graft.ops.Multimodal.stageOnce(dir) { tmp =>
+  private def schemaEvolvedEventsDir(s: SparkSession, d: String): String =
+    eventsFixture("events_schema_gens", d) { tmp =>
       val base = events(s, d).withColumn("ts", unix_micros(col("ts")))
       base.filter(col("event_id") % 2 === 0).drop("props")
         .write.mode("overwrite").parquet(s"$tmp/gen=1")
       base.filter(col("event_id") % 2 === 1)
         .write.mode("overwrite").parquet(s"$tmp/gen=2")
-      // the root marker stageOnce's commit contract requires (the two
-      // generation writes put theirs in the subdirs)
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(tmp, "_SUCCESS"))
     }
-  }
 
   /** Stage-once "v2" snapshot of the documents table with deterministic
     * churn — every doc_id % 17 == 0 row deleted, every % 13 == 0 row's
@@ -90,11 +88,9 @@ object Relational {
     * which is what lets the oracle replay the diff against the live v1
     * table alone.
     */
-  private def snapshotV2Dir(s: SparkSession, d: String): String = {
-    val key = ContentStamp.of(
-      java.nio.file.Paths.get(d, "documents.parquet").toString)
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_docs_snapshot_v2_$key"
-    graft.ops.Multimodal.stageOnce(dir) { tmp =>
+  private def snapshotV2Dir(s: SparkSession, d: String): String =
+    graft.streaming.StagedEvents.stageOnceFixture("docs_snapshot", version = 2,
+      java.nio.file.Paths.get(d, "documents.parquet").toString) { tmp =>
       val v1 = documents(s, d).select(col("doc_id"), col("source"), col("n_chars"))
       val kept = v1.filter(col("doc_id") % 17 =!= 0)
         .withColumn("n_chars",
@@ -103,10 +99,7 @@ object Relational {
       val added = v1.filter(col("doc_id") % 19 === 0)
         .select((col("doc_id") + 10000000L).as("doc_id"), col("source"), col("n_chars"))
       kept.union(added).write.mode("overwrite").parquet(s"$tmp/data")
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(tmp, "_SUCCESS"))
-    }
-    s"$dir/data"
-  }
+    }.resolve("data").toString
 
   /** (user_id, ts) extrema of the events table — the rescale constants both
     * the Z-order staging and the s12 query's cell enumeration derive their
@@ -146,11 +139,8 @@ object Relational {
     * layout); ts is stored as plain micros so partition dirs stay
     * timestamp-logic-free.
     */
-  private def zorderedEventsDir(s: SparkSession, d: String): String = {
-    val key = ContentStamp.of(
-      java.nio.file.Paths.get(d, "events.parquet").toString)
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_events_zorder_$key"
-    graft.ops.Multimodal.stageOnce(dir) { tmp =>
+  private def zorderedEventsDir(s: SparkSession, d: String): String =
+    eventsFixture("events_zorder", d) { tmp =>
       val (umin, umax, tmin, tmax) = zorderBounds(s, d)
       val ub = expr(s"((user_id - $umin) * 16) div ${umax - umin + 1}")
       val tb = expr(s"((ts - $tmin) * 16) div ${tmax - tmin + 1}")
@@ -163,7 +153,6 @@ object Relational {
         .withColumn("zcell", zcell.cast("int"))
         .write.partitionBy("zcell").mode("overwrite").parquet(tmp)
     }
-  }
 
   /** Stage-once events copy RANGE-CLUSTERED by `value` with a per-file
     * min/max MANIFEST beside it (s14's zone-map layout). The manifest
@@ -172,11 +161,8 @@ object Relational {
     * would dangle after the commit. Same content-fingerprint key as the
     * sibling layouts.
     */
-  private def zonemapEventsDir(s: SparkSession, d: String): String = {
-    val key = ContentStamp.of(
-      java.nio.file.Paths.get(d, "events.parquet").toString)
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_events_zonemap_$key"
-    graft.ops.Multimodal.stageOnce(dir) { tmp =>
+  private def zonemapEventsDir(s: SparkSession, d: String): String =
+    eventsFixture("events_zonemap", d) { tmp =>
       events(s, d)
         .withColumn("ts", unix_micros(col("ts")))
         .repartitionByRange(8, col("value"))
@@ -189,10 +175,7 @@ object Relational {
         .agg(min(col("value")).as("min_value"),
           max(col("value")).as("max_value"), count(lit(1)).as("n_rows"))
         .coalesce(1).write.mode("overwrite").parquet(s"$tmp/manifest")
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(tmp, "_SUCCESS"))
     }
-    dir
-  }
 
   /** Stage-once (per session) bucketed `orders`/`customer` tables for the
     * q3b co-located join: both sides written `bucketBy(8, custkey)` +

@@ -127,6 +127,9 @@ object SessionCaches {
     // the encode-at-ingest arrival fixtures (stage-once, content-stamped)
     graft.streaming.EncodeIngest.stagedRing(s, d, 1)
     graft.streaming.EncodeIngest.stagedRing(s, d, 2)
+    // the stage-once kNN and IVF-PQ serving layouts
+    Similarity.knnLayoutDir(s, d)
+    graft.streaming.CompactedProbe.compactedDir(s, d)
     graft.sources.mzml.MzmlSynth.stagedRuns(32, 96, 128)
     ()
   }

@@ -4156,19 +4156,13 @@ object Similarity {
     * inventories; the compacted walk serves from it across queries and
     * JVMs without rebuilding.
     */
-  private[graft] def knnLayoutDir(s: SparkSession, d: String): String = {
-    val stamp = ContentStamp.of(d)
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$d|$stamp".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    graft.ops.Multimodal.stageOnce(
-      s"${sys.props("java.io.tmpdir")}/graft_knn_layout_$key") { tmp =>
+  private[graft] def knnLayoutDir(s: SparkSession, d: String): String =
+    graft.streaming.StagedEvents.stageOnceFixture("knn_layout", version = 1, d) { tmp =>
       knnFinalGraphShared(s, d)
         .select(col("vec_id"), col("nbr"), knnBlkOf(col("vec_id")).as("blk"))
         .repartition(col("blk"))
-        .write.mode("overwrite").partitionBy("blk").parquet(tmp)
-    }
-  }
+        .write.mode("overwrite").partitionBy("blk").parquet(tmp.toString)
+    }.toString
 
   /** The walks' probe set (q_id, [extra,] qv, qn): the vec_id < 10 rows
     * of `pool` (vec_id, v, nrm, …), with `extra` columns (the label

@@ -554,11 +554,9 @@ object TextOps {
     * slice is what the spec pins. Content-stamped and committed via the
     * shared atomic-rename stageOnce.
     */
-  private[graft] def evalCorpusDir(s: SparkSession, d: String): String = {
-    val key = ContentStamp.of(
-      java.nio.file.Paths.get(d, "documents.parquet").toString)
-    graft.ops.Multimodal.stageOnce(
-      s"${sys.props("java.io.tmpdir")}/graft_eval_corpus_$key") { tmp =>
+  private[graft] def evalCorpusDir(s: SparkSession, d: String): String =
+    graft.streaming.StagedEvents.stageOnceFixture("eval_corpus", version = 1,
+      java.nio.file.Paths.get(d, "documents.parquet").toString) { tmp =>
       val v1 = documents(s, d).select(col("doc_id"), col("source"), col("text"))
       val m = conv(substring(
         md5(concat(lit("ev"), col("doc_id").cast("string"))), 1, 15), 16, 10)
@@ -569,9 +567,8 @@ object TextOps {
       val clean = v1.filter(m >= 10 && m < 20)
         .select((col("doc_id") + 20000000L).as("eval_id"), col("source"),
           upper(col("text")).as("text"))
-      dup.unionByName(clean).write.mode("overwrite").parquet(tmp)
-    }
-  }
+      dup.unionByName(clean).write.mode("overwrite").parquet(tmp.toString)
+    }.toString
 
   /** The robust-winnowing selection frame (doc_id, h, p) — one row per
     * SELECTED k-gram position (h is the 36-bit k-gram hash, p its 1-based

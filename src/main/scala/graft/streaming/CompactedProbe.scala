@@ -38,24 +38,15 @@ object CompactedProbe {
     * Keyed by the content stamp so an in-place regeneration of the data
     * dir re-stages, same rule as the SessionFrameCache.
     */
-  private def compactedDir(spark: SparkSession, sfDir: String): String = {
-    import graft.queries.Similarity
-    val stamp = graft.queries.ContentStamp.of(sfDir)
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$sfDir|$stamp".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString.take(12)
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_compacted_$key"
-    // build-in-temp + atomic rename (the shared stageOnce): the previous
-    // JVM-local synchronized block didn't guard against a SECOND JVM
-    // overwriting the layout mid-scan
-    graft.ops.Multimodal.stageOnce(dir) { tmp =>
+  private[graft] def compactedDir(spark: SparkSession, sfDir: String): String =
+    StagedEvents.stageOnceFixture("compacted", version = 1, sfDir) { tmp =>
+      import graft.queries.Similarity
       // the compaction step: one writer task per cell = one file per list
       Similarity.ivfpqCellsShared(spark, sfDir)
         .join(Similarity.pqCodesShared(spark, sfDir), Seq("vec_id"))
         .repartition(col("cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(tmp)
-    }
-  }
+        .write.mode("overwrite").partitionBy("cell").parquet(tmp.toString)
+    }.toString
 
   def ivfpqTop5(spark: SparkSession, sfDir: String): DataFrame =
     graft.tables.Tables.withShufflePartitions(spark, 4) {

@@ -1,10 +1,7 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.expressions.ContamExpressions
 
@@ -55,7 +52,6 @@ object ContamGate {
 
   def audit(spark: SparkSession, sfDir: String): DataFrame =
     graft.tables.Tables.withShufflePartitions(spark, 4) {
-      import spark.implicits._
       // the eval-side Bloom: every distinct eval shingle's K positions
       // (one compiled call per doc), exploded → DISTINCT set bits;
       // bounded by M rows, collected once to build the 8 KiB bitmap the
@@ -76,63 +72,38 @@ object ContamGate {
       // as 8 files — a single-file batch puts the gate's whole
       // per-shingle map on ONE input partition, a fixture artifact (real
       // ingest arrives as many files). Sink + checkpoint stay per-run.
-      val staged = java.nio.file.Paths.get(
-        graft.ops.Multimodal.stageOnce(
-          s"${sys.props("java.io.tmpdir")}/graft_contam_arrivals_" +
-            graft.queries.ContentStamp.of(
-              java.nio.file.Paths.get(sfDir, "documents.parquet").toString)) { tmp =>
-          val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-            .select(col("doc_id"), col("source"), col("text"))
-          require(docs.head(1).nonEmpty, s"$sfDir/documents.parquet is empty")
-          val t = java.nio.file.Paths.get(tmp)
-          StagedEvents.writeParts(docs.filter(col("doc_id") % 2 === 0),
-            t, "b0_docs", 8, 60)
-          StagedEvents.writeParts(docs.filter(col("doc_id") % 2 =!= 0),
-            t, "b1_docs", 8, 45)
-          // stageOnce's commit marker (underscore-prefixed: both the batch
-          // reader and the streaming file source ignore it as hidden)
-          Files.createFile(t.resolve("_SUCCESS"))
-        })
-      val out = Files.createTempDirectory("contam-gate-sink")
-      val cp = Files.createTempDirectory("contam-gate-cp")
-      try {
-        val schema =
-          spark.read.parquet(staged.resolve("b0_docs_0.parquet").toString).schema
-        val routed = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "8")
-          .parquet(staged.toString)
-          .select(col("doc_id"), col("source"),
-            ContamExpressions.probe(
-              split(trim(col("text")), "\\s+"), bits, M, K).as("pr"))
-          .select(col("doc_id"), col("source"),
-            element_at(col("pr"), 1).as("n_sh"),
-            element_at(col("pr"), 2).as("nc"))
-          .select(col("doc_id"), col("source"), col("nc"),
-            when(col("n_sh") > 0 && col("nc") * 2 >= col("n_sh"), lit("contam"))
-              .otherwise(lit("clean")).as("verdict"))
-        val q = routed.writeStream
-          .format("parquet")
-          .option("path", out.toString)
-          .option("checkpointLocation", cp.toString)
-          .partitionBy("verdict")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        // bounded (≤ 2·|sources| rows): collected so the result outlives
-        // the temp dirs
-        spark.read.parquet(out.toString)
-          .groupBy(col("source"), col("verdict").cast("string").as("verdict"))
+      val staged = StagedEvents.stageOnceFixture("contam_arrivals", version = 1,
+        java.nio.file.Paths.get(sfDir, "documents.parquet").toString) { tmp =>
+        val docs = spark.read.parquet(s"$sfDir/documents.parquet")
+          .select(col("doc_id"), col("source"), col("text"))
+        require(docs.head(1).nonEmpty, s"$sfDir/documents.parquet is empty")
+        StagedEvents.writeParts(docs.filter(col("doc_id") % 2 === 0),
+          tmp, "b0_docs", 8, 60)
+        StagedEvents.writeParts(docs.filter(col("doc_id") % 2 =!= 0),
+          tmp, "b1_docs", 8, 45)
+      }
+      val schema =
+        spark.read.parquet(staged.resolve("b0_docs_0.parquet").toString).schema
+      val routed = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "8")
+        .parquet(staged.toString)
+        .select(col("doc_id"), col("source"),
+          ContamExpressions.probe(
+            split(trim(col("text")), "\\s+"), bits, M, K).as("pr"))
+        .select(col("doc_id"), col("source"),
+          element_at(col("pr"), 1).as("n_sh"),
+          element_at(col("pr"), 2).as("nc"))
+        .select(col("doc_id"), col("source"), col("nc"),
+          when(col("n_sh") > 0 && col("nc") * 2 >= col("n_sh"), lit("contam"))
+            .otherwise(lit("clean")).as("verdict"))
+      Drain.readBack(spark) { out =>
+        Drain.run("stream_contam_gate", routed.writeStream
+          .format("parquet").option("path", out).partitionBy("verdict"))
+      } { sink => // bounded (≤ 2·|sources| rows)
+        sink.groupBy(col("source"), col("verdict").cast("string").as("verdict"))
           .agg(count(lit(1)).as("n_docs"), sum(col("nc")).as("n_hits"),
             min(col("doc_id")).as("min_doc_id"),
             max(col("doc_id")).as("max_doc_id"))
-          .collect()
-          .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3),
-            r.getLong(4), r.getLong(5))).toSeq
-          .toDF("source", "verdict", "n_docs", "n_hits", "min_doc_id", "max_doc_id")
-      } finally {
-        // `staged` is the shared stage-once fixture — it outlives the run
-        StagedEvents.deleteRecursively(out)
-        StagedEvents.deleteRecursively(cp)
       }
     }
 }

@@ -193,15 +193,12 @@ object EncodeIngest {
     * regenerated dataset flips the stamp and re-stages.
     */
   private[graft] def stagedRing(spark: SparkSession, sfDir: String,
-      sources: Int): java.nio.file.Path = {
-    val key = graft.queries.ContentStamp.of(
-      java.nio.file.Paths.get(sfDir, "embeddings.parquet").toString)
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_encode_ring_${sources}_$key"
-    graft.ops.Multimodal.stageOnce(dir) { tmp =>
+      sources: Int): java.nio.file.Path =
+    StagedEvents.stageOnceFixture(s"encode_ring_$sources", version = 1,
+      java.nio.file.Paths.get(sfDir, "embeddings.parquet").toString) { root =>
       val emb = graft.tables.Tables.embeddings(spark, sfDir)
       require(emb.head(1).nonEmpty,
         s"$sfDir/embeddings.parquet is empty — cannot stage an encode-at-ingest replay")
-      val root = java.nio.file.Paths.get(tmp)
       (0 until sources).foreach { src =>
         val d0 = if (sources == 1) root else {
           val dd = root.resolve(s"src$src"); Files.createDirectories(dd); dd
@@ -212,11 +209,7 @@ object EncodeIngest {
             d0, s"b${b}_vectors.parquet", 60 - 15 * b)
         }
       }
-      // stageOnce's commit marker (hidden to batch and stream readers)
-      Files.createFile(root.resolve("_SUCCESS"))
     }
-    java.nio.file.Paths.get(dir)
-  }
 
   private def drainEncode(spark: SparkSession, sfDir: String,
       cents: IndexedSeq[Seq[(Int, Array[Long])]],

@@ -1,11 +1,8 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** MULTIMODAL contamination gate — `stream_contam_gate`'s media twin,
@@ -59,7 +56,6 @@ object MediaContamGate {
 
   def audit(spark: SparkSession, sfDir: String): DataFrame =
     graft.tables.Tables.withShufflePartitions(spark, 4) {
-      import spark.implicits._
       val n = 120
       // eval band set from the generator closed forms — ≤ 4·|eval| pairs,
       // packed (bj << 16 | bv); bounded by the benchmark suite, never the
@@ -72,62 +68,45 @@ object MediaContamGate {
       val bandsLit = typedLit(evalBands)
 
       val dir = graft.ops.Multimodal.audioTableDir(spark, n)
-      val out = Files.createTempDirectory("media-contam-sink")
-      val cp = Files.createTempDirectory("media-contam-cp")
-      try {
-        val schema = spark.read.parquet(dir).schema
-        implicit val enc = RowEncoder.encoderFor(gatedType)
-        val routed = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "4")
-          .parquet(dir)
-          .mapPartitions { rows =>
-            rows.map { r =>
-              val id = r.getAs[Long]("media_id")
-              val payload = r.getAs[Array[Byte]]("media")
-              val kind = graft.ops.MediaCodec.decode(payload)
-                .map(_.kind).getOrElse("unknown")
-              Row(id, kind, fingerprint(payload).getOrElse(
-                throw new IllegalStateException(s"media $id failed to fingerprint")))
-            }
-          }.toDF()
-          // 4 packed (bj << 16 | band) values per row probed against the
-          // ≤44-entry eval band literal — tiny per-row work next to the
-          // decode. The flag threshold is ≥2 MATCHING BANDS: a single
-          // band match flooded false positives on the ramp-image corpus
-          // (27 of 73 clean images flagged — correlated low-frequency
-          // DCT blocks collide 16-bit bands; measured, first cut), while
-          // every re-upload the gate exists to refuse keeps ≥3 intact
-          // bands (shifted copies fingerprint identically, requantized
-          // ones flip ≤ a couple of near-tie bits), so the two-band rule
-          // keeps the refusal guarantee and a false flag now needs two
-          // simultaneous 16-bit collisions.
-          .withColumn("bds", expr("transform(sequence(0, 3), j -> " +
-            "shiftleft(cast(j as bigint), 16) | (shiftright(fp, j * 16) & 65535))"))
-          .select(col("media_id"), col("kind"),
-            when(size(array_intersect(col("bds"), bandsLit)) >= 2, lit("contam"))
-              .otherwise(lit("clean")).as("verdict"))
-        val q = routed.writeStream
-          .format("parquet")
-          .option("path", out.toString)
-          .option("checkpointLocation", cp.toString)
-          .partitionBy("verdict")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        // bounded (≤ |kinds| × 2 rows): collected so the result outlives
-        // the temp dirs
-        spark.read.parquet(out.toString)
-          .groupBy(col("kind"), col("verdict").cast("string").as("verdict"))
+      val schema = spark.read.parquet(dir).schema
+      implicit val enc = RowEncoder.encoderFor(gatedType)
+      val routed = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "4")
+        .parquet(dir)
+        .mapPartitions { rows =>
+          rows.map { r =>
+            val id = r.getAs[Long]("media_id")
+            val payload = r.getAs[Array[Byte]]("media")
+            val kind = graft.ops.MediaCodec.decode(payload)
+              .map(_.kind).getOrElse("unknown")
+            Row(id, kind, fingerprint(payload).getOrElse(
+              throw new IllegalStateException(s"media $id failed to fingerprint")))
+          }
+        }.toDF()
+        // 4 packed (bj << 16 | band) values per row probed against the
+        // ≤44-entry eval band literal — tiny per-row work next to the
+        // decode. The flag threshold is ≥2 MATCHING BANDS: a single
+        // band match flooded false positives on the ramp-image corpus
+        // (27 of 73 clean images flagged — correlated low-frequency
+        // DCT blocks collide 16-bit bands; measured, first cut), while
+        // every re-upload the gate exists to refuse keeps ≥3 intact
+        // bands (shifted copies fingerprint identically, requantized
+        // ones flip ≤ a couple of near-tie bits), so the two-band rule
+        // keeps the refusal guarantee and a false flag now needs two
+        // simultaneous 16-bit collisions.
+        .withColumn("bds", expr("transform(sequence(0, 3), j -> " +
+          "shiftleft(cast(j as bigint), 16) | (shiftright(fp, j * 16) & 65535))"))
+        .select(col("media_id"), col("kind"),
+          when(size(array_intersect(col("bds"), bandsLit)) >= 2, lit("contam"))
+            .otherwise(lit("clean")).as("verdict"))
+      Drain.readBack(spark) { out =>
+        Drain.run("mm_contam_gate", routed.writeStream
+          .format("parquet").option("path", out).partitionBy("verdict"))
+      } { sink => // bounded (≤ |kinds| × 2 rows)
+        sink.groupBy(col("kind"), col("verdict").cast("string").as("verdict"))
           .agg(count(lit(1)).as("n_media"),
             min(col("media_id")).as("min_id"), max(col("media_id")).as("max_id"),
             sum(col("media_id")).as("id_sum"))
-          .collect()
-          .map(r => (r.getString(0), r.getString(1), r.getLong(2), r.getLong(3),
-            r.getLong(4), r.getLong(5))).toSeq
-          .toDF("kind", "verdict", "n_media", "min_id", "max_id", "id_sum")
-      } finally {
-        StagedEvents.deleteRecursively(out)
-        StagedEvents.deleteRecursively(cp)
       }
     }
 }

@@ -1,10 +1,7 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** ENCODE-AT-INGEST for the LEXICAL index — the text-side twin of
   * [[EncodeIngest]]: documents arrive in micro-batches, are tokenized
@@ -26,12 +23,9 @@ object PostingsIngest {
 
   def inventory(spark: SparkSession, sfDir: String): DataFrame =
     graft.tables.Tables.withShufflePartitions(spark, 4) {
-      import spark.implicits._
-      val out = Files.createTempDirectory("postings-ingest-idx")
-      val cp = Files.createTempDirectory("postings-ingest-cp")
       // doc-parity arrival fixture: pure function of the documents table,
       // staged once per content stamp and shared (the sink + checkpoint
-      // dirs above stay per-invocation — the query writes them)
+      // dirs stay per-invocation — the query writes them)
       val staged = StagedEvents.stageOnceFixture("postings_ingest_src", version = 1,
         java.nio.file.Paths.get(sfDir, "documents.parquet").toString) { tmp =>
         val docs = graft.tables.Tables.documents(spark, sfDir)
@@ -42,40 +36,27 @@ object PostingsIngest {
         StagedEvents.writePart(docs.filter(col("doc_id") % 2 === 1),
           tmp, "b1_docs.parquet", 45)
       }
-      try {
-        val schema =
-          spark.read.parquet(staged.resolve("b0_docs.parquet").toString).schema
-        val postings = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(staged.toString)
-          .select(col("doc_id"),
-            filter(split(trim(col("text")), "\\s+"), t => length(t) > 0).as("t"))
-          .select(col("doc_id"), col("t"),
-            explode(array_distinct(col("t"))).as("term"))
-          .select(col("doc_id"), col("term"),
-            size(filter(col("t"), x => x === col("term"))).cast("long").as("tf"))
-          .withColumn("bucket",
-            (conv(substring(md5(col("term")), 1, 15), 16, 10).cast("long")
-              % 16).cast("int"))
-        val q = postings.writeStream
-          .format("parquet")
-          .option("path", out.toString)
-          .option("checkpointLocation", cp.toString)
-          .partitionBy("bucket")
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        // bounded (16 rows): collected so the result outlives the temp dirs
-        spark.read.parquet(out.toString)
-          .groupBy(col("bucket").cast("int").as("bucket"))
+      val schema =
+        spark.read.parquet(staged.resolve("b0_docs.parquet").toString).schema
+      val postings = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(staged.toString)
+        .select(col("doc_id"),
+          filter(split(trim(col("text")), "\\s+"), t => length(t) > 0).as("t"))
+        .select(col("doc_id"), col("t"),
+          explode(array_distinct(col("t"))).as("term"))
+        .select(col("doc_id"), col("term"),
+          size(filter(col("t"), x => x === col("term"))).cast("long").as("tf"))
+        .withColumn("bucket",
+          (conv(substring(md5(col("term")), 1, 15), 16, 10).cast("long")
+            % 16).cast("int"))
+      Drain.readBack(spark) { out =>
+        Drain.run("stream_postings_ingest", postings.writeStream
+          .format("parquet").option("path", out).partitionBy("bucket"))
+      } { sink => // bounded (16 rows)
+        sink.groupBy(col("bucket").cast("int").as("bucket"))
           .agg(countDistinct(col("term")).as("n_terms"),
             count(lit(1)).as("n_postings"), sum(col("tf")).as("n_tokens"))
-          .collect()
-          .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3)))
-          .toSeq.toDF("bucket", "n_terms", "n_postings", "n_tokens")
-      } finally {
-        StagedEvents.deleteRecursively(out)
-        StagedEvents.deleteRecursively(cp)
       }
     }
 }

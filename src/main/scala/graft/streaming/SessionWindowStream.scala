@@ -32,20 +32,15 @@ object SessionWindowStream {
 
   def apply(spark: SparkSession, sfDir: String): DataFrame =
     graft.tables.Tables.withShufflePartitions(spark, 4) {
-      val (staged, schema) = StagedEvents.stage(spark, sfDir)
-      locally {
-        val sessions = spark.readStream.schema(schema)
-          .parquet(staged.toString)
-          .transform(graft.tables.Tables.toEventTime(_, "ts"))
-          .withWatermark("ts", "30 minutes")
-          .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-          .agg(
-            sum(when(col("event_id") >= 0, 1L).otherwise(0L)).as("n_events"),
-            ((max(unix_micros(col("ts"))) - min(unix_micros(col("ts"))))
-              / 1000000.0).as("duration_sec"))
-        Drain.toMemory(spark, "stream_session_window", sessions)
-          .filter(col("n_events") > 0)
-          .select(col("user_id"), col("n_events"), col("duration_sec"))
-      }
+      val sessions = StagedEvents.eventStream(spark, sfDir)
+        .withWatermark("ts", "30 minutes")
+        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
+        .agg(
+          sum(when(col("event_id") >= 0, 1L).otherwise(0L)).as("n_events"),
+          ((max(unix_micros(col("ts"))) - min(unix_micros(col("ts"))))
+            / 1000000.0).as("duration_sec"))
+      Drain.toMemory(spark, "stream_session_window", sessions)
+        .filter(col("n_events") > 0)
+        .select(col("user_id"), col("n_events"), col("duration_sec"))
     }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Shared staging for the finite-input stateful streaming oracles
@@ -32,6 +32,10 @@ object StagedEvents {
     * next to the content stamp: bump it whenever `build` changes what it
     * writes, or the stale fixture of the old `build` is silently reused
     * until the dataset is regenerated.
+    *
+    * `build` writes into the temp dir; the root `_SUCCESS` commit marker
+    * (hidden to batch and stream readers) is added unless `build` already
+    * left one there — a Spark write straight into the temp dir does.
     */
   def stageOnceFixture(name: String, version: Int, sourcePath: String)(
       build: Path => Unit): Path = {
@@ -40,29 +44,41 @@ object StagedEvents {
     graft.ops.Multimodal.stageOnce(dir) { tmp =>
       val t = java.nio.file.Paths.get(tmp)
       build(t)
-      // stageOnce's commit marker (underscore-prefixed: both the batch
-      // reader and the streaming file source ignore it as hidden)
-      Files.createFile(t.resolve("_SUCCESS"))
+      val done = t.resolve("_SUCCESS")
+      if (!Files.exists(done)) Files.createFile(done)
     }
     java.nio.file.Paths.get(dir)
   }
 
-  /** Stage `sfDir`'s events plus the per-user sentinels — a pure function
-    * of the events table, staged ONCE per content stamp via
-    * [[stageOnceFixture]] and shared by the five sentinel-closed stateful
-    * replays (sessionize, session-window, latest-state, scd2, asof);
-    * returns (staging dir, event schema). Previously each invocation
-    * re-wrote the identical sentinel file (schema probe + max(ts) + the
-    * distinct-users write) into a fresh temp dir per rep.
+  /** The event-time stream over `sfDir`'s events plus the per-user
+    * sentinels — a pure function of the events table, staged ONCE per
+    * content stamp via [[stageOnceFixture]] and shared by the five
+    * sentinel-closed stateful replays (sessionize, session-window,
+    * latest-state, scd2, asof). `ts` is already event time
+    * ([[graft.tables.Tables.toEventTime]]).
     */
-  def stage(spark: SparkSession, sfDir: String): (Path, org.apache.spark.sql.types.StructType) = {
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val dir = stageOnceFixture("staged_events", version = 1,
-      java.nio.file.Paths.get(sfDir, "events.parquet").toString) { tmp =>
+  def eventStream(spark: SparkSession, sfDir: String): DataFrame = {
+    val src = java.nio.file.Paths.get(sfDir, "events.parquet").toString
+    val schema = spark.read.parquet(src).schema
+    val dir = stageOnceFixture("staged_events", version = 1, src) { tmp =>
       stageInto(spark, sfDir, tmp)
     }
-    (dir, schema)
+    spark.readStream.schema(schema).parquet(dir.toString)
+      .transform(graft.tables.Tables.toEventTime(_, "ts"))
   }
+
+  /** `hours` past the max `ts` of `raw`, in the SAME Spark (and thus
+    * parquet physical) type as its `ts` — epoch-nanos long or timestamp —
+    * so a staged sentinel reads under the raw file's schema: nanos
+    * arithmetic in the long form, interval arithmetic otherwise.
+    */
+  private[streaming] def futureTs(raw: DataFrame, hours: Long): Any =
+    raw.schema("ts").dataType match {
+      case org.apache.spark.sql.types.LongType =>
+        raw.agg(max(col("ts"))).head().getLong(0) + hours * 3600 * 1000000000L
+      case _ =>
+        raw.agg((max(col("ts")) + expr(s"INTERVAL $hours HOURS")).as("t")).head().get(0)
+    }
 
   private def stageInto(spark: SparkSession, sfDir: String, stage: Path): Unit = {
     val raw = spark.read.parquet(s"$sfDir/events.parquet")
@@ -72,16 +88,8 @@ object StagedEvents {
     // reason instead.
     require(raw.head(1).nonEmpty,
       s"$sfDir/events.parquet is empty — cannot stage a streaming sentinel")
-    // The sentinel's ts must carry the SAME Spark (and thus parquet
-    // physical) type as the raw file — epoch-nanos long or timestamp —
-    // so the staged directory reads under one schema. The +1 year is
-    // nanos arithmetic in the long form, interval arithmetic otherwise.
-    val sentinelTs: Any = raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.agg(max(col("ts"))).head().getLong(0) + 365L * 24 * 3600 * 1000000000L
-      case _ =>
-        raw.agg((max(col("ts")) + expr("INTERVAL 365 DAYS")).as("t")).head().get(0)
-    }
+    // one year past the data: the sentinel closes every per-key state
+    val sentinelTs = futureTs(raw, 365L * 24)
     val sentinel = raw.select(col("user_id")).distinct()
       .select(
         lit(-1L).as("event_id"),

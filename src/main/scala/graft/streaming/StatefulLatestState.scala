@@ -75,10 +75,7 @@ object StatefulLatestState {
 
   private def applyInner(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val (stage, schema) = StagedEvents.stage(spark, sfDir)
-    val compacted = spark.readStream.schema(schema)
-      .parquet(stage.toString)
-      .transform(graft.tables.Tables.toEventTime(_, "ts"))
+    val compacted = StagedEvents.eventStream(spark, sfDir)
       .select(col("user_id"), col("event_id"), col("value"), col("ts").as("tsm"))
       .withColumn("us", unix_micros(col("tsm")))
       .withWatermark("tsm", "30 minutes")

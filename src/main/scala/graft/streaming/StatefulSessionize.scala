@@ -110,10 +110,7 @@ object StatefulSessionize {
   private def applyInner(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
     // sentinel-staged finite input (shared protocol: [[StagedEvents]])
-    val (stage, schema) = StagedEvents.stage(spark, sfDir)
-    val sessions = spark.readStream.schema(schema)
-      .parquet(stage.toString)
-      .transform(graft.tables.Tables.toEventTime(_, "ts"))
+    val sessions = StagedEvents.eventStream(spark, sfDir)
       .select(
         col("user_id"), col("event_id"),
         col("ts").as("tsm"))

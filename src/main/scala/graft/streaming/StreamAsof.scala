@@ -85,10 +85,7 @@ object StreamAsof {
   def apply(spark: SparkSession, sfDir: String): DataFrame =
     graft.tables.Tables.withShufflePartitions(spark, 4) {
       import spark.implicits._
-      val (stage, schema) = StagedEvents.stage(spark, sfDir)
-      val enriched = spark.readStream.schema(schema)
-        .parquet(stage.toString)
-        .transform(graft.tables.Tables.toEventTime(_, "ts"))
+      val enriched = StagedEvents.eventStream(spark, sfDir)
         .filter(col("event_id") === -1L ||
           col("event_type").isin("view", "purchase"))
         .select(col("user_id"), col("event_id"),

@@ -6,7 +6,6 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** STREAMED GDPR ERASURE — `cdc_forget_keys`' serving twin, closing the
   * erasure loop at the edge: forget keys ARRIVE as a stream (deletion
@@ -106,7 +105,6 @@ object StreamForgetKeys {
       import spark.implicits._
       val tableDir = Files.createTempDirectory("stream-forget-table")
       val keysDir = Files.createTempDirectory("stream-forget-keys")
-      val cp = Files.createTempDirectory("stream-forget-cp")
       val appliedLog = Files.createTempDirectory("stream-forget-applied")
       try {
         graft.ops.ForgetKeys.stage(spark, sfDir, tableDir)
@@ -130,7 +128,7 @@ object StreamForgetKeys {
         val schema =
           spark.read.parquet(keysDir.resolve("b0_keys.parquet").toString).schema
         val rewrote = scala.collection.mutable.Set.empty[Int]
-        val q = spark.readStream.schema(schema)
+        Drain.run("stream_forget_keys", spark.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(keysDir.toString)
           .writeStream
@@ -139,11 +137,7 @@ object StreamForgetKeys {
               rewrote ++= applyForgetBatch(spark, tableDir, appliedLog, keys, batchId)
             }
             ()
-          }
-          .option("checkpointLocation", cp.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+          })
         // bounded (≤16 rows): the post-erasure census from the FILES —
         // the purge proven from the rewritten layout, not the plan
         val after = spark.read.parquet(tableDir.toString)
@@ -158,7 +152,6 @@ object StreamForgetKeys {
       } finally {
         StagedEvents.deleteRecursively(tableDir)
         StagedEvents.deleteRecursively(keysDir)
-        StagedEvents.deleteRecursively(cp)
         StagedEvents.deleteRecursively(appliedLog)
       }
     }

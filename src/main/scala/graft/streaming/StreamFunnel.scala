@@ -54,15 +54,8 @@ object StreamFunnel {
         // user −1 and a far-future 'purchase' for user −2. They can never
         // join (distinct users) and the view-sentinel can never emit (its
         // own 30-minute window closes only past the watermark's ceiling),
-        // so the output stays sentinel-free by construction. The ts must
-        // carry the SAME type as the raw file (epoch-nanos long or
-        // timestamp) — the StagedEvents.stage discipline.
-        val sentinelTs: Any = ev.schema("ts").dataType match {
-          case org.apache.spark.sql.types.LongType =>
-            ev.agg(max(col("ts"))).head().getLong(0) + 2L * 3600 * 1000000000L
-          case _ =>
-            ev.agg((max(col("ts")) + expr("INTERVAL 2 HOURS")).as("t")).head().get(0)
-        }
+        // so the output stays sentinel-free by construction.
+        val sentinelTs = StagedEvents.futureTs(ev, 2)
         val sentinel = spark.range(2)
           .select((-col("id") - 1).as("user_id"))
           .select(lit(-1L).as("event_id"), lit(sentinelTs).as("ts"),

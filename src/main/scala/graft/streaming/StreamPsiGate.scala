@@ -1,12 +1,9 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** PSI DRIFT GATE AT THE INGEST EDGE — the serving twin of
   * `diag_psi_drift`, and the suite's first `foreachBatch` operator: each
@@ -70,7 +67,7 @@ object StreamPsiGate {
         val schema = spark.read
           .parquet(staged.resolve("b0_users_even.parquet").toString).schema
         val out = ArrayBuffer.empty[(Int, String, Long, Long, Long)]
-        val q = spark.readStream.schema(schema)
+        Drain.run("stream_psi_gate", spark.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(staged.toString)
           .writeStream
@@ -130,10 +127,7 @@ object StreamPsiGate {
                 r.getAs[Long]("psi_nano")))
             }
             () // foreachBatch wants Unit
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+          })
         out.toSeq.toDF("batch_ord", "event_type", "n_ref", "n_cur", "psi_nano")
           .select(col("batch_ord"), col("event_type"), col("n_ref"), col("n_cur"),
             round(col("psi_nano").cast("double") / 1e9, 6).as("psi"),

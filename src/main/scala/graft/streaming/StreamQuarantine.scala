@@ -1,10 +1,7 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** The WRITE side of expectations at the edge — the streamed twin of
   * `diag_quarantine`'s documents checks: rows arrive in micro-batches,
@@ -31,9 +28,6 @@ object StreamQuarantine {
 
   def audit(spark: SparkSession, sfDir: String): DataFrame =
     graft.tables.Tables.withShufflePartitions(spark, 4) {
-      import spark.implicits._
-      val out = Files.createTempDirectory("stream-quarantine-sink")
-      val cp = Files.createTempDirectory("stream-quarantine-cp")
       // doc-parity arrival fixture: pure function of the documents table,
       // staged once per content stamp and shared (sink + checkpoint dirs
       // stay per-invocation — the query writes them)
@@ -47,59 +41,45 @@ object StreamQuarantine {
         StagedEvents.writePart(docs.filter(col("doc_id") % 2 =!= 0),
           tmp, "b1_docs.parquet", 45)
       }
-      try {
-        val schema =
-          spark.read.parquet(staged.resolve("b0_docs.parquet").toString).schema
-        // the four documents checks of diag_quarantine, verbatim: a row
-        // fans out one quarantine entry per VIOLATED check (empty array →
-        // the row never reaches the sink)
-        val checks: Seq[(String, String, org.apache.spark.sql.Column)] = Seq(
-          ("text_nonblank", "error",
-            col("text").isNull || trim(col("text")) === ""),
-          ("n_chars_consistent", "error",
-            col("n_chars") =!= length(col("text"))),
-          ("text_len_ge_60", "error", col("n_chars") < 60),
-          ("text_len_ge_100", "warn", col("n_chars") < 100))
-        val arr = array(checks.map { case (n, sev, pred) =>
-          when(pred, struct(lit(n).as("check_name"), lit(sev).as("severity")))
-        }: _*)
-        val routed = spark.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1")
-          .parquet(staged.toString)
-          .select(col("doc_id").cast("string").as("row_key"),
-            explode(filter(arr, x => x.isNotNull)).as("c"))
-          .select(col("row_key"), col("c.check_name").as("check_name"),
-            col("c.severity").as("severity"))
-        // the quarantine table is written through the batchId-keyed
-        // idempotent commit ([[IdempotentBatchSink]]): a micro-batch
-        // re-run after a failure (same batchId — the foreachBatch replay
-        // contract) replaces nothing instead of appending duplicate
-        // reject rows. partitionBy(check_name) inside each batch dir
-        // keeps the triage layout (open one check's directory).
-        val q = routed.writeStream
+      val schema =
+        spark.read.parquet(staged.resolve("b0_docs.parquet").toString).schema
+      // the four documents checks of diag_quarantine, verbatim: a row
+      // fans out one quarantine entry per VIOLATED check (empty array →
+      // the row never reaches the sink)
+      val checks: Seq[(String, String, org.apache.spark.sql.Column)] = Seq(
+        ("text_nonblank", "error",
+          col("text").isNull || trim(col("text")) === ""),
+        ("n_chars_consistent", "error",
+          col("n_chars") =!= length(col("text"))),
+        ("text_len_ge_60", "error", col("n_chars") < 60),
+        ("text_len_ge_100", "warn", col("n_chars") < 100))
+      val arr = array(checks.map { case (n, sev, pred) =>
+        when(pred, struct(lit(n).as("check_name"), lit(sev).as("severity")))
+      }: _*)
+      val routed = spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(staged.toString)
+        .select(col("doc_id").cast("string").as("row_key"),
+          explode(filter(arr, x => x.isNotNull)).as("c"))
+        .select(col("row_key"), col("c.check_name").as("check_name"),
+          col("c.severity").as("severity"))
+      // the quarantine table is written through the batchId-keyed
+      // idempotent commit ([[IdempotentBatchSink]]): a micro-batch
+      // re-run after a failure (same batchId — the foreachBatch replay
+      // contract) replaces nothing instead of appending duplicate
+      // reject rows. partitionBy(check_name) inside each batch dir
+      // keeps the triage layout (open one check's directory).
+      Drain.readBack(spark) { out =>
+        Drain.run("stream_quarantine", routed.writeStream
           .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            IdempotentBatchSink.commit(batch, out.toString, batchId,
-              Seq("check_name"))
+            IdempotentBatchSink.commit(batch, out, batchId, Seq("check_name"))
             ()
-          }
-          .option("checkpointLocation", cp.toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        // bounded (≤4 rows — one per check): collected so the result
-        // outlives the temp dirs
-        spark.read.parquet(out.toString)
-          .groupBy(col("check_name").cast("string").as("check_name"),
-            col("severity"))
+          })
+      } { sink => // bounded (≤4 rows — one per check)
+        sink.groupBy(col("check_name").cast("string").as("check_name"),
+          col("severity"))
           .agg(count(lit(1)).as("n_rows"),
             min(col("row_key")).as("min_key"), max(col("row_key")).as("max_key"))
-          .collect()
-          .map(r => (r.getString(0), r.getString(1), r.getLong(2),
-            r.getString(3), r.getString(4))).toSeq
-          .toDF("check_name", "severity", "n_rows", "min_key", "max_key")
-      } finally {
-        StagedEvents.deleteRecursively(out)
-        StagedEvents.deleteRecursively(cp)
       }
     }
 }

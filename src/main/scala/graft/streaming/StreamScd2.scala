@@ -104,10 +104,7 @@ object StreamScd2 {
   def apply(spark: SparkSession, sfDir: String): DataFrame =
     graft.tables.Tables.withShufflePartitions(spark, 4) {
       import spark.implicits._
-      val (stage, schema) = StagedEvents.stage(spark, sfDir)
-      val versions = spark.readStream.schema(schema)
-        .parquet(stage.toString)
-        .transform(graft.tables.Tables.toEventTime(_, "ts"))
+      val versions = StagedEvents.eventStream(spark, sfDir)
         .select(col("user_id"), col("event_id"),
           unix_micros(col("ts")).as("us"),
           // tier 0 ONLY for the staged flush sentinels (event_id == -1,

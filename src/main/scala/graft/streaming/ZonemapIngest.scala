@@ -4,7 +4,6 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** ZONE-MAP APPEND→REFRESH→SERVE — the lifecycle close for s14's manifest
   * layout, the same pattern the IVF-PQ index (compaction/recompaction),
@@ -37,11 +36,9 @@ object ZonemapIngest {
   /** Stage-once BASE layout: range-clustered data + manifest, base slice
     * only (the table as of the last compaction).
     */
-  private def baseDir(s: SparkSession, d: String): String = {
-    val key = graft.queries.ContentStamp.of(
-      java.nio.file.Paths.get(d, "events.parquet").toString)
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_events_zonemap_base_$key"
-    graft.ops.Multimodal.stageOnce(dir) { tmp =>
+  private def baseDir(s: SparkSession, d: String): String =
+    StagedEvents.stageOnceFixture("events_zonemap_base", version = 1,
+      java.nio.file.Paths.get(d, "events.parquet").toString) { tmp =>
       val base = graft.tables.Tables.events(s, d)
         .filter(col("event_id") % 8 =!= 0)
         .withColumn("ts", unix_micros(col("ts")))
@@ -50,10 +47,7 @@ object ZonemapIngest {
         .write.mode("overwrite").parquet(s"$tmp/data")
       stats(s.read.parquet(s"$tmp/data"))
         .coalesce(1).write.mode("overwrite").parquet(s"$tmp/manifest")
-      java.nio.file.Files.createFile(java.nio.file.Paths.get(tmp, "_SUCCESS"))
-    }
-    dir
-  }
+    }.toString
 
   def apply(spark: SparkSession, sfDir: String): DataFrame =
     graft.tables.Tables.withShufflePartitions(spark, 4) {
@@ -81,17 +75,13 @@ object ZonemapIngest {
         val schema = spark.read
           .parquet(staged.resolve("b0_users_even.parquet").toString).schema
         val sink = work.resolve("delta").toString
-        val q = spark.readStream.schema(schema)
+        Drain.run("stream_zonemap_ingest", spark.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1")
           .parquet(staged.toString)
           .repartition(1) // one delta file per arriving batch
           .writeStream
           .format("parquet")
-          .option("path", sink)
-          .option("checkpointLocation", work.resolve("ckpt").toString)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+          .option("path", sink))
         // INCREMENTAL manifest refresh: scans ONLY the delta files —
         // refresh cost proportional to the append, never the table.
         // Enumerated through spark.read.parquet(sink).inputFiles, which

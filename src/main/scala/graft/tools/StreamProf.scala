@@ -50,7 +50,7 @@ object StreamProf {
             sums.map { case (f, ms) => s"$f=${ms}ms" }.mkString(" "))
         }
         if (progress.isEmpty)
-          println(s"[streamprof] $n rep$rep wall=${f"$wall%.3f"}s (no Drain progress — foreachBatch query)")
+          println(s"[streamprof] $n rep$rep wall=${f"$wall%.3f"}s (ran no stream)")
         graft.queries.SessionCaches.releaseLoopCheckpoints(spark)
       }
     }
