@@ -23,8 +23,8 @@ case class DesignTables(samples: DataFrame, files: DataFrame)
   * (reference: diann2msstats.py:141-240).
   *
   * Design files are a handful of rows of run metadata, so they are parsed on
-  * the driver and become broadcast-sized DataFrames — at cluster scale these
-  * are the small side of every join, never shuffled.
+  * the driver and both formats return LocalRelation-backed tables: reading
+  * them back (as [[graft.ops.DiannToMsstats]] does) runs no Spark job.
   */
 object DesignReader {
 
@@ -62,47 +62,51 @@ object DesignReader {
         s"Unified design file is missing required columns: ${missing.sorted.mkString(", ")}. " +
           s"Expected: ${required.sorted.mkString(", ")}")
 
-    val withRun = df.withColumn("run", Peptides.trueStem(col("Filename")))
+    // one driver-side copy of the (few-row) table; everything below is Scala
+    val hasLabel = df.columns.contains("Label")
+    val cols = Seq("Filename", "Fraction", "Sample", "Condition", "BioReplicate") ++
+      (if (hasLabel) Seq("Label") else Nil)
+    val rows = df.select((cols.map(col) :+ Peptides.trueStem(col("Filename")).as("run")): _*)
+      .collect().toSeq.map(r => (cols :+ "run").zipWithIndex.map { case (c, i) =>
+        c -> r.getString(i) }.toMap)
 
-    val multiplexed = df.columns.contains("Label") &&
-      withRun.agg(countDistinct(col("Label"))).head().getLong(0) > 1
+    // an empty Label cell is null here (pandas astype(str) would have made
+    // it "nan"): it is not a label, and it can't match either label family
+    val labels = if (hasLabel) rows.map(_("Label")).filter(_ != null).distinct else Nil
+    val multiplexed = labels.size > 1
 
-    val files =
+    val fileCols = Seq("Filename", "Fraction", "Sample", "run") ++
+      (if (multiplexed) Seq("Label") else Nil)
+    val fileRows =
       if (multiplexed) {
         // whole-value SILAC / mTRAQ label replacement (diann2msstats.py:182-199)
-        // null-safe: an empty Label cell is null here (pandas astype(str)
-        // would have made it "nan"); it can't match either label family
-        val labels = withRun.select(lower(col("Label"))).distinct().collect()
-          .map(_.getString(0)).filter(_ != null)
-        val silac = labels.exists(_.contains("silac"))
-        val mtraq = labels.exists(_.contains("mtraq"))
+        val lower = labels.map(_.toLowerCase(java.util.Locale.ROOT))
+        val silac = lower.exists(_.contains("silac"))
+        val mtraq = lower.exists(_.contains("mtraq"))
         val silacMap = Map("SILAC light" -> "L", "SILAC medium" -> "M", "SILAC heavy" -> "H")
         val mtraqMap = Map("MTRAQ0" -> "0", "MTRAQ4" -> "4", "MTRAQ8" -> "8")
-        val mapped0 = if (silac) silacMap.foldLeft(col("Label")) { case (c, (k, v)) =>
-          when(c === k, v).otherwise(c)
-        } else col("Label")
-        val mapped = if (mtraq) mtraqMap.foldLeft(mapped0) { case (c, (k, v)) =>
-          when(c === k, v).otherwise(c)
-        } else mapped0
-        withRun.withColumn("Label", mapped)
-          .select("Filename", "Fraction", "Sample", "run", "Label")
-      } else withRun.select("Filename", "Fraction", "Sample", "run")
+        val mapping = (if (silac) silacMap else Map.empty[String, String]) ++
+          (if (mtraq) mtraqMap else Map.empty[String, String])
+        rows.map(r => r.updated("Label", mapping.getOrElse(r("Label"), r("Label"))))
+      } else rows
 
     // each Sample must map to exactly one (Condition, BioReplicate)
-    val mapping = withRun.select("Sample", "Condition", "BioReplicate").distinct()
-    val dupSamples = mapping.groupBy("Sample").count().filter(col("count") > 1)
-      .select("Sample").collect().map(_.get(0).toString)
+    val mapping = rows.map(r => Seq(r("Sample"), r("Condition"), r("BioReplicate"))).distinct
+    val dupSamples = mapping.groupBy(_.head).collect { case (s, m) if m.size > 1 => String.valueOf(s) }
     if (dupSamples.nonEmpty)
       throw new IllegalArgumentException(
-        s"Inconsistent experimental design: Sample(s) ${dupSamples.sorted.mkString(", ")} " +
+        s"Inconsistent experimental design: Sample(s) ${dupSamples.toSeq.sorted.mkString(", ")} " +
           "map to multiple (Condition, BioReplicate) combinations.")
 
-    val samples = mapping
-      .withColumnRenamed("Condition", "MSstats_Condition")
-      .withColumnRenamed("BioReplicate", "MSstats_BioReplicate")
-
+    val samples = local(spark, Seq("Sample", "MSstats_Condition", "MSstats_BioReplicate"), mapping)
+    val files = local(spark, fileCols, fileRows.map(r => fileCols.map(r)))
     DesignTables(samples, files)
   }
+
+  /** A string-typed LocalRelation: collecting it runs no Spark job. */
+  private def local(spark: SparkSession, cols: Seq[String], rows: Seq[Seq[String]]): DataFrame =
+    spark.createDataFrame(rows.map(Row.fromSeq).asJava,
+      StructType(cols.map(StructField(_, StringType))))
 
   /** Legacy two-tables-in-one-file format: file table, blank line, sample
     * table (diann2msstats.py:222-240). All columns string-typed, as in the

@@ -538,8 +538,9 @@ object Relational {
     // scales with sf, so the choice belongs to AQE — it broadcasts while the
     // side fits (which the plan test pins at test scale) and degrades to a
     // shuffle join instead of an executor OOM at 100×. The reference's
-    // genuinely-bounded broadcast (the design table, bounded by run count)
-    // is pinned where that contract actually holds: DiannToMsstats.
+    // genuinely-bounded side (the design table, bounded by run count) is no
+    // join at all in DiannToMsstats: it is resolved on the driver and probed
+    // per row as a hash table (graft.expressions.HashLookup).
     "j1_broadcast_inner" -> ((s, d) => {
       orders(s, d)
         .join(customer(s, d), col("o_custkey") === col("c_custkey"))
@@ -553,8 +554,8 @@ object Relational {
     // diann2msstats.py:92-98,117); right side unique on key. NO broadcast
     // hint: orders grows with scale factor, so pinning it broadcast would
     // OOM an executor at 100× — AQE picks broadcast only while the side
-    // actually fits (the reference's design lookup, which IS bounded, lives
-    // in DiannToMsstats where the broadcast contract holds by construction).
+    // actually fits (the reference's design lookup, which IS bounded, is a
+    // driver-built hash table in DiannToMsstats, not a join).
     "j2_left_m2one" -> ((s, d) => {
       lineitem(s, d)
         .join(orders(s, d), col("l_orderkey") === col("o_orderkey"), "left")

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Path}
+import java.nio.file.{Files, Path, Paths}
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -36,18 +36,54 @@ object StagedEvents {
     * `build` writes into the temp dir; the root `_SUCCESS` commit marker
     * (hidden to batch and stream readers) is added unless `build` already
     * left one there — a Spark write straight into the temp dir does.
+    *
+    * A cold stage first evicts the fixtures it supersedes: `name`'s dirs of
+    * any other version and its legacy unversioned dirs, whatever their
+    * stamp. Dirs of the same version under other stamps (other datasets,
+    * such as another scale) stay, and so does every dir this JVM has
+    * handed out, since a lazily read frame may still scan it. Eviction is
+    * best effort and is not part of the build: a dir that cannot be listed
+    * or deleted (another user's, or one another JVM is evicting too) stays.
     */
   def stageOnceFixture(name: String, version: Int, sourcePath: String)(
       build: Path => Unit): Path = {
     val key = graft.queries.ContentStamp.of(sourcePath)
-    val dir = s"${sys.props("java.io.tmpdir")}/graft_${name}_v${version}_$key"
-    graft.ops.Multimodal.stageOnce(dir) { tmp =>
-      val t = java.nio.file.Paths.get(tmp)
+    val tmpDir = Paths.get(sys.props("java.io.tmpdir"))
+    val dir = tmpDir.resolve(s"graft_${name}_v${version}_$key")
+    if (!Files.exists(dir.resolve("_SUCCESS"))) evictSuperseded(tmpDir, name, version)
+    graft.ops.Multimodal.stageOnce(dir.toString) { tmp =>
+      val t = Paths.get(tmp)
       build(t)
       val done = t.resolve("_SUCCESS")
       if (!Files.exists(done)) Files.createFile(done)
     }
-    java.nio.file.Paths.get(dir)
+    handedOut.add(dir.getFileName.toString)
+    dir
+  }
+
+  /** Names of the fixture dirs [[stageOnceFixture]] has returned in this JVM. */
+  private val handedOut = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  private def evictSuperseded(tmpDir: Path, name: String, version: Int): Unit = {
+    import scala.jdk.CollectionConverters._
+    // the stamp is ContentStamp's 32 hex digits, matched exactly, so a name
+    // never claims a longer name's dirs (events_zonemap vs events_zonemap_base)
+    val fixture = s"graft_${java.util.regex.Pattern.quote(name)}(?:_v(\\d+))?_[0-9a-f]{32}".r
+    def quietly(io: => Unit): Unit =
+      try io catch { case _: java.io.IOException | _: java.io.UncheckedIOException => () }
+    quietly {
+      val listing = Files.list(tmpDir)
+      val stale =
+        try listing.iterator().asScala.filter { p =>
+          val n = p.getFileName.toString
+          n match {
+            case fixture(v) => (v == null || v.toInt != version) && !handedOut.contains(n)
+            case _ => false
+          }
+        }.toVector
+        finally listing.close()
+      stale.foreach(p => quietly(deleteRecursively(p)))
+    }
   }
 
   /** The event-time stream over `sfDir`'s events plus the per-user

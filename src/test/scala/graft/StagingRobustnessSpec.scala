@@ -128,4 +128,38 @@ class StagingRobustnessSpec extends SparkSpec {
       Files.delete(src)
     }
   }
+
+  test("stage-once fixture: a cold stage evicts the versions it supersedes") {
+    import graft.streaming.StagedEvents.{deleteRecursively, stageOnceFixture}
+    val tmpDir = Paths.get(sys.props("java.io.tmpdir"))
+    val name = s"spec_evict_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    val src = Files.createTempFile("graft-fixture-src", ".txt")
+    Files.writeString(src, name)
+    val stamp = graft.queries.ContentStamp.of(src.toString)
+    val otherStamp = stamp.reverse
+    // left by earlier processes: superseded, another scale, and a longer name
+    def fixture(dir: String) = {
+      val d = tmpDir.resolve(dir)
+      Files.createDirectories(d)
+      Files.createFile(d.resolve("_SUCCESS"))
+      d
+    }
+    val superseded = Seq(s"graft_${name}_v1_$stamp", s"graft_${name}_$stamp",
+      s"graft_${name}_v1_$otherStamp").map(fixture)
+    val otherScale = fixture(s"graft_${name}_v2_$otherStamp")
+    val longerName = fixture(s"graft_${name}_base_v1_$stamp")
+    try {
+      val v2 = stageOnceFixture(name, 2, src.toString)(Files.createDirectories(_))
+      assert(superseded.forall(!Files.exists(_)), "superseded versions must be evicted")
+      assert(Files.exists(otherScale), "the same version under another stamp must stay")
+      assert(Files.exists(longerName), "another name's dirs must stay")
+      val left = tmpDir.toFile.list().toSeq.filter(n =>
+        n.startsWith(s"graft_${name}_") && n.endsWith(stamp) && !n.contains("_base_"))
+      assert(left === Seq(v2.getFileName.toString))
+      deleteRecursively(v2)
+    } finally {
+      (superseded ++ Seq(otherScale, longerName)).foreach(deleteRecursively)
+      Files.delete(src)
+    }
+  }
 }
