@@ -35,11 +35,11 @@ object SparkEntry {
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
-    graft.queries.Relational.oracle ++
-      graft.queries.TextOps.oracle ++
-      graft.queries.Similarity.oracle ++
-      graft.queries.Temporal.oracle ++
-      graft.queries.Extended.oracle
+    graft.oracle.Relational.oracle ++
+      graft.oracle.TextOps.oracle ++
+      graft.oracle.Similarity.oracle ++
+      graft.oracle.Temporal.oracle ++
+      graft.oracle.Extended.oracle
 
   /** [[oracleSql]] plus the data-dependent oracles that can only be
     * generated against a concrete data dir (emb_pca_topk embeds its
@@ -57,7 +57,7 @@ object SparkEntry {
   }
 
   private def dataOracles: Seq[(String, (SparkSession, String) => String)] = {
-    import graft.queries.Similarity._
+    import graft.oracle.Similarity._
     Seq(
       "emb_pca_topk" -> pcaOracleSql _,
       "emb_whitening" -> whiteningOracleSql _,
@@ -73,6 +73,6 @@ object SparkEntry {
       "pipeline_hybrid_depth_curve" -> hybridDepthCurveSql _,
       "pipeline_retrieval_metrics" -> hybridMetricsSql _,
       "sim_opq_train_curve" -> opqTrainCurveSql _,
-      "text_quality_isotonic" -> graft.queries.TextOps.isotonicOracleSql _)
+      "text_quality_isotonic" -> graft.oracle.TextOps.isotonicOracleSql _)
   }
 }

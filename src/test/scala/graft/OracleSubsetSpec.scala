@@ -17,6 +17,6 @@ class OracleSubsetSpec extends SparkSpec {
       Set("q1_agg", "text_quality_isotonic"))
     assert(got.keySet === Set("q1_agg", "text_quality_isotonic"))
     assert(got("text_quality_isotonic") ===
-      graft.queries.TextOps.isotonicOracleSql(spark, "/root/testdata/sf0.001"))
+      graft.oracle.TextOps.isotonicOracleSql(spark, "/root/testdata/sf0.001"))
   }
 }
