@@ -6,6 +6,77 @@ import graft.queries.Similarity.{KnnBlocks, KnnIters, KnnK, LblBlocks, LblK,
 
 /** DuckDB oracle SQL for [[graft.queries.Similarity]]'s queries. */
 object Similarity {
+  /** The embedding corpus as DuckDB double lists, `c(vec_id, v)`. */
+  private val corpusCte = "c AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)"
+
+  /** Per-dimension integer micro-unit coordinates over [[corpusCte]]: one
+    * (vec_id, `dim`, xu) row per vector dimension, `dim` 0-based and
+    * xu = round(v[i] * 10^6) — the SQL twin of the engine's `vu` arrays.
+    */
+  private def microUnitsSql(dim: String): String =
+    s"""SELECT vec_id, i - 1 AS $dim, CAST(round(v[i] * 1000000) AS BIGINT) AS xu
+             FROM c, LATERAL (SELECT unnest(range(1, len(v) + 1)) AS i) r"""
+
+  /** The exact integer-L2² top-5 truth over a coordinate table `coords`
+    * joined on its coordinate columns `keys`: `dist` holds every probe's
+    * (vec_id < 10) squared distance to every other vector, `top` its 5
+    * nearest, ties broken by vec_id — the SQL twin of [[pqExactTop5]].
+    */
+  private def exactTop5Ctes(coords: String, keys: Seq[String],
+      dist: String, top: String): String =
+    s"""${probeD2Cte(coords, keys, dist)},
+      $top AS (SELECT q_id, vec_id FROM $dist
+            $top5Cut)"""
+
+  /** Every probe's (vec_id < 10) squared micro-unit distance to every
+    * other vector: `dist(q_id, vec_id, d2)`.
+    */
+  private def probeD2Cte(coords: String, keys: Seq[String], dist: String): String =
+    s"""
+      $dist AS (SELECT p.vec_id AS q_id, b.vec_id,
+                    sum((p.xu - b.xu) * (p.xu - b.xu)) AS d2
+             FROM $coords p JOIN $coords b ON ${keys.map(k => s"p.$k = b.$k").mkString(" AND ")}
+             WHERE p.vec_id < 10 AND b.vec_id <> p.vec_id
+             GROUP BY 1, 2)"""
+
+  /** The per-probe top-5 cut by (d2, vec_id). */
+  private val top5Cut = "QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY d2, vec_id) <= 5"
+
+  /** Recall@5 per probe of an approximate top-5 CTE `a` against the truth
+    * CTE `x` — the oracle twin of [[recallAt5]].
+    */
+  private val recallAt5Sql = """
+      SELECT x.q_id, CAST(count(a.vec_id) AS BIGINT) AS n_hits,
+             round(count(a.vec_id) / 5.0, 6) AS recall
+      FROM x LEFT JOIN a ON x.q_id = a.q_id AND x.vec_id = a.vec_id
+      GROUP BY x.q_id"""
+
+  /** Recall@5 of the `(q_id, vec_id)` rows of `approxSql` against the
+    * exact integer-L2² truth on the [[quantVuCtes]] coordinates.
+    */
+  private def exactRecallSql(approxSql: String): String =
+    s"""$quantVuCtes,${exactTop5Ctes("vu", Seq("dim"), "ex", "x")},
+      a AS (SELECT q_id, vec_id FROM ($approxSql))$recallAt5Sql"""
+
+  /** The exact re-rank tail of a PQ shortlist: `short` keeps the
+    * `depth` best ADC rows of `adc(q_id, vec_id, adc_u)`, `ex` their
+    * exact integer-L2² distances over `xu`, and the select the top-5 with
+    * exact distances and ranks.
+    */
+  private def exactRerankSql(adc: String, depth: Any, short: String, ex: String): String =
+    s"""$short AS (SELECT q_id, vec_id FROM $adc
+                 QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY adc_u, vec_id) <= $depth),
+      $ex AS (SELECT s.q_id, s.vec_id,
+                     CAST(sum((p.xu - b.xu) * (p.xu - b.xu)) AS BIGINT) AS d2
+              FROM $short s JOIN xu p ON p.vec_id = s.q_id
+              JOIN xu b ON b.vec_id = s.vec_id AND b.sb = p.sb AND b.wd = p.wd
+              GROUP BY 1, 2)
+      SELECT q_id, vec_id,
+             round(CAST(d2 AS DOUBLE) / 1000000000000.0, 6) AS exact_d2,
+             CAST(row_number() OVER (PARTITION BY q_id ORDER BY d2, vec_id) AS INTEGER) AS rank
+      FROM $ex
+      $top5Cut"""
+
   /** DuckDB SQL for emb_pca_topk with the eigenbasis embedded as literals —
     * generated at Verify time (the basis depends on the data dir, so it
     * cannot be a static string). Both engines then run the IDENTICAL
@@ -452,15 +523,7 @@ object Similarity {
     * `ex` = every (probe, candidate) integer-L2² pair, `x` = the exact
     * top-5 per probe.
     */
-  private val opqExactCtes: String = """
-      ex AS (SELECT p.vec_id AS q_id, b.vec_id,
-                    sum((p.xu - b.xu) * (p.xu - b.xu)) AS d2
-             FROM xu_raw p JOIN xu_raw b ON p.sb = b.sb AND p.wd = b.wd
-             WHERE p.vec_id < 10 AND b.vec_id <> p.vec_id
-             GROUP BY 1, 2),
-      x AS (SELECT q_id, vec_id FROM ex
-            QUALIFY row_number() OVER (PARTITION BY q_id
-              ORDER BY d2, vec_id) <= 5)"""
+  private val opqExactCtes: String = exactTop5Ctes("xu_raw", Seq("sb", "wd"), "ex", "x")
 
   /** DuckDB SQL for sim_opq_rerank_gain — whole-corpus ADC top-50 per
     * scheme, exact re-rank to top-5, recall vs the exact top-5.
@@ -929,22 +992,16 @@ object Similarity {
   /** The shared (c, vu) prefix of the quantization-ladder legs: per-dim
     * integer micro-unit coordinates of every vector.
     */
-  private val quantVuCtes: String = """
-      WITH c AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      vu AS (SELECT vec_id, i - 1 AS dim, CAST(round(v[i] * 1000000) AS BIGINT) AS xu
-             FROM c, LATERAL (SELECT unnest(range(1, len(v) + 1)) AS i) r)"""
+  private val quantVuCtes: String = s"""
+      WITH $corpusCte, vu AS (${microUnitsSql("dim")})"""
 
   /** Exact integer-L2² top-5 per probe — the SQL twin of [[pqExactTop5]],
     * the baseline every ladder rung scores against.
     */
-  private val intExactTop5Sql: String = quantVuCtes + """,
-      ex AS (SELECT p.vec_id AS q_id, b.vec_id,
-                    sum((p.xu - b.xu) * (p.xu - b.xu)) AS d2
-             FROM vu p JOIN vu b ON p.dim = b.dim
-             WHERE p.vec_id < 10 AND b.vec_id <> p.vec_id
-             GROUP BY 1, 2)
+  private val intExactTop5Sql: String = quantVuCtes + s""",
+${probeD2Cte("vu", Seq("dim"), "ex")}
       SELECT q_id, vec_id FROM ex
-      QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY d2, vec_id) <= 5"""
+      $top5Cut"""
 
   /** SQ8 top-5 per probe — the SQL twin of [[sq8Top5]]: emb_quantize_int8's
     * exact integer quantization rule, integer L2² over the codes.
@@ -994,19 +1051,7 @@ object Similarity {
     * (sb, wd)).
     */
   private val pqRerankSql: String = pqAdcCtes + s""",
-      short AS (SELECT q_id, vec_id FROM adc
-                QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY adc_u, vec_id) <= $RerankShortlist),
-      ex AS (SELECT s.q_id, s.vec_id,
-                    CAST(sum((p.xu - b.xu) * (p.xu - b.xu)) AS BIGINT) AS d2
-             FROM short s
-             JOIN xu p ON p.vec_id = s.q_id
-             JOIN xu b ON b.vec_id = s.vec_id AND b.sb = p.sb AND b.wd = p.wd
-             GROUP BY 1, 2)
-      SELECT q_id, vec_id,
-             round(CAST(d2 AS DOUBLE) / 1000000000000.0, 6) AS exact_d2,
-             CAST(row_number() OVER (PARTITION BY q_id ORDER BY d2, vec_id) AS INTEGER) AS rank
-      FROM ex
-      QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY d2, vec_id) <= 5"""
+      ${exactRerankSql("adc", RerankShortlist, "short", "ex")}"""
 
   /** IVF-PQ oracle tail from a `celld` (vec_id, c16, d2) cell-distance
     * CTE: cells → nprobe=2 probe cells → candidates → candidate-restricted
@@ -1026,18 +1071,7 @@ object Similarity {
                FROM candv ca JOIN codes cds ON cds.vec_id = ca.vec_id
                JOIN lut l ON l.q_id = ca.q_id AND l.sb = cds.sb AND l.c_id = cds.c_id
                GROUP BY 1, 2),
-      shortr AS (SELECT q_id, vec_id FROM adcr
-                 QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY adc_u, vec_id) <= 50),
-      exr AS (SELECT s.q_id, s.vec_id,
-                     CAST(sum((p.xu - b.xu) * (p.xu - b.xu)) AS BIGINT) AS d2
-              FROM shortr s JOIN xu p ON p.vec_id = s.q_id
-              JOIN xu b ON b.vec_id = s.vec_id AND b.sb = p.sb AND b.wd = p.wd
-              GROUP BY 1, 2)
-      SELECT q_id, vec_id,
-             round(CAST(d2 AS DOUBLE) / 1000000000000.0, 6) AS exact_d2,
-             CAST(row_number() OVER (PARTITION BY q_id ORDER BY d2, vec_id) AS INTEGER) AS rank
-      FROM exr
-      QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY d2, vec_id) <= 5"""
+      ${exactRerankSql("adcr", 50, "shortr", "exr")}"""
 
   /** Fixture coarse cells: distances to the 16 seed vectors. */
   private val pqIvfpqSql: String = ivfpqSqlWith("""
@@ -1121,24 +1155,13 @@ object Similarity {
                GROUP BY 1, 2)"""
 
   /** Residual IVF-PQ top-5: radcr → 50-shortlist → exact re-rank. */
-  private val pqIvfpqResidualSql: String = pqResidualCtes + """,
-      shortr AS (SELECT q_id, vec_id FROM radcr
-                 QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY adc_u, vec_id) <= 50),
-      exr AS (SELECT s.q_id, s.vec_id,
-                     CAST(sum((p.xu - b.xu) * (p.xu - b.xu)) AS BIGINT) AS d2
-              FROM shortr s JOIN xu p ON p.vec_id = s.q_id
-              JOIN xu b ON b.vec_id = s.vec_id AND b.sb = p.sb AND b.wd = p.wd
-              GROUP BY 1, 2)
-      SELECT q_id, vec_id,
-             round(CAST(d2 AS DOUBLE) / 1000000000000.0, 6) AS exact_d2,
-             CAST(row_number() OVER (PARTITION BY q_id ORDER BY d2, vec_id) AS INTEGER) AS rank
-      FROM exr
-      QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY d2, vec_id) <= 5"""
+  private val pqIvfpqResidualSql: String = pqResidualCtes + s""",
+      ${exactRerankSql("radcr", 50, "shortr", "exr")}"""
 
   /** Raw vs residual codes at shortlist depth 10 — the regime where ADC
     * ordering quality binds.
     */
-  private val pqCodeGainSql: String = pqResidualCtes + """,
+  private val pqCodeGainSql: String = pqResidualCtes + s""",
       rawadcr AS (SELECT ca.q_id, ca.vec_id, CAST(sum(l.d2) AS BIGINT) AS adc_u
                   FROM rcandv ca JOIN codes cds ON cds.vec_id = ca.vec_id
                   JOIN lut l ON l.q_id = ca.q_id AND l.sb = cds.sb AND l.c_id = cds.c_id
@@ -1155,14 +1178,7 @@ object Similarity {
                GROUP BY 1, 2, 3),
       atop AS (SELECT scheme, q_id, vec_id FROM shex
                QUALIFY row_number() OVER (PARTITION BY scheme, q_id
-                 ORDER BY d2, vec_id) <= 5),
-      exq AS (SELECT p.vec_id AS q_id, b.vec_id,
-                     sum((p.xu - b.xu) * (p.xu - b.xu)) AS d2
-              FROM xu p JOIN xu b ON p.sb = b.sb AND p.wd = b.wd
-              WHERE p.vec_id < 10 AND b.vec_id <> p.vec_id
-              GROUP BY 1, 2),
-      exact AS (SELECT q_id, vec_id FROM exq
-                QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY d2, vec_id) <= 5)
+                 ORDER BY d2, vec_id) <= 5),${exactTop5Ctes("xu", Seq("sb", "wd"), "exq", "exact")}
       SELECT a.scheme, round(count(x.vec_id) / 50.0, 6) AS recall_at_depth10
       FROM atop a LEFT JOIN exact x ON a.q_id = x.q_id AND a.vec_id = x.vec_id
       GROUP BY 1"""
@@ -1958,22 +1974,7 @@ object Similarity {
     "sim_ivfpq_code_gain" -> pqCodeGainSql,
     "sim_pq_train_curve" -> pqTrainCurveSql,
     "sim_pq_seed_audit" -> pqSeedAuditSql,
-    "sim_ivfpq_residual_recall" -> s"""
-      WITH c AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      vu AS (SELECT vec_id, i - 1 AS dim, CAST(round(v[i] * 1000000) AS BIGINT) AS xu
-             FROM c, LATERAL (SELECT unnest(range(1, len(v) + 1)) AS i) r),
-      ex AS (SELECT p.vec_id AS q_id, b.vec_id,
-                    sum((p.xu - b.xu) * (p.xu - b.xu)) AS d2
-             FROM vu p JOIN vu b ON p.dim = b.dim
-             WHERE p.vec_id < 10 AND b.vec_id <> p.vec_id
-             GROUP BY 1, 2),
-      x AS (SELECT q_id, vec_id FROM ex
-            QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY d2, vec_id) <= 5),
-      a AS (SELECT q_id, vec_id FROM ($pqIvfpqResidualSql))
-      SELECT x.q_id, CAST(count(a.vec_id) AS BIGINT) AS n_hits,
-             round(count(a.vec_id) / 5.0, 6) AS recall
-      FROM x LEFT JOIN a ON x.q_id = a.q_id AND x.vec_id = a.vec_id
-      GROUP BY x.q_id""",
+    "sim_ivfpq_residual_recall" -> exactRecallSql(pqIvfpqResidualSql),
     // MMR: 5 greedy selection steps unrolled (generated — the BPE-chain
     // discipline, every CTE MATERIALIZED against per-reference inlining).
     "sim_mmr_topk" -> {
@@ -2124,7 +2125,7 @@ object Similarity {
       GROUP BY 1""",
     // nprobe sweep: the fixture-cell IVF-PQ tail generalized to probe-rank
     // ≤ 8, swept over np ∈ {1,2,4,8} exactly as the Spark side does.
-    "sim_ivfpq_probe_sweep" -> (pqAdcCtes + """,
+    "sim_ivfpq_probe_sweep" -> (pqAdcCtes + s""",
       celld AS (SELECT x.vec_id, s16.c16, sum((x.xu - s16.cu) * (x.xu - s16.cu)) AS d2
                 FROM xu x JOIN (SELECT vec_id AS c16, sb, wd, xu AS cu
                                 FROM xu WHERE vec_id < 16) s16
@@ -2154,14 +2155,7 @@ object Similarity {
               JOIN xu b ON b.vec_id = s.vec_id AND b.sb = p.sb AND b.wd = p.wd
               GROUP BY 1, 2, 3),
       atop AS (SELECT np, q_id, vec_id FROM exr
-               QUALIFY row_number() OVER (PARTITION BY np, q_id ORDER BY d2, vec_id) <= 5),
-      exq AS (SELECT p.vec_id AS q_id, b.vec_id,
-                     sum((p.xu - b.xu) * (p.xu - b.xu)) AS d2
-              FROM xu p JOIN xu b ON p.sb = b.sb AND p.wd = b.wd
-              WHERE p.vec_id < 10 AND b.vec_id <> p.vec_id
-              GROUP BY 1, 2),
-      exact AS (SELECT q_id, vec_id FROM exq
-                QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY d2, vec_id) <= 5),
+               QUALIFY row_number() OVER (PARTITION BY np, q_id ORDER BY d2, vec_id) <= 5),${exactTop5Ctes("xu", Seq("sb", "wd"), "exq", "exact")},
       hits AS (SELECT a.np, count(*) AS n_hits
                FROM atop a JOIN exact x ON a.q_id = x.q_id AND a.vec_id = x.vec_id
                GROUP BY 1),
@@ -2174,7 +2168,7 @@ object Similarity {
     // (np, q), cut at max-depth 200, each depth leg an unnest of the rank,
     // exact re-rank distance computed once per distinct pair — exactly the
     // Spark side's one-union/one-rank/one-gather shape.
-    "sim_ivfpq_grid" -> (pqAdcCtes + """,
+    "sim_ivfpq_grid" -> (pqAdcCtes + s""",
       celld AS (SELECT x.vec_id, s16.c16, sum((x.xu - s16.cu) * (x.xu - s16.cu)) AS d2
                 FROM xu x JOIN (SELECT vec_id AS c16, sb, wd, xu AS cu
                                 FROM xu WHERE vec_id < 16) s16
@@ -2214,14 +2208,7 @@ object Similarity {
                FROM bydepth bd JOIN exd e
                  ON e.q_id = bd.q_id AND e.vec_id = bd.vec_id
                QUALIFY row_number() OVER (PARTITION BY bd.np, bd.depth, bd.q_id
-                 ORDER BY e.d2, bd.vec_id) <= 5),
-      exq AS (SELECT p.vec_id AS q_id, b.vec_id,
-                     sum((p.xu - b.xu) * (p.xu - b.xu)) AS d2
-              FROM xu p JOIN xu b ON p.sb = b.sb AND p.wd = b.wd
-              WHERE p.vec_id < 10 AND b.vec_id <> p.vec_id
-              GROUP BY 1, 2),
-      exact AS (SELECT q_id, vec_id FROM exq
-                QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY d2, vec_id) <= 5),
+                 ORDER BY e.d2, bd.vec_id) <= 5),${exactTop5Ctes("xu", Seq("sb", "wd"), "exq", "exact")},
       hits AS (SELECT a.np, a.depth, count(*) AS n_hits
                FROM atop a JOIN exact x ON a.q_id = x.q_id AND a.vec_id = x.vec_id
                GROUP BY 1, 2),
@@ -2234,68 +2221,15 @@ object Similarity {
       FROM grid g
       LEFT JOIN hits h ON g.np = h.np AND g.depth = h.depth
       JOIN scanned s ON g.np = s.np"""),
-    "sim_ivfpq_recall" -> s"""
-      WITH c AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      vu AS (SELECT vec_id, i - 1 AS dim, CAST(round(v[i] * 1000000) AS BIGINT) AS xu
-             FROM c, LATERAL (SELECT unnest(range(1, len(v) + 1)) AS i) r),
-      ex AS (SELECT p.vec_id AS q_id, b.vec_id,
-                    sum((p.xu - b.xu) * (p.xu - b.xu)) AS d2
-             FROM vu p JOIN vu b ON p.dim = b.dim
-             WHERE p.vec_id < 10 AND b.vec_id <> p.vec_id
-             GROUP BY 1, 2),
-      x AS (SELECT q_id, vec_id FROM ex
-            QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY d2, vec_id) <= 5),
-      a AS (SELECT q_id, vec_id FROM ($pqIvfpqSql))
-      SELECT x.q_id, CAST(count(a.vec_id) AS BIGINT) AS n_hits,
-             round(count(a.vec_id) / 5.0, 6) AS recall
-      FROM x LEFT JOIN a ON x.q_id = a.q_id AND x.vec_id = a.vec_id
-      GROUP BY x.q_id""",
-    "sim_pq_rerank_recall" -> s"""
-      WITH c AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      vu AS (SELECT vec_id, i - 1 AS dim, CAST(round(v[i] * 1000000) AS BIGINT) AS xu
-             FROM c, LATERAL (SELECT unnest(range(1, len(v) + 1)) AS i) r),
-      ex AS (SELECT p.vec_id AS q_id, b.vec_id,
-                    sum((p.xu - b.xu) * (p.xu - b.xu)) AS d2
-             FROM vu p JOIN vu b ON p.dim = b.dim
-             WHERE p.vec_id < 10 AND b.vec_id <> p.vec_id
-             GROUP BY 1, 2),
-      x AS (SELECT q_id, vec_id FROM ex
-            QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY d2, vec_id) <= 5),
-      a AS (SELECT q_id, vec_id FROM ($pqRerankSql))
-      SELECT x.q_id, CAST(count(a.vec_id) AS BIGINT) AS n_hits,
-             round(count(a.vec_id) / 5.0, 6) AS recall
-      FROM x LEFT JOIN a ON x.q_id = a.q_id AND x.vec_id = a.vec_id
-      GROUP BY x.q_id""",
-    "sim_pq_recall" -> s"""
-      WITH c AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      vu AS (SELECT vec_id, i - 1 AS dim, CAST(round(v[i] * 1000000) AS BIGINT) AS xu
-             FROM c, LATERAL (SELECT unnest(range(1, len(v) + 1)) AS i) r),
-      ex AS (SELECT p.vec_id AS q_id, b.vec_id,
-                    sum((p.xu - b.xu) * (p.xu - b.xu)) AS d2
-             FROM vu p JOIN vu b ON p.dim = b.dim
-             WHERE p.vec_id < 10 AND b.vec_id <> p.vec_id
-             GROUP BY 1, 2),
-      x AS (SELECT q_id, vec_id FROM ex
-            QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY d2, vec_id) <= 5),
-      a AS (SELECT q_id, vec_id FROM ($pqAdcSql))
-      SELECT x.q_id, CAST(count(a.vec_id) AS BIGINT) AS n_hits,
-             round(count(a.vec_id) / 5.0, 6) AS recall
-      FROM x LEFT JOIN a ON x.q_id = a.q_id AND x.vec_id = a.vec_id
-      GROUP BY x.q_id""",
+    "sim_ivfpq_recall" -> exactRecallSql(pqIvfpqSql),
+    "sim_pq_rerank_recall" -> exactRecallSql(pqRerankSql),
+    "sim_pq_recall" -> exactRecallSql(pqAdcSql),
     "sim_sq8_recall" -> s"""
       WITH x AS (SELECT q_id, vec_id FROM ($intExactTop5Sql)),
-      a AS (SELECT q_id, vec_id FROM ($sq8Top5Sql))
-      SELECT x.q_id, CAST(count(a.vec_id) AS BIGINT) AS n_hits,
-             round(count(a.vec_id) / 5.0, 6) AS recall
-      FROM x LEFT JOIN a ON x.q_id = a.q_id AND x.vec_id = a.vec_id
-      GROUP BY x.q_id""",
+      a AS (SELECT q_id, vec_id FROM ($sq8Top5Sql))$recallAt5Sql""",
     "sim_binary_rerank" -> s"""
       WITH x AS (SELECT q_id, vec_id FROM ($intExactTop5Sql)),
-      a AS (SELECT q_id, vec_id FROM ($binTop5Sql))
-      SELECT x.q_id, CAST(count(a.vec_id) AS BIGINT) AS n_hits,
-             round(count(a.vec_id) / 5.0, 6) AS recall
-      FROM x LEFT JOIN a ON x.q_id = a.q_id AND x.vec_id = a.vec_id
-      GROUP BY x.q_id""",
+      a AS (SELECT q_id, vec_id FROM ($binTop5Sql))$recallAt5Sql""",
     "sim_quant_ladder" -> s"""
       WITH x AS (SELECT q_id, vec_id FROM ($intExactTop5Sql)),
       pq AS (SELECT q_id, vec_id FROM ($pqAdcSql)),
@@ -2331,11 +2265,7 @@ object Similarity {
       FROM p""",
     "sim_ivf_recall" -> s"""
       WITH x AS ($cosineTopkSql),
-      a AS ($ivfTopkSql)
-      SELECT x.q_id, CAST(count(a.vec_id) AS BIGINT) AS n_hits,
-             round(count(a.vec_id) / 5.0, 6) AS recall
-      FROM x LEFT JOIN a ON x.q_id = a.q_id AND x.vec_id = a.vec_id
-      GROUP BY x.q_id""",
+      a AS ($ivfTopkSql)$recallAt5Sql""",
     "mm_binary_meta" -> """
       SELECT doc_id, CAST(octet_length(CAST(text AS BLOB)) AS INTEGER) AS n_bytes,
              sha256(text) AS sha256
