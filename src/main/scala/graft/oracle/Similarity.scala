@@ -1388,6 +1388,125 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
                row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, cand) AS rank
         FROM vis3) WHERE rank <= 5"""
 
+  /** The labeled IVF probe set-up shared by the filtered IVF oracles: the
+    * corpus with labels and norms, 16 seed cells, every vector's cell, and
+    * each probe's (vec_id < 10) two nearest cells.
+    */
+  private lazy val labeledIvfCtes: String = """
+      WITH c AS (
+        SELECT vec_id, label, embedding::DOUBLE[] AS v,
+               sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
+        FROM embeddings),
+      cents AS (SELECT vec_id AS c_id, v AS cv, nrm AS cn FROM c WHERE vec_id < 16),
+      assigned AS (
+        SELECT vec_id, label, v, nrm, c_id FROM (
+          SELECT a.vec_id, a.label, a.v, a.nrm, cents.c_id,
+                 row_number() OVER (PARTITION BY a.vec_id
+                   ORDER BY round(list_dot_product(a.v, cv) / (a.nrm * cn), 6) DESC, c_id) AS crank
+          FROM c a CROSS JOIN cents) WHERE crank = 1),
+      probes AS (
+        SELECT vec_id AS q_id, label AS tgt, v AS qv, nrm AS qn, c_id FROM (
+          SELECT a.vec_id, a.label, a.v, a.nrm, cents.c_id,
+                 row_number() OVER (PARTITION BY a.vec_id
+                   ORDER BY round(list_dot_product(a.v, cv) / (a.nrm * cn), 6) DESC, c_id) AS crank
+          FROM c a CROSS JOIN cents WHERE a.vec_id < 10) WHERE crank <= 2)"""
+
+  /** The filtered-exact truth of the filtered IVF oracles: each probe's 5
+    * most cosine-similar vectors among those carrying its label.
+    */
+  private lazy val labeledExactCtes: String = """
+      p1 AS (SELECT vec_id AS q_id, label AS tgt, v AS qv, nrm AS qn
+             FROM c WHERE vec_id < 10),
+      ex AS (
+        SELECT q_id, tgt, vec_id FROM (
+          SELECT p.q_id, p.tgt, s.vec_id,
+                 round(list_dot_product(p.qv, s.v) / (p.qn * s.nrm), 6) AS cos
+          FROM c s CROSS JOIN p1 p
+          WHERE s.vec_id <> p.q_id AND s.label = p.tgt)
+        QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) <= 5)"""
+
+  /** Shared by the labeled-walk oracles: the unfiltered walk's top-5
+    * restricted to the probe's label (visleg), and the label-filtered exact
+    * cosine top-5 (ex). Expects c, lb, qs and uvis3 in scope.
+    */
+  private lazy val labeledWalkTruthCtes: String = """
+      visleg AS (SELECT q_id, cand AS vec_id FROM (
+                   SELECT t.q_id, t.cand,
+                          row_number() OVER (PARTITION BY t.q_id
+                            ORDER BY t.cos DESC, t.cand) AS rk
+                   FROM uvis3 t
+                   JOIN qs q ON q.q_id = t.q_id
+                   JOIN lb ON lb.vec_id = t.cand
+                   WHERE lb.label = q.tgt) WHERE rk <= 5),
+      ex AS (SELECT q_id, tgt, vec_id FROM (
+               SELECT p.q_id, p.tgt, s.vec_id,
+                      round(list_dot_product(p.qv, s.v) / (p.qn * s.nrm), 6) AS cos
+               FROM c s JOIN lb ON lb.vec_id = s.vec_id CROSS JOIN qs p
+               WHERE s.vec_id <> p.q_id AND lb.label = p.tgt)
+             QUALIFY row_number() OVER (PARTITION BY q_id
+               ORDER BY cos DESC, vec_id) <= 5)"""
+
+  /** A beam walk's answer: the top-5 of its visited set `vis`
+    * (q_id, cand, cos) by (cos desc, cand).
+    */
+  private def walkTop5Sql(vis: String): String = s"""SELECT q_id, cand AS vec_id FROM (
+                SELECT q_id, cand,
+                       row_number() OVER (PARTITION BY q_id
+                         ORDER BY cos DESC, cand) AS rk
+                FROM $vis) WHERE rk <= 5"""
+
+  /** The shared head of the MMR oracles: micro-unit coordinates, the probes'
+    * (vec_id < 10) top-20 candidates by integer dot-product relevance (cand),
+    * and every candidate pair's dot product (pd).
+    */
+  private lazy val mmrCandCtes: String = """
+      WITH c AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      vu AS MATERIALIZED (SELECT vec_id, i - 1 AS dim_i,
+                   CAST(round(v[i] * 1000000) AS BIGINT) AS xu
+             FROM c, LATERAL (SELECT unnest(range(1, len(v) + 1)) AS i) r),
+      rel AS (SELECT p.vec_id AS q_id, b.vec_id, sum(p.xu * b.xu) AS rel
+              FROM vu p JOIN vu b ON p.dim_i = b.dim_i
+              WHERE p.vec_id < 10 AND b.vec_id <> p.vec_id
+              GROUP BY 1, 2),
+      cand AS MATERIALIZED (SELECT q_id, vec_id, CAST(rel AS BIGINT) AS rel FROM rel
+              QUALIFY row_number() OVER (PARTITION BY q_id
+                ORDER BY rel DESC, vec_id) <= 20),
+      pd AS MATERIALIZED (SELECT ca.q_id, ca.vec_id AS i, cb.vec_id AS j,
+                     CAST(sum(x.xu * y.xu) AS BIGINT) AS pdot
+             FROM cand ca
+             JOIN cand cb ON ca.q_id = cb.q_id AND ca.vec_id <> cb.vec_id
+             JOIN vu x ON x.vec_id = ca.vec_id
+             JOIN vu y ON y.vec_id = cb.vec_id AND y.dim_i = x.dim_i
+             GROUP BY 1, 2, 3)"""
+
+  /** The shared head of the nprobe sweep oracles after pqAdcCtes: fixture
+    * cells, each probe's 8 nearest cells with their probe rank, the
+    * candidate-restricted ADC, and each candidate swept into every nprobe in
+    * {1, 2, 4, 8} that reaches its cell.
+    */
+  private lazy val ivfpqSweptCtes: String = """
+      celld AS (SELECT x.vec_id, s16.c16, sum((x.xu - s16.cu) * (x.xu - s16.cu)) AS d2
+                FROM xu x JOIN (SELECT vec_id AS c16, sb, wd, xu AS cu
+                                FROM xu WHERE vec_id < 16) s16
+                  ON x.sb = s16.sb AND x.wd = s16.wd
+                GROUP BY 1, 2),
+      cellsv AS (SELECT vec_id, c16 AS cell FROM celld
+                 QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY d2, c16) = 1),
+      probecells8 AS (SELECT vec_id AS q_id, c16 AS cell,
+                             row_number() OVER (PARTITION BY vec_id ORDER BY d2, c16) AS pr
+                      FROM celld WHERE vec_id < 10
+                      QUALIFY pr <= 8),
+      candv AS (SELECT p.q_id, cl.vec_id, p.pr
+                FROM cellsv cl JOIN probecells8 p ON cl.cell = p.cell
+                WHERE cl.vec_id <> p.q_id),
+      adcr AS (SELECT ca.q_id, ca.vec_id, ca.pr, CAST(sum(l.d2) AS BIGINT) AS adc_u
+               FROM candv ca JOIN codes cds ON cds.vec_id = ca.vec_id
+               JOIN lut l ON l.q_id = ca.q_id AND l.sb = cds.sb AND l.c_id = cds.c_id
+               GROUP BY 1, 2, 3),
+      swept AS (SELECT a.q_id, a.vec_id, a.adc_u, s.np
+                FROM adcr a, LATERAL (SELECT unnest([1, 2, 4, 8]) AS np) s
+                WHERE s.np >= a.pr)"""
+
   val oracle: Map[String, String] = Map(
     "sim_knn_graph" -> s"""
       WITH $knnOracleCtes
@@ -1445,26 +1564,8 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
                WHERE t.rk <= 5 AND lb.label = q.tgt),
       fbeam0 AS (SELECT q_id, q_id AS cand FROM qs)${beamWalkCtes("f", 8, "ge",
         "\n                    JOIN lb ON lb.vec_id = x.cand WHERE lb.label = q.tgt")},
-      pre AS (SELECT q_id, cand AS vec_id FROM (
-                SELECT q_id, cand,
-                       row_number() OVER (PARTITION BY q_id
-                         ORDER BY cos DESC, cand) AS rk
-                FROM fvis3) WHERE rk <= 5),
-      visleg AS (SELECT q_id, cand AS vec_id FROM (
-                   SELECT t.q_id, t.cand,
-                          row_number() OVER (PARTITION BY t.q_id
-                            ORDER BY t.cos DESC, t.cand) AS rk
-                   FROM uvis3 t
-                   JOIN qs q ON q.q_id = t.q_id
-                   JOIN lb ON lb.vec_id = t.cand
-                   WHERE lb.label = q.tgt) WHERE rk <= 5),
-      ex AS (SELECT q_id, tgt, vec_id FROM (
-               SELECT p.q_id, p.tgt, s.vec_id,
-                      round(list_dot_product(p.qv, s.v) / (p.qn * s.nrm), 6) AS cos
-               FROM c s JOIN lb ON lb.vec_id = s.vec_id CROSS JOIN qs p
-               WHERE s.vec_id <> p.q_id AND lb.label = p.tgt)
-             QUALIFY row_number() OVER (PARTITION BY q_id
-               ORDER BY cos DESC, vec_id) <= 5)
+      pre AS (${walkTop5Sql("fvis3")}),
+      ${labeledWalkTruthCtes}
       SELECT e.q_id, CAST(e.tgt AS INTEGER) AS target_label,
              count(*) AS n_exact,
              CAST(sum(CASE WHEN pr.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS pre_hits,
@@ -1528,31 +1629,9 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
       bbeam0 AS (SELECT q_id, q_id AS cand FROM qs)${beamWalkCtes("b", 8, "ge",
         "\n                    JOIN lb ON lb.vec_id = x.cand WHERE lb.label = q.tgt")},
       ubeam0 AS (SELECT q_id, q_id AS cand FROM qs)${beamWalkCtes("u", 8, "gl")},
-      labl AS (SELECT q_id, cand AS vec_id FROM (
-                SELECT q_id, cand,
-                       row_number() OVER (PARTITION BY q_id
-                         ORDER BY cos DESC, cand) AS rk
-                FROM lvis3) WHERE rk <= 5),
-      blind AS (SELECT q_id, cand AS vec_id FROM (
-                SELECT q_id, cand,
-                       row_number() OVER (PARTITION BY q_id
-                         ORDER BY cos DESC, cand) AS rk
-                FROM bvis3) WHERE rk <= 5),
-      visleg AS (SELECT q_id, cand AS vec_id FROM (
-                   SELECT t.q_id, t.cand,
-                          row_number() OVER (PARTITION BY t.q_id
-                            ORDER BY t.cos DESC, t.cand) AS rk
-                   FROM uvis3 t
-                   JOIN qs q ON q.q_id = t.q_id
-                   JOIN lb ON lb.vec_id = t.cand
-                   WHERE lb.label = q.tgt) WHERE rk <= 5),
-      ex AS (SELECT q_id, tgt, vec_id FROM (
-               SELECT p.q_id, p.tgt, s.vec_id,
-                      round(list_dot_product(p.qv, s.v) / (p.qn * s.nrm), 6) AS cos
-               FROM c s JOIN lb ON lb.vec_id = s.vec_id CROSS JOIN qs p
-               WHERE s.vec_id <> p.q_id AND lb.label = p.tgt)
-             QUALIFY row_number() OVER (PARTITION BY q_id
-               ORDER BY cos DESC, vec_id) <= 5)
+      labl AS (${walkTop5Sql("lvis3")}),
+      blind AS (${walkTop5Sql("bvis3")}),
+      ${labeledWalkTruthCtes}
       SELECT e.q_id, CAST(e.tgt AS INTEGER) AS target_label,
              count(*) AS n_exact,
              CAST(sum(CASE WHEN la.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS lab_hits,
@@ -1581,21 +1660,9 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
       sebeam0 AS (SELECT q_id, q_id AS cand FROM qs)${beamWalkCtes("se", 8)},
       fxbeam0 AS (SELECT q_id, (SELECT fixed_entry FROM fx) AS cand FROM qs)${
         beamWalkCtes("fx", 8)},
-      se5 AS (SELECT q_id, cand AS vec_id FROM (
-                SELECT q_id, cand,
-                       row_number() OVER (PARTITION BY q_id
-                         ORDER BY cos DESC, cand) AS rk
-                FROM sevis3) WHERE rk <= 5),
-      fx5 AS (SELECT q_id, cand AS vec_id FROM (
-                SELECT q_id, cand,
-                       row_number() OVER (PARTITION BY q_id
-                         ORDER BY cos DESC, cand) AS rk
-                FROM fxvis3) WHERE rk <= 5),
-      hr5 AS (SELECT q_id, cand AS vec_id FROM (
-                SELECT q_id, cand,
-                       row_number() OVER (PARTITION BY q_id
-                         ORDER BY cos DESC, cand) AS rk
-                FROM hrvis3) WHERE rk <= 5),
+      se5 AS (${walkTop5Sql("sevis3")}),
+      fx5 AS (${walkTop5Sql("fxvis3")}),
+      hr5 AS (${walkTop5Sql("hrvis3")}),
       ex AS (SELECT q_id, vec_id FROM (
                SELECT p.q_id, s.vec_id,
                       row_number() OVER (PARTITION BY p.q_id
@@ -1816,24 +1883,8 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
     // filtered ANN: the label predicate is applied inside the probed cells
     // (before the top-k) in BOTH engines, and the exact leg restricts the
     // brute-force population the same way — recall is hash-matched per probe
-    "sim_ivf_filtered" -> """
-      WITH c AS (
-        SELECT vec_id, label, embedding::DOUBLE[] AS v,
-               sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-        FROM embeddings),
-      cents AS (SELECT vec_id AS c_id, v AS cv, nrm AS cn FROM c WHERE vec_id < 16),
-      assigned AS (
-        SELECT vec_id, label, v, nrm, c_id FROM (
-          SELECT a.vec_id, a.label, a.v, a.nrm, cents.c_id,
-                 row_number() OVER (PARTITION BY a.vec_id
-                   ORDER BY round(list_dot_product(a.v, cv) / (a.nrm * cn), 6) DESC, c_id) AS crank
-          FROM c a CROSS JOIN cents) WHERE crank = 1),
-      probes AS (
-        SELECT vec_id AS q_id, label AS tgt, v AS qv, nrm AS qn, c_id FROM (
-          SELECT a.vec_id, a.label, a.v, a.nrm, cents.c_id,
-                 row_number() OVER (PARTITION BY a.vec_id
-                   ORDER BY round(list_dot_product(a.v, cv) / (a.nrm * cn), 6) DESC, c_id) AS crank
-          FROM c a CROSS JOIN cents WHERE a.vec_id < 10) WHERE crank <= 2),
+    "sim_ivf_filtered" -> s"""
+      ${labeledIvfCtes},
       ivf AS (
         SELECT q_id, vec_id FROM (
           SELECT p.q_id, s.vec_id,
@@ -1841,15 +1892,7 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
           FROM assigned s JOIN probes p ON s.c_id = p.c_id
           WHERE s.vec_id <> p.q_id AND s.label = p.tgt)
         QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) <= 5),
-      p1 AS (SELECT vec_id AS q_id, label AS tgt, v AS qv, nrm AS qn
-             FROM c WHERE vec_id < 10),
-      ex AS (
-        SELECT q_id, tgt, vec_id FROM (
-          SELECT p.q_id, p.tgt, s.vec_id,
-                 round(list_dot_product(p.qv, s.v) / (p.qn * s.nrm), 6) AS cos
-          FROM c s CROSS JOIN p1 p
-          WHERE s.vec_id <> p.q_id AND s.label = p.tgt)
-        QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) <= 5)
+      ${labeledExactCtes}
       SELECT e.q_id, CAST(e.tgt AS INTEGER) AS target_label,
              count(*) AS n_exact,
              CAST(sum(CASE WHEN i.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
@@ -1860,24 +1903,8 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
     // pre- vs post-filter over the identical cells and budget: the post
     // leg ranks UNfiltered candidates, takes 5, then filters — the recall
     // collapse is the hash-matched output
-    "sim_ivf_filtered_sweep" -> """
-      WITH c AS (
-        SELECT vec_id, label, embedding::DOUBLE[] AS v,
-               sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
-        FROM embeddings),
-      cents AS (SELECT vec_id AS c_id, v AS cv, nrm AS cn FROM c WHERE vec_id < 16),
-      assigned AS (
-        SELECT vec_id, label, v, nrm, c_id FROM (
-          SELECT a.vec_id, a.label, a.v, a.nrm, cents.c_id,
-                 row_number() OVER (PARTITION BY a.vec_id
-                   ORDER BY round(list_dot_product(a.v, cv) / (a.nrm * cn), 6) DESC, c_id) AS crank
-          FROM c a CROSS JOIN cents) WHERE crank = 1),
-      probes AS (
-        SELECT vec_id AS q_id, label AS tgt, v AS qv, nrm AS qn, c_id FROM (
-          SELECT a.vec_id, a.label, a.v, a.nrm, cents.c_id,
-                 row_number() OVER (PARTITION BY a.vec_id
-                   ORDER BY round(list_dot_product(a.v, cv) / (a.nrm * cn), 6) DESC, c_id) AS crank
-          FROM c a CROSS JOIN cents WHERE a.vec_id < 10) WHERE crank <= 2),
+    "sim_ivf_filtered_sweep" -> s"""
+      ${labeledIvfCtes},
       cands AS (
         SELECT p.q_id, p.tgt, s.label, s.vec_id,
                round(list_dot_product(qv, s.v) / (qn * s.nrm), 6) AS cos
@@ -1891,15 +1918,7 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
           SELECT * FROM cands
           QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) <= 5)
         WHERE label = tgt),
-      p1 AS (SELECT vec_id AS q_id, label AS tgt, v AS qv, nrm AS qn
-             FROM c WHERE vec_id < 10),
-      ex AS (
-        SELECT q_id, tgt, vec_id FROM (
-          SELECT p.q_id, p.tgt, s.vec_id,
-                 round(list_dot_product(p.qv, s.v) / (p.qn * s.nrm), 6) AS cos
-          FROM c s CROSS JOIN p1 p
-          WHERE s.vec_id <> p.q_id AND s.label = p.tgt)
-        QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) <= 5)
+      ${labeledExactCtes}
       SELECT e.q_id, CAST(e.tgt AS INTEGER) AS target_label,
              count(*) AS n_exact,
              CAST(sum(CASE WHEN pr.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS pre_hits,
@@ -1996,24 +2015,7 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
       val union = (1 to 5).map(k =>
         s"SELECT q_id, vec_id, $k AS rank, score FROM s$k").mkString("\n      UNION ALL ")
       s"""
-      WITH c AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      vu AS MATERIALIZED (SELECT vec_id, i - 1 AS dim_i,
-                   CAST(round(v[i] * 1000000) AS BIGINT) AS xu
-             FROM c, LATERAL (SELECT unnest(range(1, len(v) + 1)) AS i) r),
-      rel AS (SELECT p.vec_id AS q_id, b.vec_id, sum(p.xu * b.xu) AS rel
-              FROM vu p JOIN vu b ON p.dim_i = b.dim_i
-              WHERE p.vec_id < 10 AND b.vec_id <> p.vec_id
-              GROUP BY 1, 2),
-      cand AS MATERIALIZED (SELECT q_id, vec_id, CAST(rel AS BIGINT) AS rel FROM rel
-              QUALIFY row_number() OVER (PARTITION BY q_id
-                ORDER BY rel DESC, vec_id) <= 20),
-      pd AS MATERIALIZED (SELECT ca.q_id, ca.vec_id AS i, cb.vec_id AS j,
-                     CAST(sum(x.xu * y.xu) AS BIGINT) AS pdot
-             FROM cand ca
-             JOIN cand cb ON ca.q_id = cb.q_id AND ca.vec_id <> cb.vec_id
-             JOIN vu x ON x.vec_id = ca.vec_id
-             JOIN vu y ON y.vec_id = cb.vec_id AND y.dim_i = x.dim_i
-             GROUP BY 1, 2, 3),
+      ${mmrCandCtes},
       s1 AS MATERIALIZED (SELECT q_id, vec_id, rel AS score FROM cand
              QUALIFY row_number() OVER (PARTITION BY q_id
                ORDER BY rel DESC, vec_id) = 1),
@@ -2056,24 +2058,7 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
           s"SELECT $lam AS lam_pct, q_id, vec_id, $k AS rank, score FROM s$k$tag")
       }.mkString("\n      UNION ALL ")
       s"""
-      WITH c AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      vu AS MATERIALIZED (SELECT vec_id, i - 1 AS dim_i,
-                   CAST(round(v[i] * 1000000) AS BIGINT) AS xu
-             FROM c, LATERAL (SELECT unnest(range(1, len(v) + 1)) AS i) r),
-      rel AS (SELECT p.vec_id AS q_id, b.vec_id, sum(p.xu * b.xu) AS rel
-              FROM vu p JOIN vu b ON p.dim_i = b.dim_i
-              WHERE p.vec_id < 10 AND b.vec_id <> p.vec_id
-              GROUP BY 1, 2),
-      cand AS MATERIALIZED (SELECT q_id, vec_id, CAST(rel AS BIGINT) AS rel FROM rel
-              QUALIFY row_number() OVER (PARTITION BY q_id
-                ORDER BY rel DESC, vec_id) <= 20),
-      pd AS MATERIALIZED (SELECT ca.q_id, ca.vec_id AS i, cb.vec_id AS j,
-                     CAST(sum(x.xu * y.xu) AS BIGINT) AS pdot
-             FROM cand ca
-             JOIN cand cb ON ca.q_id = cb.q_id AND ca.vec_id <> cb.vec_id
-             JOIN vu x ON x.vec_id = ca.vec_id
-             JOIN vu y ON y.vec_id = cb.vec_id AND y.dim_i = x.dim_i
-             GROUP BY 1, 2, 3),
+      ${mmrCandCtes},
       $chains
       SELECT CAST(lam_pct AS INTEGER) AS lam_pct, q_id, vec_id,
              CAST(rank AS INTEGER) AS rank,
@@ -2126,27 +2111,7 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
     // nprobe sweep: the fixture-cell IVF-PQ tail generalized to probe-rank
     // ≤ 8, swept over np ∈ {1,2,4,8} exactly as the Spark side does.
     "sim_ivfpq_probe_sweep" -> (pqAdcCtes + s""",
-      celld AS (SELECT x.vec_id, s16.c16, sum((x.xu - s16.cu) * (x.xu - s16.cu)) AS d2
-                FROM xu x JOIN (SELECT vec_id AS c16, sb, wd, xu AS cu
-                                FROM xu WHERE vec_id < 16) s16
-                  ON x.sb = s16.sb AND x.wd = s16.wd
-                GROUP BY 1, 2),
-      cellsv AS (SELECT vec_id, c16 AS cell FROM celld
-                 QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY d2, c16) = 1),
-      probecells8 AS (SELECT vec_id AS q_id, c16 AS cell,
-                             row_number() OVER (PARTITION BY vec_id ORDER BY d2, c16) AS pr
-                      FROM celld WHERE vec_id < 10
-                      QUALIFY pr <= 8),
-      candv AS (SELECT p.q_id, cl.vec_id, p.pr
-                FROM cellsv cl JOIN probecells8 p ON cl.cell = p.cell
-                WHERE cl.vec_id <> p.q_id),
-      adcr AS (SELECT ca.q_id, ca.vec_id, ca.pr, CAST(sum(l.d2) AS BIGINT) AS adc_u
-               FROM candv ca JOIN codes cds ON cds.vec_id = ca.vec_id
-               JOIN lut l ON l.q_id = ca.q_id AND l.sb = cds.sb AND l.c_id = cds.c_id
-               GROUP BY 1, 2, 3),
-      swept AS (SELECT a.q_id, a.vec_id, a.adc_u, s.np
-                FROM adcr a, LATERAL (SELECT unnest([1, 2, 4, 8]) AS np) s
-                WHERE s.np >= a.pr),
+      ${ivfpqSweptCtes},
       shortr AS (SELECT np, q_id, vec_id FROM swept
                  QUALIFY row_number() OVER (PARTITION BY np, q_id ORDER BY adc_u, vec_id) <= 50),
       exr AS (SELECT s.np, s.q_id, s.vec_id,
@@ -2169,27 +2134,7 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
     // exact re-rank distance computed once per distinct pair — exactly the
     // Spark side's one-union/one-rank/one-gather shape.
     "sim_ivfpq_grid" -> (pqAdcCtes + s""",
-      celld AS (SELECT x.vec_id, s16.c16, sum((x.xu - s16.cu) * (x.xu - s16.cu)) AS d2
-                FROM xu x JOIN (SELECT vec_id AS c16, sb, wd, xu AS cu
-                                FROM xu WHERE vec_id < 16) s16
-                  ON x.sb = s16.sb AND x.wd = s16.wd
-                GROUP BY 1, 2),
-      cellsv AS (SELECT vec_id, c16 AS cell FROM celld
-                 QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY d2, c16) = 1),
-      probecells8 AS (SELECT vec_id AS q_id, c16 AS cell,
-                             row_number() OVER (PARTITION BY vec_id ORDER BY d2, c16) AS pr
-                      FROM celld WHERE vec_id < 10
-                      QUALIFY pr <= 8),
-      candv AS (SELECT p.q_id, cl.vec_id, p.pr
-                FROM cellsv cl JOIN probecells8 p ON cl.cell = p.cell
-                WHERE cl.vec_id <> p.q_id),
-      adcr AS (SELECT ca.q_id, ca.vec_id, ca.pr, CAST(sum(l.d2) AS BIGINT) AS adc_u
-               FROM candv ca JOIN codes cds ON cds.vec_id = ca.vec_id
-               JOIN lut l ON l.q_id = ca.q_id AND l.sb = cds.sb AND l.c_id = cds.c_id
-               GROUP BY 1, 2, 3),
-      swept AS (SELECT a.q_id, a.vec_id, a.adc_u, s.np
-                FROM adcr a, LATERAL (SELECT unnest([1, 2, 4, 8]) AS np) s
-                WHERE s.np >= a.pr),
+      ${ivfpqSweptCtes},
       rankr AS (SELECT np, q_id, vec_id,
                        row_number() OVER (PARTITION BY np, q_id
                          ORDER BY adc_u, vec_id) AS r
