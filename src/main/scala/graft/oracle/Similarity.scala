@@ -17,6 +17,15 @@ object Similarity {
     s"""SELECT vec_id, i - 1 AS $dim, CAST(round(v[i] * 1000000) AS BIGINT) AS xu
              FROM c, LATERAL (SELECT unnest(range(1, len(v) + 1)) AS i) r"""
 
+  /** The micro-unit coordinates of [[microUnitsSql]] split into 8-wide
+    * PQ subspaces: one (vec_id, sb, wd, xu) row per dimension, `sb` the
+    * subspace and `wd` the offset within it.
+    */
+  private val subspaceUnitsSql =
+    """SELECT vec_id, (i - 1) // 8 AS sb, (i - 1) % 8 AS wd,
+                    CAST(round(v[i] * 1000000) AS BIGINT) AS xu
+             FROM c, LATERAL (SELECT unnest(range(1, len(v) + 1)) AS i) r"""
+
   /** The exact integer-L2² top-5 truth over a coordinate table `coords`
     * joined on its coordinate columns `keys`: `dist` holds every probe's
     * (vec_id < 10) squared distance to every other vector, `top` its 5
@@ -147,14 +156,12 @@ object Similarity {
       s"(${j + 1}, ${vj.map(dstr).mkString("[", ", ", "]")}, ${dstr(off)})"
     }.mkString(",\n        ")
     s"""
-      WITH c AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      WITH $corpusCte,
       n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM c),
       ml AS (SELECT $mLit AS m),
       bs(j, bj, offj) AS (VALUES
         $bRows),
-      xu_raw AS (SELECT vec_id, (i - 1) // 8 AS sb, (i - 1) % 8 AS wd,
-                        CAST(round(v[i] * 1000000) AS BIGINT) AS xu
-                 FROM c, LATERAL (SELECT unnest(range(1, len(v) + 1)) AS i) r),
+      xu_raw AS ($subspaceUnitsSql),
       xu_cen AS (SELECT vec_id, (i - 1) // 8 AS sb, (i - 1) % 8 AS wd,
                         CAST(round((v[i] - ml.m[i]) * 1000000) AS BIGINT) AS xu
                  FROM c, LATERAL (SELECT unnest(range(1, len(v) + 1)) AS i) r, ml),
@@ -645,10 +652,7 @@ object Similarity {
         SELECT m.vec_id, CASE WHEN d.d2 < m.dmin THEN d.d2 ELSE m.dmin END AS dmin
         FROM m$k m JOIN d$k d ON d.vec_id = m.vec_id)"""
     }.mkString
-    s"""c AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      vud AS MATERIALIZED (SELECT vec_id, i - 1 AS dim,
-                   CAST(round(v[i] * 1000000) AS BIGINT) AS xu
-             FROM c, LATERAL (SELECT unnest(range(1, len(v) + 1)) AS i) r),
+    s"""$corpusCte, vud AS MATERIALIZED (${microUnitsSql("dim")}),
       c0 AS (SELECT min(vec_id) AS cid FROM c),
       ${dist("m1x", "c0")},
       m1 AS MATERIALIZED (SELECT vec_id, d2 AS dmin FROM m1x)$steps"""
@@ -659,8 +663,8 @@ object Similarity {
     * SQL both LSH oracles compose, so the plane/hash rule can never drift
     * between them.
     */
-  private val lshSigSql: String = """
-      c AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+  private val lshSigSql: String = s"""
+      $corpusCte,
       ex AS (SELECT vec_id, i, CAST(round(v[i] * 1000000) AS BIGINT) AS xu
              FROM c, LATERAL (SELECT unnest(range(1, len(v) + 1)) AS i) r),
       w AS (SELECT p, i,
@@ -675,8 +679,8 @@ object Similarity {
   /** Canonical DuckDB SQL for the brute-force cosine top-5 — single source
     * for sim_cosine_topk AND the neighbor set of sim_knn_label.
     */
-  private val cosineTopkSql: String = """
-      WITH c AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+  private val cosineTopkSql: String = s"""
+      WITH $corpusCte,
       p AS (SELECT vec_id AS q_id, v AS qv FROM c WHERE vec_id < 10),
       scored AS (
         SELECT q_id, vec_id,
@@ -743,11 +747,8 @@ object Similarity {
     * exact integer arithmetic — shared prefix of pqAdcSql (top-5) and
     * pqRerankSql (top-50 shortlist → exact re-rank).
     */
-  private val pqAdcCtes: String = """
-      WITH c AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      xu AS (SELECT vec_id, (i - 1) // 8 AS sb, (i - 1) % 8 AS wd,
-                    CAST(round(v[i] * 1000000) AS BIGINT) AS xu
-             FROM c, LATERAL (SELECT unnest(range(1, len(v) + 1)) AS i) r),
+  private val pqAdcCtes: String = s"""
+      WITH $corpusCte, xu AS ($subspaceUnitsSql),
       seeds AS (SELECT vec_id AS c_id, sb, wd, xu AS cu FROM xu WHERE vec_id < 16),
       a1d AS (SELECT x.vec_id, x.sb, s.c_id,
                      sum((x.xu - s.cu) * (x.xu - s.cu)) AS d2
@@ -816,11 +817,9 @@ object Similarity {
       FROM t$k, n"""
     }.mkString("\n      UNION ALL")
     s"""
-      WITH c AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      WITH $corpusCte,
       n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM c),
-      xu AS (SELECT vec_id, (i - 1) // 8 AS sb, (i - 1) % 8 AS wd,
-                    CAST(round(v[i] * 1000000) AS BIGINT) AS xu
-             FROM c, LATERAL (SELECT unnest(range(1, len(v) + 1)) AS i) r),
+      xu AS ($subspaceUnitsSql),
       seeds AS (SELECT vec_id AS c_id, sb, wd, xu AS cu FROM xu WHERE vec_id < 16),
       a1d AS (SELECT x.vec_id, x.sb, s.c_id,
                      sum((x.xu - s.cu) * (x.xu - s.cu)) AS d2
@@ -862,11 +861,9 @@ object Similarity {
                / 1000000000000.0, 6) AS mse
       FROM t_$sfx, n"""
     s"""
-      WITH c AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+      WITH $corpusCte,
       n AS (SELECT CAST(count(*) AS BIGINT) AS n FROM c),
-      xu AS (SELECT vec_id, (i - 1) // 8 AS sb, (i - 1) % 8 AS wd,
-                    CAST(round(v[i] * 1000000) AS BIGINT) AS xu
-             FROM c, LATERAL (SELECT unnest(range(1, len(v) + 1)) AS i) r),
+      xu AS ($subspaceUnitsSql),
       seeds_fix AS (SELECT vec_id AS c_id, sb, wd, xu AS cu
                     FROM xu WHERE vec_id < 16),
       sel AS (SELECT vec_id FROM c
@@ -1459,11 +1456,8 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
     * (vec_id < 10) top-20 candidates by integer dot-product relevance (cand),
     * and every candidate pair's dot product (pd).
     */
-  private lazy val mmrCandCtes: String = """
-      WITH c AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      vu AS MATERIALIZED (SELECT vec_id, i - 1 AS dim_i,
-                   CAST(round(v[i] * 1000000) AS BIGINT) AS xu
-             FROM c, LATERAL (SELECT unnest(range(1, len(v) + 1)) AS i) r),
+  private lazy val mmrCandCtes: String = s"""
+      WITH $corpusCte, vu AS MATERIALIZED (${microUnitsSql("dim_i")}),
       rel AS (SELECT p.vec_id AS q_id, b.vec_id, sum(p.xu * b.xu) AS rel
               FROM vu p JOIN vu b ON p.dim_i = b.dim_i
               WHERE p.vec_id < 10 AND b.vec_id <> p.vec_id
@@ -2066,10 +2060,8 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
       FROM ($union)"""
     },
 
-    "sim_range_search" -> """
-      WITH c AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      vu AS (SELECT vec_id, i - 1 AS dim_i, CAST(round(v[i] * 1000000) AS BIGINT) AS xu
-             FROM c, LATERAL (SELECT unnest(range(1, len(v) + 1)) AS i) r),
+    "sim_range_search" -> s"""
+      WITH $corpusCte, vu AS (${microUnitsSql("dim_i")}),
       d AS (SELECT p.vec_id AS q_id, b.vec_id,
                    sum((p.xu - b.xu) * (p.xu - b.xu)) AS d2
             FROM vu p JOIN vu b ON p.dim_i = b.dim_i
@@ -2082,10 +2074,8 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
 
     // Matryoshka prefix-dim recall: per-k distances from the dim_i < k
     // restriction of the same integer coordinate table.
-    "emb_matryoshka_recall" -> """
-      WITH c AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      vu AS (SELECT vec_id, i - 1 AS dim_i, CAST(round(v[i] * 1000000) AS BIGINT) AS xu
-             FROM c, LATERAL (SELECT unnest(range(1, len(v) + 1)) AS i) r),
+    "emb_matryoshka_recall" -> s"""
+      WITH $corpusCte, vu AS (${microUnitsSql("dim_i")}),
       ks AS (SELECT unnest([8, 16, 32, 64]) AS k),
       dist AS (SELECT ks.k, p.vec_id AS q_id, b.vec_id,
                       sum((p.xu - b.xu) * (p.xu - b.xu)) AS d2
@@ -2192,10 +2182,8 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
       UNION ALL
       SELECT 'binary_rerank', 64, CAST(count(*) AS BIGINT), round(count(*) / 50.0, 6)
       FROM x JOIN bi ON x.q_id = bi.q_id AND x.vec_id = bi.vec_id""",
-    "emb_covariance" -> """
-      WITH c AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      ex AS (SELECT vec_id, i - 1 AS di, CAST(round(v[i] * 1000000) AS BIGINT) AS xu
-             FROM c, LATERAL (SELECT unnest(range(1, len(v) + 1)) AS i) r),
+    "emb_covariance" -> s"""
+      WITH $corpusCte, ex AS (${microUnitsSql("di")}),
       p AS (SELECT a.di AS i, b.di AS j,
                    sum(CAST(a.xu AS HUGEINT) * b.xu) AS sp,
                    CAST(sum(a.xu) AS BIGINT) AS sua,
@@ -2312,8 +2300,8 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
     "sim_lsh_buckets" -> s"""
       WITH $lshSigSql
       SELECT vec_id, bucket FROM buckets""",
-    "emb_dim_stats" -> """
-      WITH c AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+    "emb_dim_stats" -> s"""
+      WITH $corpusCte,
       ex AS (SELECT i - 1 AS dim, v[i] AS x,
                     CAST(round(v[i] * 1000000) AS BIGINT) AS xu
              FROM c, LATERAL (SELECT unnest(range(1, len(v) + 1)) AS i) r),
@@ -2330,8 +2318,8 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
     // verdicts replay in exact integer cross-multiplication (no division);
     // the planted +0.25 on dims 0-3 of the odd-parity slice is applied in
     // identical micro-units on both engines
-    "emb_drift" -> """
-      WITH c AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
+    "emb_drift" -> s"""
+      WITH $corpusCte,
       ex AS (SELECT vec_id, i - 1 AS dim,
                     CAST(round(v[i] * 1000000) AS BIGINT)
                       + CASE WHEN vec_id % 2 = 1 AND i - 1 < 4
@@ -2351,11 +2339,8 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
       SELECT p.*, t.n_drifted_dims
       FROM p, (SELECT CAST(sum(CASE WHEN drifted THEN 1 ELSE 0 END) AS BIGINT)
                  AS n_drifted_dims FROM p) t""",
-    "emb_quantize_int8" -> """
-      WITH c AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-      ex AS (SELECT vec_id, i - 1 AS dim,
-                    CAST(round(v[i] * 1000000) AS BIGINT) AS xu
-             FROM c, LATERAL (SELECT unnest(range(1, len(v) + 1)) AS i) r),
+    "emb_quantize_int8" -> s"""
+      WITH $corpusCte, ex AS (${microUnitsSql("dim")}),
       sc AS (SELECT dim, max(abs(xu)) AS m FROM ex GROUP BY dim)
       SELECT vec_id, CAST(ex.dim AS INTEGER) AS dim,
              CAST(CASE WHEN m = 0 THEN 0
