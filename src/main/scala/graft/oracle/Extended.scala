@@ -220,13 +220,7 @@ object Extended {
     // the edge set IS dedup_minhash_lsh's oracle — referenced, not copied,
     // so the hash scheme has exactly one SQL definition
     "dedup_cluster_cc" -> s"""
-      WITH RECURSIVE pairs AS (${TextOps.minhashPairsSql}),
-      edges AS (SELECT da AS src, db AS dst FROM pairs
-                UNION SELECT db, da FROM pairs),
-      reach(node, lbl) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node)
+      WITH RECURSIVE pairs AS (${TextOps.minhashPairsSql}),${TextOps.reachCtes("")}
       SELECT node AS doc_id, min(lbl) AS cluster_id
       FROM reach GROUP BY node""",
     // the oracle re-derives BOTH clusterings from scratch (full graph and
@@ -237,26 +231,9 @@ object Extended {
     "dedup_cluster_cc_incremental" -> {
       def isB(c: String) =
         s"('0x' || substr(md5('inc' || $c::VARCHAR), 1, 15))::BIGINT % 8 = 0"
-      s"""
-      WITH RECURSIVE pairs AS (${TextOps.minhashPairsSql}),
-      edges AS (SELECT da AS src, db AS dst FROM pairs
-                UNION SELECT db, da FROM pairs),
-      reach(node, lbl) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node),
-      cc AS (SELECT node AS doc_id, min(lbl) AS cluster_id
-             FROM reach GROUP BY node),
+      s"""${TextOps.minhashComponentsSql},
       bpairs AS (SELECT da, db FROM pairs
-                 WHERE NOT ${isB("da")} AND NOT ${isB("db")}),
-      bedges AS (SELECT da AS src, db AS dst FROM bpairs
-                 UNION SELECT db, da FROM bpairs),
-      breach(node, lbl) AS (
-        SELECT src, src FROM bedges
-        UNION
-        SELECT e.dst, r.lbl FROM breach r JOIN bedges e ON e.src = r.node),
-      bcc AS (SELECT node AS doc_id, min(lbl) AS cluster_id
-              FROM breach GROUP BY node),
+                 WHERE NOT ${isB("da")} AND NOT ${isB("db")}),${TextOps.componentsCtes("b")},
       ddocs AS (SELECT DISTINCT doc_id FROM (
                   SELECT da AS doc_id FROM pairs WHERE ${isB("da")} OR ${isB("db")}
                   UNION ALL
@@ -273,16 +250,7 @@ object Extended {
     // cluster labels re-derived recursively; both split assignments replay
     // the identical md5('split' || id) scheme, so cluster_straddle_pairs=0
     // is PROVEN against an independent engine, not asserted
-    "pipeline_split_leakage_safe" -> s"""
-      WITH RECURSIVE pairs AS (${TextOps.minhashPairsSql}),
-      edges AS (SELECT da AS src, db AS dst FROM pairs
-                UNION SELECT db, da FROM pairs),
-      reach(node, lbl) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node),
-      cc AS (SELECT node AS doc_id, min(lbl) AS cluster_id
-             FROM reach GROUP BY node),
+    "pipeline_split_leakage_safe" -> s"""${TextOps.minhashComponentsSql},
       a AS (SELECT d.doc_id, coalesce(cc.cluster_id, d.doc_id) AS cluster_id
             FROM documents d LEFT JOIN cc ON d.doc_id = cc.doc_id),
       w AS (SELECT doc_id, cluster_id,
@@ -317,15 +285,7 @@ object Extended {
             UNION ALL SELECT b FROM tri
             UNION ALL SELECT c FROM tri)
       SELECT doc_id, count(*) AS n_tri FROM m GROUP BY doc_id""",
-    "dedup_canonical" -> s"""
-      WITH RECURSIVE pairs AS (${TextOps.minhashPairsSql}),
-      edges AS (SELECT da AS src, db AS dst FROM pairs
-                UNION SELECT db, da FROM pairs),
-      reach(node, lbl) AS (
-        SELECT src, src FROM edges
-        UNION
-        SELECT e.dst, r.lbl FROM reach r JOIN edges e ON e.src = r.node),
-      cc AS (SELECT node AS doc_id, min(lbl) AS cluster_id FROM reach GROUP BY node),
+    "dedup_canonical" -> s"""${TextOps.minhashComponentsSql},
       lab AS (SELECT d.doc_id, coalesce(cc.cluster_id, d.doc_id) AS cluster_id, d.n_chars
               FROM documents d LEFT JOIN cc ON d.doc_id = cc.doc_id),
       canon AS (SELECT cluster_id, doc_id AS canonical_id FROM (

@@ -155,6 +155,33 @@ object TextOps {
       FROM bands a JOIN bands b
         ON a.band = b.band AND a.bk = b.bk AND a.doc_id < b.doc_id"""
 
+  /** Reachability over a `<p>pairs(da, db)` CTE: `<p>edges` holds both
+    * directions of every pair and `<p>reach(node, lbl)` every node with
+    * each node it reaches (recursive, set semantics), so min(lbl) per node
+    * is its connected-component label. Needs `WITH RECURSIVE`.
+    */
+  private[oracle] def reachCtes(p: String): String = s"""
+      ${p}edges AS (SELECT da AS src, db AS dst FROM ${p}pairs
+                UNION SELECT db, da FROM ${p}pairs),
+      ${p}reach(node, lbl) AS (
+        SELECT src, src FROM ${p}edges
+        UNION
+        SELECT e.dst, r.lbl FROM ${p}reach r JOIN ${p}edges e ON e.src = r.node)"""
+
+  /** [[reachCtes]] plus `<p>cc(doc_id, cluster_id)`: every paired doc with
+    * its component label, the smallest doc_id it reaches.
+    */
+  private[oracle] def componentsCtes(p: String): String = reachCtes(p) + s""",
+      ${p}cc AS (SELECT node AS doc_id, min(lbl) AS cluster_id
+             FROM ${p}reach GROUP BY node)"""
+
+  /** The minhash components chain: the near-dup pairs of
+    * [[minhashPairsSql]] and their connected components `cc`.
+    */
+  private[oracle] val minhashComponentsSql: String =
+    s"""
+      WITH RECURSIVE pairs AS ($minhashPairsSql),${componentsCtes("")}"""
+
   /** The robust-winnowing selection CTE chain ending in
     * `picked(doc_id, k)` (k = packed 36-bit-hash × 2²⁴ + reversed
     * position) plus `toksq` — shared by the per-doc fingerprint oracle and
