@@ -43,6 +43,19 @@ object TextOps {
     ctes.mkString(",\n      ")
   }
 
+  /** Per non-empty document: the fixed linear quality logit in micro-units
+    * (`logit_u`, from its letter, digit, space and capital shares) and the
+    * English label `y` — the scorer the quality oracles calibrate.
+    */
+  private val qualityLogitSql = """CAST(-900000
+                 + 2 * (length(regexp_replace(text, '[^A-Za-z]', '', 'g')) * 1000000 // length(text))
+                 - 4 * (length(regexp_replace(text, '[^0-9]', '', 'g')) * 1000000 // length(text))
+                 +     (length(regexp_replace(text, '[^ ]', '', 'g')) * 1000000 // length(text))
+                 - 3 * (length(regexp_replace(text, '[^A-Z]', '', 'g')) * 1000000 // length(text))
+                 AS BIGINT) AS logit_u,
+               CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
+        FROM documents WHERE length(text) > 0"""
+
   /** DuckDB SQL for text_quality_isotonic, generated at Verify time: the
     * binning re-derived in SQL, the driver-fitted pools embedded as
     * VALUES literals (the emb_pca_topk literal-kernel discipline).
@@ -56,14 +69,7 @@ object TextOps {
     }.mkString(", ")
     s"""
       WITH f AS (
-        SELECT CAST(-900000
-                 + 2 * (length(regexp_replace(text, '[^A-Za-z]', '', 'g')) * 1000000 // length(text))
-                 - 4 * (length(regexp_replace(text, '[^0-9]', '', 'g')) * 1000000 // length(text))
-                 +     (length(regexp_replace(text, '[^ ]', '', 'g')) * 1000000 // length(text))
-                 - 3 * (length(regexp_replace(text, '[^A-Z]', '', 'g')) * 1000000 // length(text))
-                 AS BIGINT) AS logit_u,
-               CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-        FROM documents WHERE length(text) > 0),
+        SELECT $qualityLogitSql),
       g AS (SELECT CAST(floor(logit_u / 10000.0) AS BIGINT) AS bin,
                    CAST(count(*) AS BIGINT) AS n,
                    CAST(sum(y) AS BIGINT) AS n_pos
@@ -281,17 +287,11 @@ object TextOps {
                   JOIN sig t ON c.doc_id = t.doc_id"""
   }
 
-  /** The gated-mix selection chain — near-dup/quality/langid keep set,
-    * severity-gated survivors, per-source counts, and the mix thresholds
-    * — shared verbatim by `pipeline_train_mix_gated` and
-    * `pipeline_mix_packing`, so "the training set under the mix" has
-    * exactly one SQL definition.
+  /** The document filters both mix oracles apply: the letter-share quality
+    * cut, the LangId English cut, and no near-duplicate (keep), with each
+    * document's token count (stok). Expects a neardup CTE in scope.
     */
-  /** The full-recompute mix oracle, shared verbatim by pipeline_train_mix
-    * and its incremental twin — one SQL definition of the mix.
-    */
-  private lazy val trainMixSql: String = s"""
-      WITH neardup AS (SELECT DISTINCT db FROM ($ngramJaccardSql)),
+  private lazy val mixKeepCtes: String = s"""
       quality AS (SELECT doc_id FROM documents
                   WHERE round(length(regexp_replace(text, '[^A-Za-z]', '', 'g'))
                           / CAST(length(text) AS DOUBLE), 6) >= 0.81),
@@ -305,7 +305,14 @@ object TextOps {
                FROM (SELECT doc_id,
                             unnest(regexp_split_to_array(trim(text), '\\s+')) AS t
                      FROM documents) u
-               WHERE length(t) > 0 GROUP BY doc_id),
+               WHERE length(t) > 0 GROUP BY doc_id)"""
+
+  /** The full-recompute mix oracle, shared verbatim by pipeline_train_mix
+    * and its incremental twin — one SQL definition of the mix.
+    */
+  private lazy val trainMixSql: String = s"""
+      WITH neardup AS (SELECT DISTINCT db FROM ($ngramJaccardSql)),
+      $mixKeepCtes,
       surv AS (SELECT d.doc_id, d.source, coalesce(s.toks, 0) AS toks
                FROM documents d JOIN keep k ON d.doc_id = k.doc_id
                LEFT JOIN stok s ON d.doc_id = s.doc_id),
@@ -323,22 +330,15 @@ object TextOps {
       FROM surv s JOIN t ON s.source = t.source
       GROUP BY 1, 2, 3, 4"""
 
+  /** The gated-mix selection chain — near-dup/quality/langid keep set,
+    * severity-gated survivors, per-source counts, and the mix thresholds
+    * — shared verbatim by `pipeline_train_mix_gated` and
+    * `pipeline_mix_packing`, so "the training set under the mix" has
+    * exactly one SQL definition.
+    */
   private lazy val gatedMixCtes: String = s"""
       neardup AS (SELECT DISTINCT db FROM ($ngramJaccardSql)),
-      quality AS (SELECT doc_id FROM documents
-                  WHERE round(length(regexp_replace(text, '[^A-Za-z]', '', 'g'))
-                          / CAST(length(text) AS DOUBLE), 6) >= 0.81),
-      english AS (SELECT doc_id
-                  FROM (${graft.functions.LangId.langIdSql})
-                  WHERE lang_pred = 'en'),
-      keep AS (SELECT q.doc_id FROM quality q
-               JOIN english e ON q.doc_id = e.doc_id
-               WHERE NOT EXISTS (SELECT 1 FROM neardup n WHERE n.db = q.doc_id)),
-      stok AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS toks
-               FROM (SELECT doc_id,
-                            unnest(regexp_split_to_array(trim(text), '\\s+')) AS t
-                     FROM documents) u
-               WHERE length(t) > 0 GROUP BY doc_id),
+      $mixKeepCtes,
       surv AS (SELECT d.doc_id, d.source, coalesce(s.toks, 0) AS toks,
                       CASE WHEN d.n_chars < 100 THEN 1 ELSE 0 END AS warned
                FROM documents d JOIN keep k ON d.doc_id = k.doc_id
@@ -1340,17 +1340,9 @@ object TextOps {
                            THEN 1 ELSE 0 END) AS BIGINT) AS n_kept
       FROM surv2 s JOIN t2 t ON s.source = t.source
       GROUP BY 1, 2, 3, 4, 5, 6""",
-    "text_quality_auc" -> """
+    "text_quality_auc" -> s"""
       WITH f AS (
-        SELECT source,
-               CAST(-900000
-                 + 2 * (length(regexp_replace(text, '[^A-Za-z]', '', 'g')) * 1000000 // length(text))
-                 - 4 * (length(regexp_replace(text, '[^0-9]', '', 'g')) * 1000000 // length(text))
-                 +     (length(regexp_replace(text, '[^ ]', '', 'g')) * 1000000 // length(text))
-                 - 3 * (length(regexp_replace(text, '[^A-Z]', '', 'g')) * 1000000 // length(text))
-                 AS BIGINT) AS logit_u,
-               CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-        FROM documents WHERE length(text) > 0),
+        SELECT source, $qualityLogitSql),
       g AS (SELECT source, logit_u,
                    CAST(sum(y) AS BIGINT) AS pos_g,
                    CAST(count(*) - sum(y) AS BIGINT) AS neg_g
@@ -1368,16 +1360,9 @@ object TextOps {
                              / (2.0 * sum(pos_g) * sum(neg_g)), 6)
              END AS auc
       FROM cum GROUP BY 1""",
-    "text_quality_calibration" -> """
+    "text_quality_calibration" -> s"""
       WITH f AS (
-        SELECT CAST(-900000
-                 + 2 * (length(regexp_replace(text, '[^A-Za-z]', '', 'g')) * 1000000 // length(text))
-                 - 4 * (length(regexp_replace(text, '[^0-9]', '', 'g')) * 1000000 // length(text))
-                 +     (length(regexp_replace(text, '[^ ]', '', 'g')) * 1000000 // length(text))
-                 - 3 * (length(regexp_replace(text, '[^A-Z]', '', 'g')) * 1000000 // length(text))
-                 AS BIGINT) AS logit_u,
-               CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS y
-        FROM documents WHERE length(text) > 0),
+        SELECT $qualityLogitSql),
       b AS (SELECT CAST(floor(logit_u / 10000.0) AS BIGINT) AS bin, logit_u, y FROM f),
       g AS (SELECT bin, CAST(count(*) AS BIGINT) AS n,
                    CAST(sum(y) AS BIGINT) AS n_pos,
