@@ -26,6 +26,46 @@ object Extended {
                  sample_rate, duration_us, checksum)"""
   }
 
+  /** The depth-4 BFS replay over an `edges(src, dst)` CTE from a
+    * `seeds(node)` CTE: set-semantics recursive expansion, each node at its
+    * minimum depth, counted per depth (the readout ends FROM md GROUP BY 1).
+    */
+  private lazy val bfsDepthsSql: String = """
+      walk(node, depth) AS (
+        SELECT node, 0 FROM seeds
+        UNION
+        SELECT e.dst, w.depth + 1
+        FROM walk w JOIN edges e ON e.src = w.node
+        WHERE w.depth < 4),
+      md AS (SELECT node, min(depth) AS depth FROM walk GROUP BY 1)
+      SELECT CAST(depth AS INTEGER) AS depth,
+             CAST(count(*) AS BIGINT) AS n_nodes,
+             CAST(sum(node) AS BIGINT) AS sum_doc_id"""
+
+  /** The select list of the grouping-set oracles: line count and quantity
+    * total per (returnflag, linestatus) group, a rolled-up key reading ALL.
+    */
+  private lazy val lineitemRollupSelect: String = """
+      SELECT coalesce(l_returnflag, 'ALL') AS flag,
+             coalesce(l_linestatus, 'ALL') AS status,
+             count(*) AS n,
+             sum(CAST(round(l_quantity * 100) AS BIGINT)) / 100.0 AS sum_qty"""
+
+  /** The head of the correlation and regression oracles: quantity (qx) and
+    * price (px) in integer cents per line, and per return flag the count and
+    * the first sums of their moments, continued by each caller.
+    */
+  private lazy val lineitemMomentsHead: String = """
+      WITH cents AS (
+        SELECT l_returnflag,
+               CAST(round(l_quantity * 100) AS BIGINT) AS qx,
+               CAST(round(l_extendedprice * 100) AS BIGINT) AS px
+        FROM lineitem),
+      m AS (
+        SELECT l_returnflag, count(*) AS n,
+               sum(qx) AS sx, sum(px) AS sy,
+               sum(CAST(qx AS HUGEINT) * px) AS sxy"""
+
   val oracle: Map[String, String] = Map(
     "diag_expectations" -> """
       WITH li AS (
@@ -122,23 +162,14 @@ object Extended {
              n_load1 - n_load0 AS delta,
              abs(n_load1 - n_load0) * 2 > greatest(n_load0, 1) AS drifted
       FROM u""",
-    "a12_rollup" -> """
-      SELECT coalesce(l_returnflag, 'ALL') AS flag,
-             coalesce(l_linestatus, 'ALL') AS status,
-             count(*) AS n,
-             sum(CAST(round(l_quantity * 100) AS BIGINT)) / 100.0 AS sum_qty
+    "a12_rollup" -> s"""
+      ${lineitemRollupSelect}
       FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""",
-    "a12b_cube" -> """
-      SELECT coalesce(l_returnflag, 'ALL') AS flag,
-             coalesce(l_linestatus, 'ALL') AS status,
-             count(*) AS n,
-             sum(CAST(round(l_quantity * 100) AS BIGINT)) / 100.0 AS sum_qty
+    "a12b_cube" -> s"""
+      ${lineitemRollupSelect}
       FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""",
-    "a22_grouping_sets" -> """
-      SELECT coalesce(l_returnflag, 'ALL') AS flag,
-             coalesce(l_linestatus, 'ALL') AS status,
-             count(*) AS n,
-             sum(CAST(round(l_quantity * 100) AS BIGINT)) / 100.0 AS sum_qty
+    "a22_grouping_sets" -> s"""
+      ${lineitemRollupSelect}
       FROM lineitem
       GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))""",
     "a17_histogram" -> """
@@ -322,16 +353,8 @@ object Extended {
              CAST(sum(CASE WHEN (start + n - 1) // 512 > start // 512
                            THEN 1 ELSE 0 END) AS BIGINT) AS n_crossing
       FROM placed GROUP BY 1, 2""",
-    "a15_corr" -> """
-      WITH cents AS (
-        SELECT l_returnflag,
-               CAST(round(l_quantity * 100) AS BIGINT) AS qx,
-               CAST(round(l_extendedprice * 100) AS BIGINT) AS px
-        FROM lineitem),
-      m AS (
-        SELECT l_returnflag, count(*) AS n,
-               sum(qx) AS sx, sum(px) AS sy,
-               sum(CAST(qx AS HUGEINT) * px) AS sxy,
+    "a15_corr" -> s"""
+      ${lineitemMomentsHead},
                sum(CAST(qx AS HUGEINT) * qx) AS sxx,
                sum(CAST(px AS HUGEINT) * px) AS syy
         FROM cents GROUP BY l_returnflag)
@@ -430,16 +453,7 @@ object Extended {
       seeds AS (SELECT node FROM nodes
                 WHERE ('0x' || substr(md5('bfs' || node::VARCHAR), 1, 15))::BIGINT
                       % 10 = 0),
-      walk(node, depth) AS (
-        SELECT node, 0 FROM seeds
-        UNION
-        SELECT e.dst, w.depth + 1
-        FROM walk w JOIN edges e ON e.src = w.node
-        WHERE w.depth < 4),
-      md AS (SELECT node, min(depth) AS depth FROM walk GROUP BY 1)
-      SELECT CAST(depth AS INTEGER) AS depth,
-             CAST(count(*) AS BIGINT) AS n_nodes,
-             CAST(sum(node) AS BIGINT) AS sum_doc_id
+      ${bfsDepthsSql}
       FROM md GROUP BY 1""",
     // the weighted power iteration unrolled over the exact-Jaccard pair
     // frame — contributions r·w // Σw in integer micro-units, so the SQL
@@ -475,16 +489,7 @@ object Extended {
       seeds AS (SELECT node FROM nodes
                 WHERE ('0x' || substr(md5('bfsw' || node::VARCHAR), 1, 15))::BIGINT
                       % 10 = 0),
-      walk(node, depth) AS (
-        SELECT node, 0 FROM seeds
-        UNION
-        SELECT e.dst, w.depth + 1
-        FROM walk w JOIN edges e ON e.src = w.node
-        WHERE w.depth < 4),
-      md AS (SELECT node, min(depth) AS depth FROM walk GROUP BY 1)
-      SELECT CAST(depth AS INTEGER) AS depth,
-             CAST(count(*) AS BIGINT) AS n_nodes,
-             CAST(sum(node) AS BIGINT) AS sum_doc_id
+      ${bfsDepthsSql}
       FROM md GROUP BY 1""",
     "graph_pagerank" -> s"""
       WITH pairs AS (${TextOps.minhashPairsSql}),
@@ -790,16 +795,8 @@ object Extended {
                               // n_chars, doc_id) AS rk
             FROM documents)
       WHERE rk <= 25""",
-    "a20_linreg" -> """
-      WITH cents AS (
-        SELECT l_returnflag,
-               CAST(round(l_quantity * 100) AS BIGINT) AS qx,
-               CAST(round(l_extendedprice * 100) AS BIGINT) AS px
-        FROM lineitem),
-      m AS (
-        SELECT l_returnflag, count(*) AS n,
-               sum(qx) AS sx, sum(px) AS sy,
-               sum(CAST(qx AS HUGEINT) * px) AS sxy,
+    "a20_linreg" -> s"""
+      ${lineitemMomentsHead},
                sum(CAST(qx AS HUGEINT) * qx) AS sxx
         FROM cents GROUP BY l_returnflag),
       s AS (

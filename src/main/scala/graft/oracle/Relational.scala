@@ -2,6 +2,20 @@ package graft.oracle
 
 /** DuckDB oracle SQL for [[graft.queries.Relational]]'s queries. */
 object Relational {
+  /** Revenue per nation over the five-table join — one answer whatever
+    * physical layout (plain or bucketed) the engine read.
+    */
+  private val multijoinSql = """
+      SELECT n_name,
+             sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000) AS BIGINT)) / 10000.0 AS revenue
+      FROM customer
+      JOIN orders ON c_custkey = o_custkey
+      JOIN lineitem ON o_orderkey = l_orderkey
+      JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
+      JOIN nation ON s_nationkey = n_nationkey
+      JOIN region ON n_regionkey = r_regionkey
+      GROUP BY n_name"""
+
   val oracle: Map[String, String] = Map(
     "s3_scan_prune" ->
       "SELECT l_orderkey, l_linenumber, l_extendedprice FROM lineitem WHERE l_extendedprice > 3000.0",
@@ -237,28 +251,10 @@ object Relational {
             GROUP BY 1)
       GROUP BY 1""",
 
-    "q5_multijoin" -> """
-      SELECT n_name,
-             sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000) AS BIGINT)) / 10000.0 AS revenue
-      FROM customer
-      JOIN orders ON c_custkey = o_custkey
-      JOIN lineitem ON o_orderkey = l_orderkey
-      JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-      JOIN nation ON s_nationkey = n_nationkey
-      JOIN region ON n_regionkey = r_regionkey
-      GROUP BY n_name""",
+    "q5_multijoin" -> multijoinSql,
     // identical answer through the bucketed layout — the oracle doesn't
     // (and shouldn't) know which physical layout produced it
-    "q5b_bucketed_multijoin" -> """
-      SELECT n_name,
-             sum(CAST(round(l_extendedprice * (1.0 - l_discount) * 10000) AS BIGINT)) / 10000.0 AS revenue
-      FROM customer
-      JOIN orders ON c_custkey = o_custkey
-      JOIN lineitem ON o_orderkey = l_orderkey
-      JOIN supplier ON l_suppkey = s_suppkey AND c_nationkey = s_nationkey
-      JOIN nation ON s_nationkey = n_nationkey
-      JOIN region ON n_regionkey = r_regionkey
-      GROUP BY n_name""",
+    "q5b_bucketed_multijoin" -> multijoinSql,
 
     // S1B: the mzML source itself isn't DuckDB-readable, but the synthetic
     // runs are closed-form deterministic — the expected per-run stats table

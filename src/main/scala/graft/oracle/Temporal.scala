@@ -2,17 +2,24 @@ package graft.oracle
 
 /** DuckDB oracle SQL for [[graft.queries.Temporal]]'s queries. */
 object Temporal {
-  /** The streaming sessionizer answers the identical question as the batch
-    * window version, so it shares w3's oracle SQL verbatim.
+  /** Per event: its event-time micro-seconds (us) and whether it opens a new
+    * session (gap = 1 after more than 30 minutes of user inactivity) — the
+    * gap rule every session oracle shares.
     */
-  private val sessionizeSql = """
+  private lazy val sessionGapCte: String = """
       WITH g AS (
         SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
                CASE WHEN epoch_us(CAST(ts AS TIMESTAMP))
                       - lag(epoch_us(CAST(ts AS TIMESTAMP)), 1)
                         OVER (PARTITION BY user_id ORDER BY ts, event_id)
                       > 30 * 60 * 1000000 THEN 1 ELSE 0 END AS gap
-        FROM events),
+        FROM events)"""
+
+  /** The streaming sessionizer answers the identical question as the batch
+    * window version, so it shares w3's oracle SQL verbatim.
+    */
+  private val sessionizeSql = s"""
+      ${sessionGapCte},
       sess AS (
         SELECT user_id, us,
                CAST(sum(gap) OVER (PARTITION BY user_id ORDER BY us, event_id
@@ -27,14 +34,8 @@ object Temporal {
     * (`stream_session_window`) variants: one SQL truth for both engines'
     * session semantics.
     */
-  private val sessionWindowSql = """
-      WITH g AS (
-        SELECT user_id, event_id, epoch_us(CAST(ts AS TIMESTAMP)) AS us,
-               CASE WHEN epoch_us(CAST(ts AS TIMESTAMP))
-                      - lag(epoch_us(CAST(ts AS TIMESTAMP)), 1)
-                        OVER (PARTITION BY user_id ORDER BY ts, event_id)
-                      > 30 * 60 * 1000000 THEN 1 ELSE 0 END AS gap
-        FROM events),
+  private val sessionWindowSql = s"""
+      ${sessionGapCte},
       sess AS (
         SELECT user_id, us,
                sum(gap) OVER (PARTITION BY user_id ORDER BY us, event_id

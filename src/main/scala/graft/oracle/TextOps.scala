@@ -83,13 +83,12 @@ object TextOps {
       FROM g JOIN iso ON iso.bin = g.bin"""
   }
 
-  /** Canonical DuckDB SQL for the n-gram Jaccard pairs — the single source
-    * for dedup_ngram_jaccard AND the near-dup stage of
-    * pipeline_filter_dedup, so a change to the shingle/hash scheme cannot
-    * leave a stale copy behind.
+  /** The 4-gram shingle Jaccard chain over a `toks(doc_id, t)` CTE: distinct
+    * md5-hashed shingles per doc, hot shingles (document frequency over the
+    * cap) dropped, shared-shingle counts per doc pair and shingle counts per
+    * doc.
     */
-  private[oracle] val ngramJaccardSql: String = s"""
-      WITH toks AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM documents),
+  private lazy val shingleJaccardCtes: String = s"""
       sh0 AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+3], ' ') AS s
               FROM toks, LATERAL (SELECT unnest(range(1, len(t) - 2)) AS i) r),
       sh_all AS (SELECT doc_id, ('0x' || substr(md5(s), 1, 15))::BIGINT AS h FROM sh0),
@@ -98,7 +97,16 @@ object TextOps {
                              HAVING count(*) > $HotShingleDfCap)),
       pairs AS (SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS inter
                 FROM sh a JOIN sh b ON a.h = b.h AND a.doc_id < b.doc_id GROUP BY 1, 2),
-      sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id)
+      sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id)"""
+
+  /** Canonical DuckDB SQL for the n-gram Jaccard pairs — the single source
+    * for dedup_ngram_jaccard AND the near-dup stage of
+    * pipeline_filter_dedup, so a change to the shingle/hash scheme cannot
+    * leave a stale copy behind.
+    */
+  private[oracle] val ngramJaccardSql: String = s"""
+      WITH toks AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM documents),
+      ${shingleJaccardCtes}
       SELECT da, db, round(inter / (x.n + y.n - inter), 6) AS jaccard
       FROM pairs JOIN sizes x ON da = x.doc_id JOIN sizes y ON db = y.doc_id
       WHERE inter / (x.n + y.n - inter) > 0.8"""
@@ -435,6 +443,41 @@ object TextOps {
              round(CAST(-slp AS DOUBLE) / 1000000.0 / n_tokens, 6) AS avg_neg_logprob
       FROM sc"""
 
+  /** The MOSS match step over the winnowing selections: distinct per-doc
+    * fingerprints (fps), document-frequency-capped postings (fpc), pairs
+    * sharing at least 2 fingerprints (shared), and per-doc fingerprint counts
+    * (szs).
+    */
+  private lazy val winnowPairCtes: String = s"""
+      WITH $winnowingCtes,
+      fps AS (SELECT DISTINCT doc_id, k // 16777216 AS h FROM picked),
+      keepable AS (SELECT h FROM fps GROUP BY h
+                   HAVING count(*) <= $HotShingleDfCap),
+      fpc AS (SELECT f.doc_id, f.h FROM fps f JOIN keepable kp ON f.h = kp.h),
+      shared AS (SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS n_shared
+                 FROM fpc a JOIN fpc b ON a.h = b.h AND a.doc_id < b.doc_id
+                 GROUP BY 1, 2
+                 HAVING count(*) >= 2),
+      szs AS (SELECT doc_id, count(*) AS n FROM fpc GROUP BY 1)"""
+
+  /** The span locator head: the winnowing selections with positions (fpos),
+    * the df-capped postings with and without positions (fpc2, fpc), and pairs
+    * sharing at least 2 fingerprints (shared).
+    */
+  private lazy val winnowSpanCtes: String = s"""
+      WITH $winnowingCtes,
+      fpos AS (SELECT doc_id, k // 16777216 AS h,
+                      16777215 - (k % 16777216) AS p FROM picked),
+      fps AS (SELECT DISTINCT doc_id, h FROM fpos),
+      keepable AS (SELECT h FROM fps GROUP BY h
+                   HAVING count(*) <= $HotShingleDfCap),
+      fpc AS (SELECT f.doc_id, f.h FROM fps f JOIN keepable kp ON f.h = kp.h),
+      fpc2 AS (SELECT f.doc_id, f.h, f.p FROM fpos f JOIN keepable kp ON f.h = kp.h),
+      shared AS (SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS n_shared
+                 FROM fpc a JOIN fpc b ON a.h = b.h AND a.doc_id < b.doc_id
+                 GROUP BY 1, 2
+                 HAVING count(*) >= 2)"""
+
   val oracle: Map[String, String] = Map(
     "text_quality_lr" -> """
       WITH f AS (SELECT doc_id,
@@ -585,16 +628,7 @@ object TextOps {
     // fingerprints, df-capped postings, shared-count ≥ 2 pairs with
     // containment and Jaccard.
     "dedup_winnowing_pairs" -> s"""
-      WITH $winnowingCtes,
-      fps AS (SELECT DISTINCT doc_id, k // 16777216 AS h FROM picked),
-      keepable AS (SELECT h FROM fps GROUP BY h
-                   HAVING count(*) <= $HotShingleDfCap),
-      fpc AS (SELECT f.doc_id, f.h FROM fps f JOIN keepable kp ON f.h = kp.h),
-      shared AS (SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS n_shared
-                 FROM fpc a JOIN fpc b ON a.h = b.h AND a.doc_id < b.doc_id
-                 GROUP BY 1, 2
-                 HAVING count(*) >= 2),
-      szs AS (SELECT doc_id, count(*) AS n FROM fpc GROUP BY 1)
+      ${winnowPairCtes}
       SELECT s.da, s.db, s.n_shared,
              round(s.n_shared / least(x.n, y.n), 6) AS containment,
              round(s.n_shared / (x.n + y.n - s.n_shared), 6) AS jaccard
@@ -606,16 +640,7 @@ object TextOps {
       def isB(c: String) =
         s"('0x' || substr(md5('inc' || $c::VARCHAR), 1, 15))::BIGINT % 8 = 0"
       s"""
-      WITH $winnowingCtes,
-      fps AS (SELECT DISTINCT doc_id, k // 16777216 AS h FROM picked),
-      keepable AS (SELECT h FROM fps GROUP BY h
-                   HAVING count(*) <= $HotShingleDfCap),
-      fpc AS (SELECT f.doc_id, f.h FROM fps f JOIN keepable kp ON f.h = kp.h),
-      shared AS (SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS n_shared
-                 FROM fpc a JOIN fpc b ON a.h = b.h AND a.doc_id < b.doc_id
-                 GROUP BY 1, 2
-                 HAVING count(*) >= 2),
-      szs AS (SELECT doc_id, count(*) AS n FROM fpc GROUP BY 1)
+      ${winnowPairCtes}
       SELECT s.da, s.db,
              CASE WHEN ${isB("s.da")} AND ${isB("s.db")} THEN 'batch_batch'
                   WHEN ${isB("s.da")} OR ${isB("s.db")} THEN 'base_batch'
@@ -628,18 +653,7 @@ object TextOps {
     // span locator: the pair chain extended with positions — anchors on a
     // shared (pa − pb) diagonal roll up into located spans.
     "dedup_winnowing_spans" -> s"""
-      WITH $winnowingCtes,
-      fpos AS (SELECT doc_id, k // 16777216 AS h,
-                      16777215 - (k % 16777216) AS p FROM picked),
-      fps AS (SELECT DISTINCT doc_id, h FROM fpos),
-      keepable AS (SELECT h FROM fps GROUP BY h
-                   HAVING count(*) <= $HotShingleDfCap),
-      fpc AS (SELECT f.doc_id, f.h FROM fps f JOIN keepable kp ON f.h = kp.h),
-      fpc2 AS (SELECT f.doc_id, f.h, f.p FROM fpos f JOIN keepable kp ON f.h = kp.h),
-      shared AS (SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS n_shared
-                 FROM fpc a JOIN fpc b ON a.h = b.h AND a.doc_id < b.doc_id
-                 GROUP BY 1, 2
-                 HAVING count(*) >= 2),
+      ${winnowSpanCtes},
       anch AS (SELECT s.da, s.db, a.p AS pa, b.p AS pb
                FROM shared s
                JOIN fpc2 a ON a.doc_id = s.da
@@ -679,18 +693,7 @@ object TextOps {
     // island segmentation: the span chain plus the lag + running
     // break-flag-sum gaps-and-islands split (gap > 2w = 8 breaks a run).
     "dedup_winnowing_islands" -> s"""
-      WITH $winnowingCtes,
-      fpos AS (SELECT doc_id, k // 16777216 AS h,
-                      16777215 - (k % 16777216) AS p FROM picked),
-      fps AS (SELECT DISTINCT doc_id, h FROM fpos),
-      keepable AS (SELECT h FROM fps GROUP BY h
-                   HAVING count(*) <= $HotShingleDfCap),
-      fpc AS (SELECT f.doc_id, f.h FROM fps f JOIN keepable kp ON f.h = kp.h),
-      fpc2 AS (SELECT f.doc_id, f.h, f.p FROM fpos f JOIN keepable kp ON f.h = kp.h),
-      shared AS (SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS n_shared
-                 FROM fpc a JOIN fpc b ON a.h = b.h AND a.doc_id < b.doc_id
-                 GROUP BY 1, 2
-                 HAVING count(*) >= 2),
+      ${winnowSpanCtes},
       anch AS (SELECT s.da, s.db, a.p - b.p AS diag, a.p AS pa
                FROM shared s
                JOIN fpc2 a ON a.doc_id = s.da
@@ -728,15 +731,7 @@ object TextOps {
                     SELECT doc_id + 20000000, text || ' ' || upper(text)
                     FROM documents WHERE doc_id % 41 = 0),
       toks AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM docs),
-      sh0 AS (SELECT DISTINCT doc_id, array_to_string(t[i:i+3], ' ') AS s
-              FROM toks, LATERAL (SELECT unnest(range(1, len(t) - 2)) AS i) r),
-      sh_all AS (SELECT doc_id, ('0x' || substr(md5(s), 1, 15))::BIGINT AS h FROM sh0),
-      sh AS (SELECT * FROM sh_all
-             WHERE h NOT IN (SELECT h FROM sh_all GROUP BY h
-                             HAVING count(*) > $HotShingleDfCap)),
-      pairs AS (SELECT a.doc_id AS da, b.doc_id AS db, count(*) AS inter
-                FROM sh a JOIN sh b ON a.h = b.h AND a.doc_id < b.doc_id GROUP BY 1, 2),
-      sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id)
+      ${shingleJaccardCtes}
       SELECT da, db,
              round(inter / (x.n + y.n - inter), 6) AS jaccard,
              round(inter / x.n, 6) AS c_a,
