@@ -198,6 +198,30 @@ object Similarity {
                     ON x.sb = k.sb AND x.wd = k.wd
                   GROUP BY 1, 2, 3)"""
 
+  /** One scheme's PQ encode over its `cd_<sfx>` distances: each vector's
+    * nearest centroid per subspace (`codes_<sfx>`) and the probes' (vec_id
+    * < 10) lookup tables (`lut_<sfx>`).
+    */
+  private def opqCodesLutCtes(sfx: String): String = s"""
+      codes_$sfx AS (SELECT vec_id, sb, c_id FROM cd_$sfx
+                     QUALIFY row_number() OVER (PARTITION BY vec_id, sb
+                       ORDER BY d2, c_id) = 1),
+      lut_$sfx AS (SELECT vec_id AS q_id, sb, c_id, d2
+                   FROM cd_$sfx WHERE vec_id < 10)"""
+
+  /** A scheme's ADC shortlist `short` re-ranked to its exact top-5 by the
+    * raw-space `ex` distances (`rr_<sfx>`), and its hits against the exact
+    * truth `x` (`hit_<sfx>`).
+    */
+  private def rerankHitCtes(sfx: String, short: String): String = s"""
+      rr_$sfx AS (SELECT e.q_id, e.vec_id
+                  FROM ex e JOIN $short t
+                    ON e.q_id = t.q_id AND e.vec_id = t.vec_id
+                  QUALIFY row_number() OVER (PARTITION BY e.q_id
+                    ORDER BY e.d2, e.vec_id) <= 5),
+      hit_$sfx AS (SELECT count(*) AS n FROM rr_$sfx r
+                   JOIN x ON r.q_id = x.q_id AND r.vec_id = x.vec_id)"""
+
   /** DuckDB SQL for stream_opq_encode — the [[opqOracleSql]] machinery
     * cut down to the rotated code table itself: DuckDB independently
     * rotates, trains, and encodes, and the STREAMED per-row encode must
@@ -501,12 +525,7 @@ object Similarity {
     */
   def opqRecallSql(s: SparkSession, d: String): String = {
     val (basis, mean) = opqBasis(s, d)
-    def adc(sfx: String) = s""",
-      codes_$sfx AS (SELECT vec_id, sb, c_id FROM cd_$sfx
-                     QUALIFY row_number() OVER (PARTITION BY vec_id, sb
-                       ORDER BY d2, c_id) = 1),
-      lut_$sfx AS (SELECT vec_id AS q_id, sb, c_id, d2
-                   FROM cd_$sfx WHERE vec_id < 10),
+    def adc(sfx: String) = s""",${opqCodesLutCtes(sfx)},
       adc_$sfx AS (SELECT l.q_id, cds.vec_id, CAST(sum(l.d2) AS BIGINT) AS adc_u
                    FROM codes_$sfx cds JOIN lut_$sfx l
                      ON cds.sb = l.sb AND cds.c_id = l.c_id
@@ -537,12 +556,7 @@ object Similarity {
     */
   def opqRerankGainSql(s: SparkSession, d: String): String = {
     val (basis, mean) = opqBasis(s, d)
-    def leg(sfx: String) = s""",
-      codes_$sfx AS (SELECT vec_id, sb, c_id FROM cd_$sfx
-                     QUALIFY row_number() OVER (PARTITION BY vec_id, sb
-                       ORDER BY d2, c_id) = 1),
-      lut_$sfx AS (SELECT vec_id AS q_id, sb, c_id, d2
-                   FROM cd_$sfx WHERE vec_id < 10),
+    def leg(sfx: String) = s""",${opqCodesLutCtes(sfx)},
       adcd_$sfx AS (SELECT l.q_id, cds.vec_id, CAST(sum(l.d2) AS BIGINT) AS adc_u
                     FROM codes_$sfx cds JOIN lut_$sfx l
                       ON cds.sb = l.sb AND cds.c_id = l.c_id
@@ -550,14 +564,7 @@ object Similarity {
                     GROUP BY 1, 2),
       adc50_$sfx AS (SELECT q_id, vec_id FROM adcd_$sfx
                      QUALIFY row_number() OVER (PARTITION BY q_id
-                       ORDER BY adc_u, vec_id) <= 50),
-      rr_$sfx AS (SELECT e.q_id, e.vec_id
-                  FROM ex e JOIN adc50_$sfx t
-                    ON e.q_id = t.q_id AND e.vec_id = t.vec_id
-                  QUALIFY row_number() OVER (PARTITION BY e.q_id
-                    ORDER BY e.d2, e.vec_id) <= 5),
-      hit_$sfx AS (SELECT count(*) AS n FROM rr_$sfx r
-                   JOIN x ON r.q_id = x.q_id AND r.vec_id = x.vec_id)"""
+                       ORDER BY adc_u, vec_id) <= 50),${rerankHitCtes(sfx, s"adc50_$sfx")}"""
     def out(sfx: String, scheme: String) = s"""
       SELECT '$scheme' AS scheme,
              round(CAST(hit_$sfx.n AS DOUBLE) / 50.0, 6) AS recall_at_depth50
@@ -575,12 +582,7 @@ object Similarity {
     */
   def opqIvfpqGainSql(s: SparkSession, d: String): String = {
     val (basis, mean) = opqBasis(s, d)
-    def leg(sfx: String) = s""",
-      codes_$sfx AS (SELECT vec_id, sb, c_id FROM cd_$sfx
-                     QUALIFY row_number() OVER (PARTITION BY vec_id, sb
-                       ORDER BY d2, c_id) = 1),
-      lut_$sfx AS (SELECT vec_id AS q_id, sb, c_id, d2
-                   FROM cd_$sfx WHERE vec_id < 10),
+    def leg(sfx: String) = s""",${opqCodesLutCtes(sfx)},
       adcd_$sfx AS (SELECT cn.q_id, cn.vec_id, CAST(sum(l.d2) AS BIGINT) AS adc_u
                     FROM cand cn JOIN codes_$sfx cd ON cn.vec_id = cd.vec_id
                     JOIN lut_$sfx l
@@ -588,14 +590,7 @@ object Similarity {
                     GROUP BY 1, 2),
       adc10_$sfx AS (SELECT q_id, vec_id FROM adcd_$sfx
                      QUALIFY row_number() OVER (PARTITION BY q_id
-                       ORDER BY adc_u, vec_id) <= 10),
-      rr_$sfx AS (SELECT e.q_id, e.vec_id
-                  FROM ex e JOIN adc10_$sfx t
-                    ON e.q_id = t.q_id AND e.vec_id = t.vec_id
-                  QUALIFY row_number() OVER (PARTITION BY e.q_id
-                    ORDER BY e.d2, e.vec_id) <= 5),
-      hit_$sfx AS (SELECT count(*) AS n FROM rr_$sfx r
-                   JOIN x ON r.q_id = x.q_id AND r.vec_id = x.vec_id)"""
+                       ORDER BY adc_u, vec_id) <= 10),${rerankHitCtes(sfx, s"adc10_$sfx")}"""
     def out(sfx: String, scheme: String) = s"""
       SELECT '$scheme' AS scheme,
              round(CAST(hit_$sfx.n AS DOUBLE) / 50.0, 6) AS recall_at_depth10
