@@ -737,6 +737,16 @@ object Similarity {
       FROM scored
       QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) <= 5"""
 
+  /** `name(vec_id, c16, d2)`: every vector's integer-L2² distance to each
+    * of the 16 fixture coarse cells (the first 16 vectors as seeds).
+    */
+  private def fixtureCellDistCte(name: String): String =
+    s"""$name AS (SELECT x.vec_id, s16.c16, sum((x.xu - s16.cu) * (x.xu - s16.cu)) AS d2
+                FROM xu x JOIN (SELECT vec_id AS c16, sb, wd, xu AS cu
+                                FROM xu WHERE vec_id < 16) s16
+                  ON x.sb = s16.sb AND x.wd = s16.wd
+                GROUP BY 1, 2)"""
+
   /** Canonical DuckDB CTE chain replaying the PQ pipeline (seed assignment
     * → one Lloyd update → encode → per-pair ADC distances) in the same
     * exact integer arithmetic — shared prefix of pqAdcSql (top-5) and
@@ -1066,23 +1076,15 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
       ${exactRerankSql("adcr", 50, "shortr", "exr")}"""
 
   /** Fixture coarse cells: distances to the 16 seed vectors. */
-  private val pqIvfpqSql: String = ivfpqSqlWith("""
-      celld AS (SELECT x.vec_id, s16.c16, sum((x.xu - s16.cu) * (x.xu - s16.cu)) AS d2
-                FROM xu x JOIN (SELECT vec_id AS c16, sb, wd, xu AS cu
-                                FROM xu WHERE vec_id < 16) s16
-                  ON x.sb = s16.sb AND x.wd = s16.wd
-                GROUP BY 1, 2)""")
+  private val pqIvfpqSql: String = ivfpqSqlWith(s"""
+      ${fixtureCellDistCte("celld")}""")
 
   /** Trained coarse cells: one integer-L2 Lloyd step over the seed
     * assignment, per-dim means rounded to micro-units, then distances to
     * the trained centroids.
     */
-  private val pqIvfpqTrainedSql: String = ivfpqSqlWith("""
-      cd0 AS (SELECT x.vec_id, s16.c16, sum((x.xu - s16.cu) * (x.xu - s16.cu)) AS d2
-              FROM xu x JOIN (SELECT vec_id AS c16, sb, wd, xu AS cu
-                              FROM xu WHERE vec_id < 16) s16
-                ON x.sb = s16.sb AND x.wd = s16.wd
-              GROUP BY 1, 2),
+  private val pqIvfpqTrainedSql: String = ivfpqSqlWith(s"""
+      ${fixtureCellDistCte("cd0")},
       casn AS (SELECT vec_id, c16 FROM cd0
                QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY d2, c16) = 1),
       ctr AS (SELECT a.c16, x.sb, x.wd,
@@ -1098,12 +1100,8 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
     * audit. MATERIALIZED on every multiply-referenced stage (the BPE-chain
     * discipline — DuckDB inlines plain CTEs per reference).
     */
-  private val pqResidualCtes: String = pqAdcCtes + """,
-      celld AS (SELECT x.vec_id, s16.c16, sum((x.xu - s16.cu) * (x.xu - s16.cu)) AS d2
-                FROM xu x JOIN (SELECT vec_id AS c16, sb, wd, xu AS cu
-                                FROM xu WHERE vec_id < 16) s16
-                  ON x.sb = s16.sb AND x.wd = s16.wd
-                GROUP BY 1, 2),
+  private val pqResidualCtes: String = pqAdcCtes + s""",
+      ${fixtureCellDistCte("celld")},
       cellsv AS (SELECT vec_id, c16 AS cell FROM celld
                  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY d2, c16) = 1),
       probecells AS (SELECT vec_id AS q_id, c16 AS cell FROM celld
@@ -1473,12 +1471,8 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
     * candidate-restricted ADC, and each candidate swept into every nprobe in
     * {1, 2, 4, 8} that reaches its cell.
     */
-  private lazy val ivfpqSweptCtes: String = """
-      celld AS (SELECT x.vec_id, s16.c16, sum((x.xu - s16.cu) * (x.xu - s16.cu)) AS d2
-                FROM xu x JOIN (SELECT vec_id AS c16, sb, wd, xu AS cu
-                                FROM xu WHERE vec_id < 16) s16
-                  ON x.sb = s16.sb AND x.wd = s16.wd
-                GROUP BY 1, 2),
+  private lazy val ivfpqSweptCtes: String = s"""
+      ${fixtureCellDistCte("celld")},
       cellsv AS (SELECT vec_id, c16 AS cell FROM celld
                  QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY d2, c16) = 1),
       probecells8 AS (SELECT vec_id AS q_id, c16 AS cell,

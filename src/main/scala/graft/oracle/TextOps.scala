@@ -266,15 +266,7 @@ object TextOps {
       .map(i => s"(CASE WHEN e.h$i = t.h$i THEN 1 ELSE 0 END)").mkString(" + ")
     s"""
       WITH $minhashBandCtes,
-      evm AS (SELECT doc_id, text,
-                     ('0x' || substr(md5('ev' || doc_id::VARCHAR), 1, 15))::BIGINT
-                       % 100 AS m
-              FROM documents),
-      ev AS (SELECT doc_id + 10000000 AS eval_id, text FROM evm WHERE m < 10
-             UNION ALL
-             SELECT doc_id + 20000000, upper(text) FROM evm WHERE m >= 10 AND m < 20),
-      etoks AS (SELECT eval_id, regexp_split_to_array(trim(text), '\\s+') AS t
-                FROM ev),
+      ${evalCorpusCtes},
       esh AS (SELECT DISTINCT eval_id, array_to_string(t[i:i+3], ' ') AS s
               FROM etoks, LATERAL (SELECT unnest(range(1, len(t) - 2)) AS i) r),
       ehs0 AS (SELECT eval_id,
@@ -477,6 +469,21 @@ object TextOps {
                  FROM fpc a JOIN fpc b ON a.h = b.h AND a.doc_id < b.doc_id
                  GROUP BY 1, 2
                  HAVING count(*) >= 2)"""
+
+  /** The eval corpus the contamination oracles re-derive by the staged churn
+    * rule: 10% of documents verbatim and 10% upper-cased, under eval ids
+    * offset by 10M and 20M, tokenized (etoks).
+    */
+  private lazy val evalCorpusCtes: String = s"""
+      evm AS (SELECT doc_id, text,
+                     ('0x' || substr(md5('ev' || doc_id::VARCHAR), 1, 15))::BIGINT
+                       % 100 AS m
+              FROM documents),
+      ev AS (SELECT doc_id + 10000000 AS eval_id, text FROM evm WHERE m < 10
+             UNION ALL
+             SELECT doc_id + 20000000, upper(text) FROM evm WHERE m >= 10 AND m < 20),
+      etoks AS (SELECT eval_id, regexp_split_to_array(trim(text), '\\s+') AS t
+                FROM ev)"""
 
   val oracle: Map[String, String] = Map(
     "text_quality_lr" -> """
@@ -1291,15 +1298,7 @@ object TextOps {
     // SQL definition each of "kept" and of the second corpus
     "pipeline_mix_decontaminated" -> s"""
       WITH $gatedMixCtes,
-      evm AS (SELECT doc_id, text,
-                     ('0x' || substr(md5('ev' || doc_id::VARCHAR), 1, 15))::BIGINT
-                       % 100 AS m
-              FROM documents),
-      ev AS (SELECT doc_id + 10000000 AS eval_id, text FROM evm WHERE m < 10
-             UNION ALL
-             SELECT doc_id + 20000000, upper(text) FROM evm WHERE m >= 10 AND m < 20),
-      etoks AS (SELECT eval_id, regexp_split_to_array(trim(text), '\\s+') AS t
-                FROM ev),
+      ${evalCorpusCtes},
       eset AS (SELECT DISTINCT
                  ('0x' || substr(md5(array_to_string(t[i:i+3], ' ')), 1, 15))::BIGINT AS h
                FROM etoks, LATERAL (SELECT unnest(range(1, len(t) - 2)) AS i) r),
