@@ -163,13 +163,13 @@ object Extended {
              abs(n_load1 - n_load0) * 2 > greatest(n_load0, 1) AS drifted
       FROM u""",
     "a12_rollup" -> s"""
-      ${lineitemRollupSelect}
+      $lineitemRollupSelect
       FROM lineitem GROUP BY ROLLUP (l_returnflag, l_linestatus)""",
     "a12b_cube" -> s"""
-      ${lineitemRollupSelect}
+      $lineitemRollupSelect
       FROM lineitem GROUP BY CUBE (l_returnflag, l_linestatus)""",
     "a22_grouping_sets" -> s"""
-      ${lineitemRollupSelect}
+      $lineitemRollupSelect
       FROM lineitem
       GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus))""",
     "a17_histogram" -> """
@@ -354,7 +354,7 @@ object Extended {
                            THEN 1 ELSE 0 END) AS BIGINT) AS n_crossing
       FROM placed GROUP BY 1, 2""",
     "a15_corr" -> s"""
-      ${lineitemMomentsHead},
+      $lineitemMomentsHead,
                sum(CAST(qx AS HUGEINT) * qx) AS sxx,
                sum(CAST(px AS HUGEINT) * px) AS syy
         FROM cents GROUP BY l_returnflag)
@@ -453,7 +453,7 @@ object Extended {
       seeds AS (SELECT node FROM nodes
                 WHERE ('0x' || substr(md5('bfs' || node::VARCHAR), 1, 15))::BIGINT
                       % 10 = 0),
-      ${bfsDepthsSql}
+      $bfsDepthsSql
       FROM md GROUP BY 1""",
     // the weighted power iteration unrolled over the exact-Jaccard pair
     // frame — contributions r·w // Σw in integer micro-units, so the SQL
@@ -489,7 +489,7 @@ object Extended {
       seeds AS (SELECT node FROM nodes
                 WHERE ('0x' || substr(md5('bfsw' || node::VARCHAR), 1, 15))::BIGINT
                       % 10 = 0),
-      ${bfsDepthsSql}
+      $bfsDepthsSql
       FROM md GROUP BY 1""",
     "graph_pagerank" -> s"""
       WITH pairs AS (${TextOps.minhashPairsSql}),
@@ -796,7 +796,7 @@ object Extended {
             FROM documents)
       WHERE rk <= 25""",
     "a20_linreg" -> s"""
-      ${lineitemMomentsHead},
+      $lineitemMomentsHead,
                sum(CAST(qx AS HUGEINT) * qx) AS sxx
         FROM cents GROUP BY l_returnflag),
       s AS (

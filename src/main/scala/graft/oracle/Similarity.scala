@@ -709,7 +709,7 @@ object Similarity {
              round(sum(CAST(round(x * 1000000) AS BIGINT)) / count(*) / 1e6, 6) AS mean_x
       FROM ex GROUP BY c_id, dim"""
 
-  private val ivfTopkSql: String = """
+  private val ivfTopkSql: String = s"""
       WITH c AS (
         SELECT vec_id, embedding::DOUBLE[] AS v,
                sqrt(list_dot_product(embedding::DOUBLE[], embedding::DOUBLE[])) AS nrm
@@ -727,14 +727,7 @@ object Similarity {
                  row_number() OVER (PARTITION BY a.vec_id
                    ORDER BY round(list_dot_product(a.v, cv) / (a.nrm * cn), 6) DESC, c_id) AS crank
           FROM c a CROSS JOIN cents WHERE a.vec_id < 10) WHERE crank <= 2),
-      scored AS (
-        SELECT q_id, s.vec_id,
-               round(list_dot_product(qv, s.v) / (qn * s.nrm), 6) AS cos
-        FROM assigned s JOIN probes p ON s.c_id = p.c_id
-        WHERE s.vec_id <> p.q_id)
-      SELECT q_id, vec_id, cos,
-             CAST(row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS INTEGER) AS rank
-      FROM scored
+      $ivfScoredTop5Sql
       QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) <= 5"""
 
   /** `name(vec_id, c16, d2)`: every vector's integer-L2² distance to each
@@ -1490,6 +1483,31 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
                 FROM adcr a, LATERAL (SELECT unnest([1, 2, 4, 8]) AS np) s
                 WHERE s.np >= a.pr)"""
 
+  /** The IVF answer over `assigned` cells and `probes`: every candidate in a
+    * probe cell scored by 6dp cosine, ranked per probe (the caller cuts at
+    * 5).
+    */
+  private lazy val ivfScoredTop5Sql: String = """
+      scored AS (
+        SELECT q_id, s.vec_id,
+               round(list_dot_product(qv, s.v) / (qn * s.nrm), 6) AS cos
+        FROM assigned s JOIN probes p ON s.c_id = p.c_id
+        WHERE s.vec_id <> p.q_id)
+      SELECT q_id, vec_id, cos,
+             CAST(row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS INTEGER) AS rank
+      FROM scored"""
+
+  /** The exact cosine top-5 of every probe in `qs` over the corpus `c`, the
+    * truth the kNN walk audits score against.
+    */
+  private lazy val knnExactTop5Cte: String = """
+      exact AS MATERIALIZED (SELECT q_id, cand FROM (
+          SELECT p.q_id, x.vec_id AS cand,
+                 row_number() OVER (PARTITION BY p.q_id
+                   ORDER BY round(list_dot_product(p.qv, x.v) / (p.qn * x.nrm), 6)
+                     DESC, x.vec_id) AS rn
+          FROM qs p JOIN c x ON x.vec_id <> p.q_id) WHERE rn <= 5)"""
+
   val oracle: Map[String, String] = Map(
     "sim_knn_graph" -> s"""
       WITH $knnOracleCtes
@@ -1548,7 +1566,7 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
       fbeam0 AS (SELECT q_id, q_id AS cand FROM qs)${beamWalkCtes("f", 8, "ge",
         "\n                    JOIN lb ON lb.vec_id = x.cand WHERE lb.label = q.tgt")},
       pre AS (${walkTop5Sql("fvis3")}),
-      ${labeledWalkTruthCtes}
+      $labeledWalkTruthCtes
       SELECT e.q_id, CAST(e.tgt AS INTEGER) AS target_label,
              count(*) AS n_exact,
              CAST(sum(CASE WHEN pr.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS pre_hits,
@@ -1614,7 +1632,7 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
       ubeam0 AS (SELECT q_id, q_id AS cand FROM qs)${beamWalkCtes("u", 8, "gl")},
       labl AS (${walkTop5Sql("lvis3")}),
       blind AS (${walkTop5Sql("bvis3")}),
-      ${labeledWalkTruthCtes}
+      $labeledWalkTruthCtes
       SELECT e.q_id, CAST(e.tgt AS INTEGER) AS target_label,
              count(*) AS n_exact,
              CAST(sum(CASE WHEN la.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS lab_hits,
@@ -1693,12 +1711,7 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
       WITH $knnOracleCtes,
       ge AS (SELECT vec_id, nbr FROM g$KnnIters),
       qs AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn FROM c WHERE vec_id < 10),
-      exact AS MATERIALIZED (SELECT q_id, cand FROM (
-          SELECT p.q_id, x.vec_id AS cand,
-                 row_number() OVER (PARTITION BY p.q_id
-                   ORDER BY round(list_dot_product(p.qv, x.v) / (p.qn * x.nrm), 6)
-                     DESC, x.vec_id) AS rn
-          FROM qs p JOIN c x ON x.vec_id <> p.q_id) WHERE rn <= 5),
+      $knnExactTop5Cte,
       $chains
       $rows"""
     },
@@ -1777,12 +1790,7 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
       ge AS (SELECT vec_id, nbr FROM g$KnnIters),
       gi AS MATERIALIZED (SELECT vec_id, nbr FROM ginc),
       qs AS (SELECT vec_id AS q_id, v AS qv, nrm AS qn FROM c WHERE vec_id < 10),
-      exact AS MATERIALIZED (SELECT q_id, cand FROM (
-          SELECT p.q_id, x.vec_id AS cand,
-                 row_number() OVER (PARTITION BY p.q_id
-                   ORDER BY round(list_dot_product(p.qv, x.v) / (p.qn * x.nrm), 6)
-                     DESC, x.vec_id) AS rn
-          FROM qs p JOIN c x ON x.vec_id <> p.q_id) WHERE rn <= 5),
+      $knnExactTop5Cte,
       fbeam0 AS (SELECT q_id, q_id AS cand FROM qs)${beamWalkCtes("f", 8, "ge")},
       mbeam0 AS (SELECT q_id, q_id AS cand FROM qs)${beamWalkCtes("m", 8, "gi")},
       f5 AS (SELECT q_id, cand FROM (
@@ -1867,7 +1875,7 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
     // (before the top-k) in BOTH engines, and the exact leg restricts the
     // brute-force population the same way — recall is hash-matched per probe
     "sim_ivf_filtered" -> s"""
-      ${labeledIvfCtes},
+      $labeledIvfCtes,
       ivf AS (
         SELECT q_id, vec_id FROM (
           SELECT p.q_id, s.vec_id,
@@ -1875,7 +1883,7 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
           FROM assigned s JOIN probes p ON s.c_id = p.c_id
           WHERE s.vec_id <> p.q_id AND s.label = p.tgt)
         QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) <= 5),
-      ${labeledExactCtes}
+      $labeledExactCtes
       SELECT e.q_id, CAST(e.tgt AS INTEGER) AS target_label,
              count(*) AS n_exact,
              CAST(sum(CASE WHEN i.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits,
@@ -1887,7 +1895,7 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
     // leg ranks UNfiltered candidates, takes 5, then filters — the recall
     // collapse is the hash-matched output
     "sim_ivf_filtered_sweep" -> s"""
-      ${labeledIvfCtes},
+      $labeledIvfCtes,
       cands AS (
         SELECT p.q_id, p.tgt, s.label, s.vec_id,
                round(list_dot_product(qv, s.v) / (qn * s.nrm), 6) AS cos
@@ -1901,7 +1909,7 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
           SELECT * FROM cands
           QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) <= 5)
         WHERE label = tgt),
-      ${labeledExactCtes}
+      $labeledExactCtes
       SELECT e.q_id, CAST(e.tgt AS INTEGER) AS target_label,
              count(*) AS n_exact,
              CAST(sum(CASE WHEN pr.vec_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS pre_hits,
@@ -1998,7 +2006,7 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
       val union = (1 to 5).map(k =>
         s"SELECT q_id, vec_id, $k AS rank, score FROM s$k").mkString("\n      UNION ALL ")
       s"""
-      ${mmrCandCtes},
+      $mmrCandCtes,
       s1 AS MATERIALIZED (SELECT q_id, vec_id, rel AS score FROM cand
              QUALIFY row_number() OVER (PARTITION BY q_id
                ORDER BY rel DESC, vec_id) = 1),
@@ -2041,7 +2049,7 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
           s"SELECT $lam AS lam_pct, q_id, vec_id, $k AS rank, score FROM s$k$tag")
       }.mkString("\n      UNION ALL ")
       s"""
-      ${mmrCandCtes},
+      $mmrCandCtes,
       $chains
       SELECT CAST(lam_pct AS INTEGER) AS lam_pct, q_id, vec_id,
              CAST(rank AS INTEGER) AS rank,
@@ -2090,7 +2098,7 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
     // nprobe sweep: the fixture-cell IVF-PQ tail generalized to probe-rank
     // ≤ 8, swept over np ∈ {1,2,4,8} exactly as the Spark side does.
     "sim_ivfpq_probe_sweep" -> (pqAdcCtes + s""",
-      ${ivfpqSweptCtes},
+      $ivfpqSweptCtes,
       shortr AS (SELECT np, q_id, vec_id FROM swept
                  QUALIFY row_number() OVER (PARTITION BY np, q_id ORDER BY adc_u, vec_id) <= 50),
       exr AS (SELECT s.np, s.q_id, s.vec_id,
@@ -2113,7 +2121,7 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
     // exact re-rank distance computed once per distinct pair — exactly the
     // Spark side's one-union/one-rank/one-gather shape.
     "sim_ivfpq_grid" -> (pqAdcCtes + s""",
-      ${ivfpqSweptCtes},
+      $ivfpqSweptCtes,
       rankr AS (SELECT np, q_id, vec_id,
                        row_number() OVER (PARTITION BY np, q_id
                          ORDER BY adc_u, vec_id) AS r
@@ -2277,14 +2285,7 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
                  row_number() OVER (PARTITION BY a.vec_id
                    ORDER BY round(list_dot_product(a.v, cv) / (a.nrm * cn), 6) DESC, c_id) AS crank
           FROM c a CROSS JOIN tc WHERE a.vec_id < 10) WHERE crank <= 2),
-      scored AS (
-        SELECT q_id, s.vec_id,
-               round(list_dot_product(qv, s.v) / (qn * s.nrm), 6) AS cos
-        FROM assigned s JOIN probes p ON s.c_id = p.c_id
-        WHERE s.vec_id <> p.q_id)
-      SELECT q_id, vec_id, cos,
-             CAST(row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS INTEGER) AS rank
-      FROM scored
+      $ivfScoredTop5Sql
       QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) <= 5""",
     "sim_lsh_buckets" -> s"""
       WITH $lshSigSql

@@ -19,7 +19,7 @@ object Temporal {
     * window version, so it shares w3's oracle SQL verbatim.
     */
   private val sessionizeSql = s"""
-      ${sessionGapCte},
+      $sessionGapCte,
       sess AS (
         SELECT user_id, us,
                CAST(sum(gap) OVER (PARTITION BY user_id ORDER BY us, event_id
@@ -35,7 +35,7 @@ object Temporal {
     * session semantics.
     */
   private val sessionWindowSql = s"""
-      ${sessionGapCte},
+      $sessionGapCte,
       sess AS (
         SELECT user_id, us,
                sum(gap) OVER (PARTITION BY user_id ORDER BY us, event_id

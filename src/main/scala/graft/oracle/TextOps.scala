@@ -106,7 +106,7 @@ object TextOps {
     */
   private[oracle] val ngramJaccardSql: String = s"""
       WITH toks AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM documents),
-      ${shingleJaccardCtes}
+      $shingleJaccardCtes
       SELECT da, db, round(inter / (x.n + y.n - inter), 6) AS jaccard
       FROM pairs JOIN sizes x ON da = x.doc_id JOIN sizes y ON db = y.doc_id
       WHERE inter / (x.n + y.n - inter) > 0.8"""
@@ -266,7 +266,7 @@ object TextOps {
       .map(i => s"(CASE WHEN e.h$i = t.h$i THEN 1 ELSE 0 END)").mkString(" + ")
     s"""
       WITH $minhashBandCtes,
-      ${evalCorpusCtes},
+      $evalCorpusCtes,
       esh AS (SELECT DISTINCT eval_id, array_to_string(t[i:i+3], ' ') AS s
               FROM etoks, LATERAL (SELECT unnest(range(1, len(t) - 2)) AS i) r),
       ehs0 AS (SELECT eval_id,
@@ -635,7 +635,7 @@ object TextOps {
     // fingerprints, df-capped postings, shared-count ≥ 2 pairs with
     // containment and Jaccard.
     "dedup_winnowing_pairs" -> s"""
-      ${winnowPairCtes}
+      $winnowPairCtes
       SELECT s.da, s.db, s.n_shared,
              round(s.n_shared / least(x.n, y.n), 6) AS containment,
              round(s.n_shared / (x.n + y.n - s.n_shared), 6) AS jaccard
@@ -647,7 +647,7 @@ object TextOps {
       def isB(c: String) =
         s"('0x' || substr(md5('inc' || $c::VARCHAR), 1, 15))::BIGINT % 8 = 0"
       s"""
-      ${winnowPairCtes}
+      $winnowPairCtes
       SELECT s.da, s.db,
              CASE WHEN ${isB("s.da")} AND ${isB("s.db")} THEN 'batch_batch'
                   WHEN ${isB("s.da")} OR ${isB("s.db")} THEN 'base_batch'
@@ -660,7 +660,7 @@ object TextOps {
     // span locator: the pair chain extended with positions — anchors on a
     // shared (pa − pb) diagonal roll up into located spans.
     "dedup_winnowing_spans" -> s"""
-      ${winnowSpanCtes},
+      $winnowSpanCtes,
       anch AS (SELECT s.da, s.db, a.p AS pa, b.p AS pb
                FROM shared s
                JOIN fpc2 a ON a.doc_id = s.da
@@ -700,7 +700,7 @@ object TextOps {
     // island segmentation: the span chain plus the lag + running
     // break-flag-sum gaps-and-islands split (gap > 2w = 8 breaks a run).
     "dedup_winnowing_islands" -> s"""
-      ${winnowSpanCtes},
+      $winnowSpanCtes,
       anch AS (SELECT s.da, s.db, a.p - b.p AS diag, a.p AS pa
                FROM shared s
                JOIN fpc2 a ON a.doc_id = s.da
@@ -738,7 +738,7 @@ object TextOps {
                     SELECT doc_id + 20000000, text || ' ' || upper(text)
                     FROM documents WHERE doc_id % 41 = 0),
       toks AS (SELECT doc_id, regexp_split_to_array(trim(text), '\\s+') AS t FROM docs),
-      ${shingleJaccardCtes}
+      $shingleJaccardCtes
       SELECT da, db,
              round(inter / (x.n + y.n - inter), 6) AS jaccard,
              round(inter / x.n, 6) AS c_a,
@@ -1298,7 +1298,7 @@ object TextOps {
     // SQL definition each of "kept" and of the second corpus
     "pipeline_mix_decontaminated" -> s"""
       WITH $gatedMixCtes,
-      ${evalCorpusCtes},
+      $evalCorpusCtes,
       eset AS (SELECT DISTINCT
                  ('0x' || substr(md5(array_to_string(t[i:i+3], ' ')), 1, 15))::BIGINT AS h
                FROM etoks, LATERAL (SELECT unnest(range(1, len(t) - 2)) AS i) r),
