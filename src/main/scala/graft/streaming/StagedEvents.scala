@@ -37,23 +37,30 @@ object StagedEvents {
     * (hidden to batch and stream readers) is added unless `build` already
     * left one there — a Spark write straight into the temp dir does.
     *
+    * The fixture records the source path it was keyed on in a `_SOURCE`
+    * file next to `_SUCCESS` (hidden to batch and stream readers, like it).
+    *
     * A cold stage first evicts the fixtures it supersedes: `name`'s dirs of
     * any other version and its legacy unversioned dirs, whatever their
-    * stamp. Dirs of the same version under other stamps (other datasets,
-    * such as another scale) stay, and so does every dir this JVM has
-    * handed out, since a lazily read frame may still scan it. Eviction is
-    * best effort and is not part of the build: a dir that cannot be listed
-    * or deleted (another user's, or one another JVM is evicting too) stays.
+    * stamp, and its dirs of the same version whose `_SOURCE` is this source
+    * path under another stamp (the dataset there changed since). Dirs of
+    * the same version built from other sources (such as another scale), or
+    * recording none, stay, and so does every dir this JVM has handed out,
+    * since a lazily read frame may still scan it. Eviction is best effort
+    * and is not part of the build: a dir that cannot be listed, read or
+    * deleted (another user's, or one another JVM is evicting too) stays.
     */
   def stageOnceFixture(name: String, version: Int, sourcePath: String)(
       build: Path => Unit): Path = {
     val key = graft.queries.ContentStamp.of(sourcePath)
+    val source = Paths.get(sourcePath).toAbsolutePath.normalize.toString
     val tmpDir = Paths.get(sys.props("java.io.tmpdir"))
     val dir = tmpDir.resolve(s"graft_${name}_v${version}_$key")
-    if (!Files.exists(dir.resolve("_SUCCESS"))) evictSuperseded(tmpDir, name, version)
+    if (!Files.exists(dir.resolve("_SUCCESS"))) evictSuperseded(dir, name, version, source)
     graft.ops.Multimodal.stageOnce(dir.toString) { tmp =>
       val t = Paths.get(tmp)
       build(t)
+      Files.writeString(t.resolve("_SOURCE"), source)
       val done = t.resolve("_SUCCESS")
       if (!Files.exists(done)) Files.createFile(done)
     }
@@ -64,20 +71,25 @@ object StagedEvents {
   /** Names of the fixture dirs [[stageOnceFixture]] has returned in this JVM. */
   private val handedOut = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
-  private def evictSuperseded(tmpDir: Path, name: String, version: Int): Unit = {
+  private def evictSuperseded(dir: Path, name: String, version: Int,
+      source: String): Unit = {
     import scala.jdk.CollectionConverters._
     // the stamp is ContentStamp's 32 hex digits, matched exactly, so a name
     // never claims a longer name's dirs (events_zonemap vs events_zonemap_base)
     val fixture = s"graft_${java.util.regex.Pattern.quote(name)}(?:_v(\\d+))?_[0-9a-f]{32}".r
     def quietly(io: => Unit): Unit =
       try io catch { case _: java.io.IOException | _: java.io.UncheckedIOException => () }
+    def sameSource(dir: Path): Boolean =
+      try Files.readString(dir.resolve("_SOURCE")) == source
+      catch { case _: java.io.IOException | _: java.io.UncheckedIOException => false }
     quietly {
-      val listing = Files.list(tmpDir)
+      val listing = Files.list(dir.getParent)
       val stale =
         try listing.iterator().asScala.filter { p =>
           val n = p.getFileName.toString
           n match {
-            case fixture(v) => (v == null || v.toInt != version) && !handedOut.contains(n)
+            case fixture(v) => !handedOut.contains(n) && p != dir &&
+              (v == null || v.toInt != version || sameSource(p))
             case _ => false
           }
         }.toVector

@@ -162,4 +162,45 @@ class StagingRobustnessSpec extends SparkSpec {
       Files.delete(src)
     }
   }
+
+  test("stage-once fixture: a cold stage evicts its source's dirs under other stamps only") {
+    import graft.streaming.StagedEvents.{deleteRecursively, stageOnceFixture}
+    val tmpDir = Paths.get(sys.props("java.io.tmpdir"))
+    val name = s"spec_source_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    val src = Files.createTempFile("graft-fixture-src", ".txt")
+    val otherSrc = Files.createTempFile("graft-fixture-src", ".txt")
+    Files.writeString(src, name)
+    val stamp = graft.queries.ContentStamp.of(src.toString)
+    // left by earlier processes: the same version under stamps of older contents
+    def fixture(dir: String, source: java.nio.file.Path) = {
+      val d = tmpDir.resolve(dir)
+      Files.createDirectories(d)
+      Files.writeString(d.resolve("_SOURCE"), source.toAbsolutePath.normalize.toString)
+      Files.createFile(d.resolve("_SUCCESS"))
+      d
+    }
+    val changed = fixture(s"graft_${name}_v1_${stamp.reverse}", src)
+    val otherSource = fixture(s"graft_${name}_v1_${"0" * 32}", otherSrc)
+    try {
+      val v1 = stageOnceFixture(name, 1, src.toString)(Files.createDirectories(_))
+      try {
+        assert(!Files.exists(changed), "the same source under another stamp must be evicted")
+        assert(Files.exists(otherSource), "another source's dir must stay")
+        assert(Files.readString(v1.resolve("_SOURCE")) ===
+          src.toAbsolutePath.normalize.toString)
+        // a dir this JVM handed out stays, even once its source changes
+        Files.writeString(src, name + "-changed")
+        Thread.sleep(1100) // ContentStamp serves a memoized stamp for 1 s
+        val v1b = stageOnceFixture(name, 1, src.toString)(Files.createDirectories(_))
+        try {
+          assert(v1b != v1, "changed contents must stage under a new stamp")
+          assert(Files.exists(v1), "a handed-out dir must stay")
+        } finally deleteRecursively(v1b)
+      } finally deleteRecursively(v1)
+    } finally {
+      Seq(changed, otherSource).foreach(deleteRecursively)
+      Files.delete(src)
+      Files.delete(otherSrc)
+    }
+  }
 }
