@@ -1,26 +1,15 @@
 package graft
 
-import java.util.concurrent.atomic.{AtomicInteger, AtomicLong}
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
-
 /** Ad-hoc single-query profiler: `graft.Profile <sfDir> <queryName> [reps]`.
   * Prints per-rep wall seconds plus scheduler-level evidence — job count
   * (≈ iteration/action count for loop-shaped queries like connected
   * components) and shuffle read/write bytes — and the formatted physical
   * plan, so a slow bench entry can be attributed (scan parallelism,
   * shuffle volume, codegen) and a scaling claim can be measured, not
-  * guessed, without re-running the whole suite.
+  * guessed, without re-running the whole suite. The counters are
+  * Bench's [[CostListener]], read as per-rep deltas.
   */
 object Profile {
-
-  /** Per-rep counters, reset between reps; populated by a SparkListener. */
-  private final class Counters {
-    val jobs = new AtomicInteger
-    val shuffleRead = new AtomicLong
-    val shuffleWrite = new AtomicLong
-    def reset(): Unit = { jobs.set(0); shuffleRead.set(0); shuffleWrite.set(0) }
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
@@ -28,30 +17,20 @@ object Profile {
     val reps = if (args.length > 2) args(2).toInt else 5
     val spark = Sessions.local(Sessions.cpusOr("32"))
     spark.sparkContext.setLogLevel("ERROR")
-    val c = new Counters
-    spark.sparkContext.addSparkListener(new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        c.jobs.incrementAndGet()
-      override def onStageCompleted(st: SparkListenerStageCompleted): Unit = {
-        val m = st.stageInfo.taskMetrics
-        if (m != null) {
-          c.shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          c.shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        }
-      }
-    })
+    val cost = new CostListener
+    spark.sparkContext.addSparkListener(cost)
     val fn = SparkEntry.queries(name)
     (1 to reps).foreach { i =>
-      c.reset()
+      cost.drain()
+      val (jobs0, write0, read0) =
+        (cost.jobsEnded.get, cost.shuffleWriteBytes.get, cost.shuffleReadBytes.get)
       val t0 = System.nanoTime()
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       val secs = (System.nanoTime() - t0) / 1e9
-      // listener events are queued on an async bus with no public drain
-      // API; a short settle keeps the per-rep counters honest
-      Thread.sleep(300)
-      println(f"rep $i: $secs%.3f s  jobs=${c.jobs.get}" +
-        f"  shuffle_write=${c.shuffleWrite.get / 1048576.0}%.1f MiB" +
-        f"  shuffle_read=${c.shuffleRead.get / 1048576.0}%.1f MiB")
+      cost.drain()
+      println(f"rep $i: $secs%.3f s  jobs=${cost.jobsEnded.get - jobs0}" +
+        f"  shuffle_write=${(cost.shuffleWriteBytes.get - write0) / 1048576.0}%.1f MiB" +
+        f"  shuffle_read=${(cost.shuffleReadBytes.get - read0) / 1048576.0}%.1f MiB")
     }
     // streaming entries run awaitTermination inside the closure and return
     // the drained memory sink — explaining that LocalTableScan would both
