@@ -4,14 +4,13 @@ import java.util.concurrent.atomic.AtomicLong
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
 
-/** Per-query COST counters (judge r09 task: the 11× driver-vs-builder
-  * wall-time dispute on dedup_minhash_estimate was unadjudicable from
-  * seconds alone — identical jobs + shuffle bytes with divergent seconds
-  * proves "environment", mechanically). One listener accumulates job
-  * count and shuffle write and read bytes; a caller snapshots the deltas
-  * around the work it measures, after a [[drain]]. Unlike wall seconds,
-  * the counters are plan-determined: same code + data + warm cache state
-  * ⇒ same numbers on any machine. Bench and Profile both read it.
+/** Per-query COST counters: job count and shuffle write and read bytes.
+  * Seconds alone cannot tell a slower plan from a slower host; identical
+  * jobs and shuffle bytes with divergent seconds point at the host. A
+  * caller snapshots the deltas around the work it measures, each after a
+  * [[drain]]. Unlike wall seconds, the counters are plan-determined: same
+  * code + data + warm cache state ⇒ same numbers on any machine. Bench and
+  * Profile both read it.
   */
 private[graft] final class CostListener extends SparkListener {
   val jobsStarted = new AtomicLong

@@ -11,9 +11,12 @@ import graft.model.Schemas
   *
   * Plan shape: mzml DSv2 scan → per-file window (the as-of parent-MS1
   * lookup, J6/W1) → per-row higher-order-function purity aggregation (A10) →
-  * conditional row shaping (F13). The only shuffle is the per-file window
-  * sort; with one partition per file the sort is local and the 100 TB job is
-  * embarrassingly parallel across runs.
+  * conditional row shaping (F13). The only shuffle is the per-file window:
+  * the scan plans one input partition per file but reports no output
+  * partitioning, so the plan hash-partitions every spectrum, peak arrays
+  * included, on `file_name` (an `Exchange`) and sorts it again (a `Sort`)
+  * before the window runs. Making the run the partition, so the window
+  * needs neither, is ROADMAP item F.
   */
 object MzmlStats {
 
@@ -186,8 +189,9 @@ object MzmlStats {
     * `file_name`-partitioned parquet datasets (`outDir/ms_info/`,
     * `outDir/ms2_info/`). One reference invocation = one file; this is that
     * loop turned into a single declarative plan — the scan parallelizes per
-    * run, the window sorts stay within their partition, and the writer
-    * streams per task. This layout (not the single-file contract) is the
+    * run, the window shuffles the spectra on `file_name` and re-sorts them
+    * (see the object doc and ROADMAP item F), and the writer streams per
+    * task. This layout (not the single-file contract) is the
     * 100 TB shape: partition pruning on file_name gives per-run access.
     */
   def runMany(spark: SparkSession, paths: Seq[String], outDir: String,

@@ -29,7 +29,7 @@ object Similarity {
   /** The exact integer-L2² top-5 truth over a coordinate table `coords`
     * joined on its coordinate columns `keys`: `dist` holds every probe's
     * (vec_id < 10) squared distance to every other vector, `top` its 5
-    * nearest, ties broken by vec_id — the SQL twin of [[pqExactTop5]].
+    * nearest, ties broken by vec_id — the SQL twin of [[graft.queries.Similarity.pqExactTop5]].
     */
   private def exactTop5Ctes(coords: String, keys: Seq[String],
       dist: String, top: String): String =
@@ -52,7 +52,7 @@ object Similarity {
   private val top5Cut = "QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY d2, vec_id) <= 5"
 
   /** Recall@5 per probe of an approximate top-5 CTE `a` against the truth
-    * CTE `x` — the oracle twin of [[recallAt5]].
+    * CTE `x` — the oracle twin of [[graft.queries.Similarity.recallAt5]].
     */
   private val recallAt5Sql = """
       SELECT x.q_id, CAST(count(a.vec_id) AS BIGINT) AS n_hits,
@@ -72,7 +72,7 @@ object Similarity {
     * exact integer-L2² distances over `xu`, and the select the top-5 with
     * exact distances and ranks.
     */
-  private def exactRerankSql(adc: String, depth: Any, short: String, ex: String): String =
+  private def exactRerankSql(adc: String, depth: Int, short: String, ex: String): String =
     s"""$short AS (SELECT q_id, vec_id FROM $adc
                  QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY adc_u, vec_id) <= $depth),
       $ex AS (SELECT s.q_id, s.vec_id,
@@ -615,7 +615,7 @@ object Similarity {
       UNION ALL${out("opq", "opq")}"""
   }
 
-  /** DuckDB mirror of [[basisProjCols]], with the basis as SQL literals. */
+  /** DuckDB mirror of [[graft.queries.Similarity.basisProjCols]], with the basis as SQL literals. */
   private def basisProjSql(
       basis: Seq[Array[Double]], mean: Array[Double], prefix: String): String = {
     val cols = basis.zipWithIndex.map { case (vj, j) =>
@@ -947,7 +947,7 @@ object Similarity {
       FROM codes cds JOIN cellasn a ON cds.vec_id = a.vec_id
       GROUP BY 1"""
 
-  /** The forget-set predicate shared verbatim with [[forgetPred]]. */
+  /** The forget-set predicate shared verbatim with [[graft.queries.Similarity.forgetPred]]. */
   private val forgetSqlPred =
     "('0x' || substr(md5('fgt' || vec_id::VARCHAR), 1, 15))::BIGINT % 50 = 0"
 
@@ -990,7 +990,7 @@ object Similarity {
   private val quantVuCtes: String = s"""
       WITH $corpusCte, vu AS (${microUnitsSql("dim")})"""
 
-  /** Exact integer-L2² top-5 per probe — the SQL twin of [[pqExactTop5]],
+  /** Exact integer-L2² top-5 per probe — the SQL twin of [[graft.queries.Similarity.pqExactTop5]],
     * the baseline every ladder rung scores against.
     */
   private val intExactTop5Sql: String = quantVuCtes + s""",
@@ -998,7 +998,7 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
       SELECT q_id, vec_id FROM ex
       $top5Cut"""
 
-  /** SQ8 top-5 per probe — the SQL twin of [[sq8Top5]]: emb_quantize_int8's
+  /** SQ8 top-5 per probe — the SQL twin of [[graft.queries.Similarity.sq8Top5]]: emb_quantize_int8's
     * exact integer quantization rule, integer L2² over the codes.
     */
   private val sq8Top5Sql: String = quantVuCtes + """,
@@ -1016,7 +1016,7 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
       SELECT q_id, vec_id FROM ad
       QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY d2, vec_id) <= 5"""
 
-  /** Binary-rung top-5 per probe — the SQL twin of [[binaryTop5]]: sign
+  /** Binary-rung top-5 per probe — the SQL twin of [[graft.queries.Similarity.binaryTop5]]: sign
     * codes as two 32-dim words (bit 63 never set, so popcount semantics
     * can't diverge on sign), Hamming top-50, exact re-rank.
     */
@@ -1040,7 +1040,7 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
       SELECT q_id, vec_id FROM rr
       QUALIFY row_number() OVER (PARTITION BY q_id ORDER BY d2, vec_id) <= 5"""
 
-  /** Two-stage: ADC top-[[RerankShortlist]] shortlist, exact integer-L2²
+  /** Two-stage: ADC top-[[graft.queries.Similarity.RerankShortlist]] shortlist, exact integer-L2²
     * re-rank to top-5 — the oracle replay of sim_pq_rerank (xu carries
     * per-dim integer coordinates, so the exact leg reuses it keyed on
     * (sb, wd)).
@@ -1174,7 +1174,7 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
   private val knnCosExpr = "round(list_dot_product(x.v, y.v) / (x.nrm * y.nrm), 6)"
 
   /** The exact-cosine top-K re-rank of a candidate CTE — the SQL twin of
-    * [[knnRank]], referenced by every chain and by the incremental insert.
+    * [[graft.queries.Similarity.knnRank]], referenced by every chain and by the incremental insert.
     * `vecsCte` names the vector CTE the distances evaluate against.
     */
   private def knnRankSql(candCte: String, vecsCte: String): String = s"""
@@ -1186,16 +1186,16 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
                JOIN $vecsCte y ON y.vec_id = cd.nbr)
         WHERE rank <= $KnnK"""
 
-  /** The batch-split predicate shared verbatim with [[knnBatchPred]]. */
+  /** The batch-split predicate shared verbatim with [[graft.queries.Similarity.knnBatchPred]]. */
   private val knnBatchSql =
     "('0x' || substr(md5('inc' || vec_id::VARCHAR), 1, 15))::BIGINT % 8 = 0"
 
   private def knnOracleCtes: String = knnChainCtes("", "")
 
   /** The stitched label-aware graph's CTE block — the SQL twin of
-    * [[knnLabeledGraphShared]]. Expects the vector CTE `c` and the blind
+    * [[graft.queries.Similarity.knnLabeledGraphShared]]. Expects the vector CTE `c` and the blind
     * graph CTE `ge(vec_id, nbr)` in scope; defines `lb` (labels), the
-    * label-scoped two-salt block candidates, the top-[[LblK]] shortcut
+    * label-scoped two-salt block candidates, the top-[[graft.queries.Similarity.LblK]] shortcut
     * edges `lsc`, and the stitched graph `gl(vec_id, nbr)`.
     */
   private def labeledGraphCtes: String = s"""
@@ -1221,7 +1221,7 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
              UNION ALL SELECT vec_id, nbr FROM lsc))"""
 
   /** The three-step incremental-insert CTE block — the SQL twin of
-    * [[knnIncInsert]], shared by the incremental metric and the
+    * [[graft.queries.Similarity.knnIncInsert]], shared by the incremental metric and the
     * serve-path comparison so the maintained graph has exactly one
     * replay. Expects the base chain (`bg\$KnnIters`) and the full vector
     * CTE `c` in scope; leaves `ginc(vec_id, nbr)` defined.
@@ -2058,12 +2058,7 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
     },
 
     "sim_range_search" -> s"""
-      WITH $corpusCte, vu AS (${microUnitsSql("dim_i")}),
-      d AS (SELECT p.vec_id AS q_id, b.vec_id,
-                   sum((p.xu - b.xu) * (p.xu - b.xu)) AS d2
-            FROM vu p JOIN vu b ON p.dim_i = b.dim_i
-            WHERE p.vec_id < 10 AND b.vec_id <> p.vec_id
-            GROUP BY 1, 2)
+      WITH $corpusCte, vu AS (${microUnitsSql("dim_i")}),${probeD2Cte("vu", Seq("dim_i"), "d")}
       SELECT q_id, count(*) AS n_within,
              round(CAST(min(d2) AS DOUBLE) / 1000000000000.0, 6) AS nearest_d2,
              CAST(sum(vec_id) AS BIGINT) AS id_sum
@@ -2081,15 +2076,7 @@ ${probeD2Cte("vu", Seq("dim"), "ex")}
                GROUP BY 1, 2, 3),
       top AS (SELECT k, q_id, vec_id FROM dist
               QUALIFY row_number() OVER (PARTITION BY k, q_id
-                ORDER BY d2, vec_id) <= 5),
-      exd AS (SELECT p.vec_id AS q_id, b.vec_id,
-                     sum((p.xu - b.xu) * (p.xu - b.xu)) AS d2
-              FROM vu p JOIN vu b ON p.dim_i = b.dim_i
-              WHERE p.vec_id < 10 AND b.vec_id <> p.vec_id
-              GROUP BY 1, 2),
-      ex AS (SELECT q_id, vec_id FROM exd
-             QUALIFY row_number() OVER (PARTITION BY q_id
-               ORDER BY d2, vec_id) <= 5)
+                ORDER BY d2, vec_id) <= 5),${exactTop5Ctes("vu", Seq("dim_i"), "exd", "ex")}
       SELECT CAST(t.k AS INTEGER) AS dim,
              round(sum(CASE WHEN e.vec_id IS NOT NULL THEN 1 ELSE 0 END) / 50.0, 6)
                AS recall

@@ -7,7 +7,7 @@ import graft.queries.TextOps.{BpeTrainRounds, HotShingleDfCap, SimhashHammingMax
 
 /** DuckDB oracle SQL for [[graft.queries.TextOps]]'s queries. */
 object TextOps {
-  /** The DuckDB CTE chain replaying [[bpeTrainLoop]]: w0 (spaced symbol
+  /** The DuckDB CTE chain replaying [[graft.queries.TextOps.bpeTrainLoop]]: w0 (spaced symbol
     * corpus) then per round i a pair count (p_i), the 1-row argmax (t_i),
     * and the merged corpus (w_i). `withFinalCorpus` controls whether the
     * final merge's w_k is emitted (the apply oracle reads it; the train

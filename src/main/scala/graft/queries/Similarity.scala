@@ -1702,7 +1702,7 @@ object Similarity {
     // model geometry, not N. pc_j = dot(x, v_j) - dot(mean, v_j), with
     // the second term folded into a driver-side scalar so centering never
     // touches the corpus. No eigensolver exists in SQL, so the DuckDB
-    // oracle is GENERATED at Verify time ([[pcaOracleSql]]): the same
+    // oracle is GENERATED at Verify time ([[graft.oracle.Similarity.pcaOracleSql]]): the same
     // deterministic eigenbasis is embedded as SQL literals and DuckDB
     // re-projects the corpus — a full hash-match, not rows-only. The
     // algebraic contract — orthonormal basis, descending eigenvalues,
@@ -3646,7 +3646,7 @@ object Similarity {
     * the walk), and unions them into the visited set; the next beam is the
     * visited set's best `width` per probe. Tie rule: cos descending, then
     * the smaller cand — the oracle's order, so the walk replays CTE for
-    * CTE ([[beamWalkCtes]]). Each round's visited frame is truncated by
+    * CTE ([[graft.oracle.Similarity.beamWalkCtes]]). Each round's visited frame is truncated by
     * [[SessionCaches.loopCheckpoint]]: beam_t reads visited_t and
     * expand_{t+1} reads beam_t, so an untruncated visited set doubles its
     * plan every round (2^rounds replays of the scoring subplan). Returns

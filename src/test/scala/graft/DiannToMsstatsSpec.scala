@@ -159,7 +159,7 @@ class DiannToMsstatsSpec extends SparkSpec {
     spark.catalog.clearCache()
   }
 
-  test("run releases the join it caches") {
+  test("run leaves nothing cached") {
     spark.catalog.clearCache()
     val outDir = Files.createTempDirectory("msstats-run").toString
     val target = DiannToMsstats.run(spark, reportTsv,

@@ -10,7 +10,7 @@ import java.nio.file.{Files, Paths}
   *
   * `oracle_text.tsv` covers every key of [[SparkEntry.oracleSql]];
   * `oracle_text_sf0.001.tsv` covers the data-dependent oracles generated
-  * against /root/testdata/sf0.001. On a mismatch the listing the code
+  * against the sf0.001 test tables. On a mismatch the listing the code
   * produces is written next to the test reports (`target/oracle_text*`)
   * for a diff against the resource; the resources are only ever re-cut
   * when an oracle's SQL is meant to change.
@@ -19,12 +19,6 @@ class OracleTextSpec extends SparkSpec {
   import OracleTextSpec._
 
   private val sf = "/root/testdata/sf0.001"
-
-  /** The data-dependent oracles left out of the pin, with why: none today.
-    * An oracle whose two generations in one JVM differ (a fit that is not
-    * repeatable) would go here rather than be pinned.
-    */
-  private val unpinned: Map[String, String] = Map.empty
 
   test("canonical form collapses whitespace outside quoted literals only") {
     assert(canonical("  SELECT\n\t a ,  b\n FROM t  ") === "SELECT a , b FROM t")
@@ -40,10 +34,11 @@ class OracleTextSpec extends SparkSpec {
     val names = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     val first = SparkEntry.oracleSqlFor(spark, sf, names)
     val second = SparkEntry.oracleSqlFor(spark, sf, names)
-    // a generator that is not repeatable within one JVM cannot be pinned
-    val unstable = first.keySet.filter(k => first(k) != second(k)) -- unpinned.keySet
+    // all 15 generators repeat within one JVM, so all are pinned; one that
+    // stopped repeating could not be pinned and fails here first
+    val unstable = first.keySet.filter(k => first(k) != second(k))
     assert(unstable.isEmpty, s"data-dependent oracles differ between two generations: $unstable")
-    checkPinned("oracle_text_sf0.001.tsv", first -- unpinned.keySet)
+    checkPinned("oracle_text_sf0.001.tsv", first)
   }
 
   private def checkPinned(resourceName: String, sql: Map[String, String]): Unit = {
