@@ -22,9 +22,13 @@ private[graft] final class CostListener extends SparkListener {
   override def onJobEnd(e: SparkListenerJobEnd): Unit =
     jobsEnded.incrementAndGet()
   override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+    // a stage completed without metrics (taskMetrics defaults to null)
+    // adds no bytes
     val m = e.stageInfo.taskMetrics
-    shuffleWriteBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-    shuffleReadBytes.addAndGet(m.shuffleReadMetrics.totalBytesRead)
+    if (m != null) {
+      shuffleWriteBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+      shuffleReadBytes.addAndGet(m.shuffleReadMetrics.totalBytesRead)
+    }
   }
   /** The listener bus is async; a snapshot taken right after an action
     * returns can miss in-flight events. All events are POSTED by then,

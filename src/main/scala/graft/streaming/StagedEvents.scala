@@ -34,39 +34,57 @@ object StagedEvents {
     * until the dataset is regenerated.
     *
     * `build` writes into the temp dir; the root `_SUCCESS` commit marker
-    * (hidden to batch and stream readers) is added unless `build` already
-    * left one there — a Spark write straight into the temp dir does.
+    * (hidden to batch and stream readers) is then written last, replacing
+    * any that `build` left there (a Spark write straight into the temp dir
+    * does, and writes its `._SUCCESS.crc` after it), so no file in the
+    * fixture is newer than its commit.
     *
-    * The fixture records the source path it was keyed on in a `_SOURCE`
-    * file next to `_SUCCESS` (hidden to batch and stream readers, like it).
+    * The dir is named `graft_<name>_<source>_v<version>_<stamp>`, where
+    * `<source>` is [[sourceKey]] of the path it was keyed on, so a
+    * fixture's source is read off its name and nothing but `build`'s
+    * output and `_SUCCESS` lands in it.
     *
     * A cold stage first evicts the fixtures it supersedes: `name`'s dirs of
     * any other version and its legacy unversioned dirs, whatever their
-    * stamp, and its dirs of the same version whose `_SOURCE` is this source
-    * path under another stamp (the dataset there changed since). Dirs of
-    * the same version built from other sources (such as another scale), or
-    * recording none, stay, and so does every dir this JVM has handed out,
+    * stamp or source, and its dirs of the same version and source under
+    * another stamp (the dataset there changed since). Dirs of the same
+    * version built from other sources (such as another scale) stay, and
+    * so do same-version dirs named before the source joined the name
+    * (their source is unknown), and every dir this JVM has handed out,
     * since a lazily read frame may still scan it. Eviction is best effort
-    * and is not part of the build: a dir that cannot be listed, read or
-    * deleted (another user's, or one another JVM is evicting too) stays.
+    * and is not part of the build: a dir that cannot be listed or deleted
+    * (another user's, or one another JVM is evicting too) stays.
     */
   def stageOnceFixture(name: String, version: Int, sourcePath: String)(
       build: Path => Unit): Path = {
     val key = graft.queries.ContentStamp.of(sourcePath)
-    val source = Paths.get(sourcePath).toAbsolutePath.normalize.toString
+    val source = sourceKey(sourcePath)
     val tmpDir = Paths.get(sys.props("java.io.tmpdir"))
-    val dir = tmpDir.resolve(s"graft_${name}_v${version}_$key")
+    val dir = tmpDir.resolve(s"graft_${name}_${source}_v${version}_$key")
     if (!Files.exists(dir.resolve("_SUCCESS"))) evictSuperseded(dir, name, version, source)
-    graft.ops.Multimodal.stageOnce(dir.toString) { tmp =>
+    // logged under `graft_<name>_v<version>`, the same on every host and scale
+    graft.ops.Multimodal.stageOnce(dir.toString, logBuild = false) { tmp =>
+      val t0 = System.nanoTime()
       val t = Paths.get(tmp)
       build(t)
-      Files.writeString(t.resolve("_SOURCE"), source)
       val done = t.resolve("_SUCCESS")
-      if (!Files.exists(done)) Files.createFile(done)
+      Files.deleteIfExists(done)
+      Files.createFile(done)
+      graft.queries.StageBuildLog.record(s"graft_${name}_v$version",
+        (System.nanoTime() - t0) / 1e9)
     }
     handedOut.add(dir.getFileName.toString)
     dir
   }
+
+  /** The 16 hex digits that name `sourcePath` in its fixtures' dir names:
+    * a hash of the absolute, normalized path, so two spellings of one path
+    * share their fixtures.
+    */
+  private[graft] def sourceKey(sourcePath: String): String =
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(Paths.get(sourcePath).toAbsolutePath.normalize.toString.getBytes("UTF-8"))
+      .take(8).map("%02x".format(_)).mkString
 
   /** Names of the fixture dirs [[stageOnceFixture]] has returned in this JVM. */
   private val handedOut = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
@@ -76,20 +94,18 @@ object StagedEvents {
     import scala.jdk.CollectionConverters._
     // the stamp is ContentStamp's 32 hex digits, matched exactly, so a name
     // never claims a longer name's dirs (events_zonemap vs events_zonemap_base)
-    val fixture = s"graft_${java.util.regex.Pattern.quote(name)}(?:_v(\\d+))?_[0-9a-f]{32}".r
+    val fixture =
+      s"graft_${java.util.regex.Pattern.quote(name)}(?:_([0-9a-f]{16}))?(?:_v(\\d+))?_[0-9a-f]{32}".r
     def quietly(io: => Unit): Unit =
       try io catch { case _: java.io.IOException | _: java.io.UncheckedIOException => () }
-    def sameSource(dir: Path): Boolean =
-      try Files.readString(dir.resolve("_SOURCE")) == source
-      catch { case _: java.io.IOException | _: java.io.UncheckedIOException => false }
     quietly {
       val listing = Files.list(dir.getParent)
       val stale =
         try listing.iterator().asScala.filter { p =>
           val n = p.getFileName.toString
           n match {
-            case fixture(v) => !handedOut.contains(n) && p != dir &&
-              (v == null || v.toInt != version || sameSource(p))
+            case fixture(s, v) => !handedOut.contains(n) && p != dir &&
+              (v == null || v.toInt != version || s == source)
             case _ => false
           }
         }.toVector

@@ -20,10 +20,36 @@ class OracleTextSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
+  private val canonicalCases = Seq(
+    "  SELECT\n\t a ,  b\n FROM t  " -> "SELECT a , b FROM t",
+    "SELECT 'a  b\n c', x   FROM t" -> "SELECT 'a  b\n c', x FROM t",
+    "SELECT 'it''s  x'   AS y" -> "SELECT 'it''s  x' AS y")
+
   test("canonical form collapses whitespace outside quoted literals only") {
-    assert(canonical("  SELECT\n\t a ,  b\n FROM t  ") === "SELECT a , b FROM t")
-    assert(canonical("SELECT 'a  b\n c', x   FROM t") === "SELECT 'a  b\n c', x FROM t")
-    assert(canonical("SELECT 'it''s  x'   AS y") === "SELECT 'it''s  x' AS y")
+    canonicalCases.foreach { case (sql, form) => assert(canonical(sql) === form) }
+  }
+
+  test("tools/oracle_diff.py canonicalizes every oracle as this spec does") {
+    // oracle_diff.py's `whitespace-only` verdict must mean what this
+    // spec's hashes mean: its `canonical` and this one agree on the unit
+    // cases above and on every static oracle's SQL
+    val inputs = canonicalCases.map(_._1) ++ SparkEntry.oracleSql.toSeq.sorted.map(_._2)
+    val json = new com.fasterxml.jackson.databind.ObjectMapper
+    val dir = Files.createTempDirectory("oracle-canonical")
+    try {
+      val in = dir.resolve("in.json")
+      val out = dir.resolve("out.json")
+      json.writeValue(in.toFile, inputs.toArray)
+      val code = scala.sys.process.Process(Seq("python3", "-B", "-c",
+        "import json, sys; sys.path.insert(0, 'tools'); from oracle_diff import canonical; " +
+          "json.dump([canonical(s) for s in json.load(open(sys.argv[1]))], open(sys.argv[2], 'w'))",
+        in.toString, out.toString)).!
+      assert(code === 0, "python3 could not run tools/oracle_diff.py's canonical")
+      val python = json.readValue(out.toFile, classOf[Array[String]]).toSeq
+      assert(python.size === inputs.size)
+      val differ = inputs.indices.filter(i => python(i) != canonical(inputs(i)))
+      assert(differ.isEmpty, s"canonical forms differ on: ${differ.map(inputs(_).take(80))}")
+    } finally graft.streaming.StagedEvents.deleteRecursively(dir)
   }
 
   test("every static oracle's SQL is the pinned text") {
@@ -67,7 +93,8 @@ object OracleTextSpec {
 
   /** Whitespace runs outside `'…'` literals collapsed to one space, then
     * trimmed. A doubled quote inside a literal closes and reopens it, so
-    * it stays inside.
+    * it stays inside. `tools/oracle_diff.py` has its twin, checked
+    * against this one above.
     */
   def canonical(sql: String): String = {
     val b = new StringBuilder

@@ -164,7 +164,7 @@ class StagingRobustnessSpec extends SparkSpec {
   }
 
   test("stage-once fixture: a cold stage evicts its source's dirs under other stamps only") {
-    import graft.streaming.StagedEvents.{deleteRecursively, stageOnceFixture}
+    import graft.streaming.StagedEvents.{deleteRecursively, sourceKey, stageOnceFixture}
     val tmpDir = Paths.get(sys.props("java.io.tmpdir"))
     val name = s"spec_source_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     val src = Files.createTempFile("graft-fixture-src", ".txt")
@@ -172,22 +172,23 @@ class StagingRobustnessSpec extends SparkSpec {
     Files.writeString(src, name)
     val stamp = graft.queries.ContentStamp.of(src.toString)
     // left by earlier processes: the same version under stamps of older contents
-    def fixture(dir: String, source: java.nio.file.Path) = {
+    def fixture(dir: String) = {
       val d = tmpDir.resolve(dir)
       Files.createDirectories(d)
-      Files.writeString(d.resolve("_SOURCE"), source.toAbsolutePath.normalize.toString)
       Files.createFile(d.resolve("_SUCCESS"))
       d
     }
-    val changed = fixture(s"graft_${name}_v1_${stamp.reverse}", src)
-    val otherSource = fixture(s"graft_${name}_v1_${"0" * 32}", otherSrc)
+    val changed = fixture(s"graft_${name}_${sourceKey(src.toString)}_v1_${stamp.reverse}")
+    val otherSource = fixture(s"graft_${name}_${sourceKey(otherSrc.toString)}_v1_${"0" * 32}")
     try {
       val v1 = stageOnceFixture(name, 1, src.toString)(Files.createDirectories(_))
       try {
         assert(!Files.exists(changed), "the same source under another stamp must be evicted")
         assert(Files.exists(otherSource), "another source's dir must stay")
-        assert(Files.readString(v1.resolve("_SOURCE")) ===
-          src.toAbsolutePath.normalize.toString)
+        assert(v1.getFileName.toString === s"graft_${name}_${sourceKey(src.toString)}_v1_$stamp")
+        assert(sourceKey(src.toString) ===
+          sourceKey(src.getParent.resolve(".").resolve(src.getFileName).toString),
+          "two spellings of one path must name the same source")
         // a dir this JVM handed out stays, even once its source changes
         Files.writeString(src, name + "-changed")
         Thread.sleep(1100) // ContentStamp serves a memoized stamp for 1 s

@@ -21,8 +21,8 @@ class ReplayScaffoldSpec extends SparkSpec {
     "stream_postings_ingest", "stream_contam_gate", "stream_forget_keys",
     "mm_contam_gate", "stream_zonemap_ingest")
 
-  /** Every stage-once fixture dir (`graft_<name>_v<N>_<stamp>`) under the
-    * temp root, with each regular file's (size, mtime) — the listing
+  /** Every stage-once fixture dir (`graft_<name>_<source>_v<N>_<stamp>`)
+    * under the temp root, with each regular file's (size, mtime) — the listing
     * [[graft.queries.ContentStamp]] hashes, kept readable here so a
     * failure names the file that changed.
     */

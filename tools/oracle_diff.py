@@ -7,7 +7,8 @@ For each key of the parent's dump it prints one of:
   identical        the SQL strings are equal
   whitespace-only  equal after canonicalization: whitespace runs outside
                    '...' literals collapsed to one space, then trimmed
-                   (the form OracleTextSpec hashes)
+                   (the form OracleTextSpec hashes; the spec checks
+                   that this script's `canonical` agrees with its own)
   changed          the canonical forms differ
   missing          the key is absent from the change's dump
 Keys only the change has print as `added`. Exits 1 when any key is
