@@ -113,101 +113,29 @@ object Multimodal {
     * BINARY` column (8 part files) — the cluster-shaped input for
     * [[decodedScan]]: payloads written at ingest, decoded by a later
     * stage from a scan, not generated in-task. Content is arithmetic in
-    * media_id, so the staged bytes are identical across JVMs and rounds;
-    * the `_SUCCESS` marker makes re-staging a no-op.
+    * media_id, so the staged bytes are identical across JVMs and rounds.
     */
   def mediaTableDir(spark: SparkSession, n: Int): String =
-    stageOnce(s"${sys.props("java.io.tmpdir")}/graft_media_table_$n") { tmp =>
-      val schema = StructType(Seq(
-        StructField("media_id", LongType, nullable = false),
-        StructField("media", BinaryType, nullable = false)))
-      implicit val enc = RowEncoder.encoderFor(schema)
-      spark.range(0, n, 1, 8).toDF("media_id")
-        .mapPartitions(rows => rows.map { r =>
-          val id = r.getLong(0)
-          Row(id, MediaSynth.payload(id))
-        })
-        .write.mode("overwrite").parquet(tmp)
-    }
+    mediaTable("media", n, spark.range(0, n, 1, 8).toDF())(
+      id => Seq(id -> MediaSynth.payload(id)))
 
-  /** JVM-local serialization of the stage-once writes below. */
-  private val stageLock = new Object
+  private val mediaTableType: StructType = StructType(Seq(
+    StructField("media_id", LongType, nullable = false),
+    StructField("media", BinaryType, nullable = false)))
 
-  /** Stage-once discipline for the fixture tables: build into a UNIQUE
-    * temp dir, then atomically rename into place. A reader can therefore
-    * never observe a partially (re)written layout — `dir` either does not
-    * exist yet or is one complete committed write (the old
-    * exists(_SUCCESS) check-then-write-in-place let one JVM overwrite the
-    * staged parquet while another was mid-scan of it). The rename is the
-    * cross-JVM guard: two concurrent sessions race, the loser's move
-    * fails against the winner's committed dir and its temp is discarded.
-    * The JVM-local lock serializes the common single-JVM case.
+  /** The one builder of the stage-once `(media_id, media BINARY)` tables:
+    * fixture `graft_<kind>_table` keyed on `n`, holding `rows(id)` for every
+    * id in the first column of `ids`, in `ids`' partitions. `rows` must be
+    * pure arithmetic in the id; bump the version below whenever a payload
+    * generator ([[MediaSynth]]) changes what it writes.
     */
-  /** @param logBuild record the staging in [[graft.queries.StageBuildLog]]
-    *   (bench cold-stage attribution). False for per-RUN commits like the
-    *   idempotent micro-batch sink, whose stagings are part of every rep
-    *   by design, not one-time shared stages.
-    */
-  private[graft] def stageOnce(dir: String, logBuild: Boolean = true)(
-      write: String => Unit): String = {
-    stageOnceCommitted(dir, logBuild)(write)
-    dir
-  }
-
-  /** Like [[stageOnce]] but reports the race outcome: true iff THIS call
-    * performed the atomic move that committed the data. False means either
-    * the marker already existed (no write attempted) or another JVM won
-    * the commit race and this call's temp dir was discarded — callers that
-    * promise "returns true iff this call staged the data" (the idempotent
-    * micro-batch sink) must key off this, not off whether their write
-    * callback ran.
-    */
-  private[graft] def stageOnceCommitted(dir: String, logBuild: Boolean = true)(
-      write: String => Unit): Boolean =
-    stageLock.synchronized {
-      import java.nio.file.{Files, Paths, StandardCopyOption}
-      var committed = false
-      val root = Paths.get(dir)
-      val done = root.resolve("_SUCCESS")
-      if (!Files.exists(done)) {
-        val tmp = Paths.get(dir + "." + java.util.UUID.randomUUID() + ".tmp")
-        val t0 = System.nanoTime()
-        write(tmp.toString)
-        // a real staging is a one-time shared-stage build: log it for the
-        // bench's cold-stage attribution (StageBuildLog); name = the dir's
-        // basename without its content stamp/size suffix
-        if (logBuild) graft.queries.StageBuildLog.record(
-          Paths.get(dir).getFileName.toString.replaceAll("_[0-9a-f]{32}$|_\\d+$", ""),
-          (System.nanoTime() - t0) / 1e9)
-        try {
-          // RE-CHECK the marker before touching `root`: another JVM may
-          // have committed while we were writing tmp, and deleting its
-          // just-committed dir would yank files out from under a reader
-          // mid-scan — the exact failure the rename protocol closes. A
-          // marker-less dir can only be pre-rename-era garbage (nothing
-          // writes into `dir` directly anymore): clear it so the atomic
-          // move can land; a marked dir is the winner's — keep it and
-          // discard our tmp.
-          if (Files.exists(done)) {
-            graft.streaming.StagedEvents.deleteRecursively(tmp)
-          } else {
-            if (Files.exists(root))
-              graft.streaming.StagedEvents.deleteRecursively(root)
-            Files.move(tmp, root, StandardCopyOption.ATOMIC_MOVE)
-            committed = true
-          }
-        } catch {
-          case _: java.nio.file.FileSystemException =>
-            // another JVM committed between our check and the move: keep
-            // the winner's table, discard ours — but a still-uncommitted
-            // dir means something else broke, and that must fail loudly
-            graft.streaming.StagedEvents.deleteRecursively(tmp)
-            require(Files.exists(done),
-              s"staging race left $dir without a committed _SUCCESS marker")
-        }
-      }
-      committed
-    }
+  private def mediaTable(kind: String, n: Int, ids: => DataFrame)(
+      rows: Long => Seq[(Long, Array[Byte])]): String =
+    graft.Fixtures.stage(s"${kind}_table", 1, graft.Fixtures.Params(n)) { tmp =>
+      implicit val enc = RowEncoder.encoderFor(mediaTableType)
+      ids.mapPartitions(_.flatMap(r => rows(r.getLong(0)).map { case (id, p) => Row(id, p) }))
+        .write.mode("overwrite").parquet(tmp.toString)
+    }.toString
 
   /** `mm_decode_scan`: the decode pipeline over the staged BINARY-column
     * parquet table — scan → per-partition JDK decode, one pipelined
@@ -241,20 +169,16 @@ object Multimodal {
     * closed form.
     */
   def phashTableDir(spark: SparkSession, n: Int): String =
-    stageOnce(s"${sys.props("java.io.tmpdir")}/graft_phash_table_$n") { tmp =>
-      val schema = StructType(Seq(
-        StructField("media_id", LongType, nullable = false),
-        StructField("media", BinaryType, nullable = false)))
-      implicit val enc = RowEncoder.encoderFor(schema)
-      spark.range(0, n, 1, 8).toDF("media_id")
-        .mapPartitions(rows => rows.flatMap { r =>
-          val id = r.getLong(0)
-          val p = MediaSynth.payload(id)
-          if (id % 10 == 0) Seq(Row(id, p), Row(id + 1000L, p))
-          else Seq(Row(id, p))
-        })
-        .write.mode("overwrite").parquet(tmp)
-    }
+    mediaTable("phash", n, spark.range(0, n, 1, 8).toDF())(
+      withReuploads(MediaSynth.payload))
+
+  /** `id`'s row plus, for every id % 10 == 0, an exact re-ingest under
+    * media_id + 1000: the planted duplicate-upload shape.
+    */
+  private def withReuploads(payload: Long => Array[Byte])(id: Long): Seq[(Long, Array[Byte])] = {
+    val p = payload(id)
+    if (id % 10 == 0) Seq(id -> p, (id + 1000L) -> p) else Seq(id -> p)
+  }
 
   /** Stage-once parquet table of the TEXTURED image family (the
     * hash-scheme audit's second corpus — quadratic/cross-term pixels
@@ -263,20 +187,8 @@ object Multimodal {
     * (id % 10 == 0 re-ingested under media_id + 1000).
     */
   def texTableDir(spark: SparkSession, n: Int): String =
-    stageOnce(s"${sys.props("java.io.tmpdir")}/graft_tex_table_$n") { tmp =>
-      val schema = StructType(Seq(
-        StructField("media_id", LongType, nullable = false),
-        StructField("media", BinaryType, nullable = false)))
-      implicit val enc = RowEncoder.encoderFor(schema)
-      spark.range(0, n, 1, 8).toDF("media_id")
-        .mapPartitions(rows => rows.flatMap { r =>
-          val id = r.getLong(0)
-          val p = MediaSynth.texturedPayload(id)
-          if (id % 10 == 0) Seq(Row(id, p), Row(id + 1000L, p))
-          else Seq(Row(id, p))
-        })
-        .write.mode("overwrite").parquet(tmp)
-    }
+    mediaTable("tex", n, spark.range(0, n, 1, 8).toDF())(
+      withReuploads(MediaSynth.texturedPayload))
 
   /** Stage-once parquet table for the AUDIO fingerprint dedup fixture:
     * the n base payloads (mixed modalities — image rows route out at
@@ -289,21 +201,10 @@ object Multimodal {
     * across JVMs and the planted pairs are known in closed form.
     */
   def audioTableDir(spark: SparkSession, n: Int): String =
-    stageOnce(s"${sys.props("java.io.tmpdir")}/graft_audio_table_$n") { tmp =>
-      val schema = StructType(Seq(
-        StructField("media_id", LongType, nullable = false),
-        StructField("media", BinaryType, nullable = false)))
-      implicit val enc = RowEncoder.encoderFor(schema)
-      val dups = MediaSynth.audioDupIds(n)
-      spark.createDataset(
-        spark.sparkContext.parallelize((0L until n) ++ dups, 8))(
-        org.apache.spark.sql.Encoders.scalaLong).toDF("media_id")
-        .mapPartitions(rows => rows.map { r =>
-          val id = r.getLong(0)
-          Row(id, MediaSynth.audioCorpusPayload(id))
-        })
-        .write.mode("overwrite").parquet(tmp)
-    }
+    mediaTable("audio", n, spark.createDataset(
+        spark.sparkContext.parallelize((0L until n) ++ MediaSynth.audioDupIds(n), 8))(
+        org.apache.spark.sql.Encoders.scalaLong).toDF())(
+      id => Seq(id -> MediaSynth.audioCorpusPayload(id)))
 
   val afpType: StructType = StructType(Seq(
     StructField("media_id", LongType, nullable = false),

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.streaming.StagedEvents.deleteRecursively
 import graft.tables.Tables._
 
 /** Relational operator inventory mapped onto the driver test tables.
@@ -45,7 +46,7 @@ object Relational {
     * shouldn't depend on timestamp logical-type handling.
     */
   private def partitionedEventsDir(s: SparkSession, d: String): String =
-    // build-in-temp + atomic rename (the shared stageOnce): concurrent
+    // build-in-temp + atomic rename (graft.Fixtures): concurrent
     // stagings — two prewarms in one JVM or two JVMs — never write the
     // same output dir, which is how a racing FileOutputCommitter corrupts
     // a check-then-write-in-place layout
@@ -56,13 +57,12 @@ object Relational {
     }
 
   /** A stage-once layout of `d`'s events table: version 1 of fixture
-    * `name` (see [[graft.streaming.StagedEvents.stageOnceFixture]]);
+    * `name` (see [[graft.Fixtures.stage]]);
     * `build` writes into the temp dir path.
     */
   private def eventsFixture(name: String, d: String)(build: String => Unit): String =
-    graft.streaming.StagedEvents.stageOnceFixture(name, version = 1,
-      java.nio.file.Paths.get(d, "events.parquet").toString)(t => build(t.toString))
-      .toString
+    graft.Fixtures.stage(name, 1, graft.Fixtures.Source(d, "events.parquet"))(
+      t => build(t.toString)).toString
 
   /** Stage-once events copy in TWO SCHEMA GENERATIONS — the schema-drift
     * layout every long-lived 100 TB dataset grows: gen=1 partitions
@@ -89,8 +89,8 @@ object Relational {
     * table alone.
     */
   private def snapshotV2Dir(s: SparkSession, d: String): String =
-    graft.streaming.StagedEvents.stageOnceFixture("docs_snapshot", version = 2,
-      java.nio.file.Paths.get(d, "documents.parquet").toString) { tmp =>
+    graft.Fixtures.stage("docs_snapshot", 2,
+      graft.Fixtures.Source(d, "documents.parquet")) { tmp =>
       val v1 = documents(s, d).select(col("doc_id"), col("source"), col("n_chars"))
       val kept = v1.filter(col("doc_id") % 17 =!= 0)
         .withColumn("n_chars",
@@ -156,7 +156,7 @@ object Relational {
 
   /** Stage-once events copy RANGE-CLUSTERED by `value` with a per-file
     * min/max MANIFEST beside it (s14's zone-map layout). The manifest
-    * stores bare file NAMES, not paths: stageOnce builds in a temp dir
+    * stores bare file NAMES, not paths: Fixtures builds in a temp dir
     * and atomically renames, so an absolute path recorded at write time
     * would dangle after the commit. Same content-fingerprint key as the
     * sibling layouts.
@@ -211,18 +211,9 @@ object Relational {
   locally {
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
       Relational.synchronized {
-        stagedBucketDirs.foreach(p => try deleteTree(p) catch { case _: Throwable => () })
+        stagedBucketDirs.foreach(p => try deleteRecursively(p) catch { case _: Throwable => () })
       }, "graft-bucketed-staging-cleanup"))
   }
-
-  private def deleteTree(p: java.nio.file.Path): Unit =
-    if (java.nio.file.Files.exists(p)) {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(java.nio.file.Files.delete)
-      finally walk.close()
-    }
 
   /** Remove bucketed-staging residue of DEAD runs: dirs matching the
     * staging name pattern whose jvmTag is not ours and whose last
@@ -239,7 +230,7 @@ object Relational {
     try listing.iterator().asScala.foreach { p =>
       val stale = pat.findFirstIn(p.getFileName.toString).isDefined &&
         java.nio.file.Files.getLastModifiedTime(p).toMillis < cutoff
-      if (stale) try deleteTree(p) catch { case _: Throwable => () }
+      if (stale) try deleteRecursively(p) catch { case _: Throwable => () }
     } finally listing.close()
   }
 

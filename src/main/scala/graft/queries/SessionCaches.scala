@@ -191,8 +191,8 @@ object SessionCaches {
 }
 
 /** Append-only log of one-time SHARED-STAGE builds (SessionFrameCache
-  * misses, stageOnce stagings) with their wall seconds — the attribution
-  * channel for bench swings the per-query counters cannot see: two
+  * misses, [[graft.Fixtures]] stagings) with their wall seconds — the
+  * attribution channel for bench swings the per-query counters cannot see: two
   * same-plan queries trade places round over round when a cold shared
   * stage lands in whichever one's reps first touch it (r11:
   * sim_ivfpq_residual_recall 2.20 → 5.71 s with identical jobs+shuffle

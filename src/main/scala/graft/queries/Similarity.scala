@@ -3544,14 +3544,14 @@ object Similarity {
   /** Stage-once serving layout for the FINAL kNN adjacency: one file per
     * block under partitionBy(blk), keyed by the data dir's content stamp
     * (an in-place regeneration re-stages — the SessionFrameCache rule)
-    * and committed via [[graft.ops.Multimodal.stageOnce]]'s atomic-rename
+    * and committed via [[graft.Fixtures.stage]]'s atomic-rename
     * protocol so a concurrent reader never observes a half-written
     * layout. This is the ingest artifact sim_knn_graph_layout
     * inventories; the compacted walk serves from it across queries and
     * JVMs without rebuilding.
     */
   private[graft] def knnLayoutDir(s: SparkSession, d: String): String =
-    graft.streaming.StagedEvents.stageOnceFixture("knn_layout", version = 1, d) { tmp =>
+    graft.Fixtures.stage("knn_layout", 1, graft.Fixtures.Source(d)) { tmp =>
       knnFinalGraphShared(s, d)
         .select(col("vec_id"), col("nbr"), knnBlkOf(col("vec_id")).as("blk"))
         .repartition(col("blk"))

@@ -551,12 +551,12 @@ object TextOps {
     * positives), and a disjoint ~10% slice re-ingested UPPERCASED under
     * eval_id + 20M (the train corpus is all-lowercase ASCII, so every
     * shingle hash changes — planted negatives). Closed-form truth per
-    * slice is what the spec pins. Content-stamped and committed via the
-    * shared atomic-rename stageOnce.
+    * slice is what the spec pins. Content-stamped and committed via
+    * [[graft.Fixtures.stage]].
     */
   private[graft] def evalCorpusDir(s: SparkSession, d: String): String =
-    graft.streaming.StagedEvents.stageOnceFixture("eval_corpus", version = 1,
-      java.nio.file.Paths.get(d, "documents.parquet").toString) { tmp =>
+    graft.Fixtures.stage("eval_corpus", 1,
+      graft.Fixtures.Source(d, "documents.parquet")) { tmp =>
       val v1 = documents(s, d).select(col("doc_id"), col("source"), col("text"))
       val m = conv(substring(
         md5(concat(lit("ev"), col("doc_id").cast("string"))), 1, 15), 16, 10)

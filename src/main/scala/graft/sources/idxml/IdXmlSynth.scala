@@ -61,16 +61,22 @@ object IdXmlSynth {
   private def specRef(i: Int, peps: Int): String =
     if (i == peps - 1) "index=bad" else s"controllerType=0 controllerNumber=1 scan=${i + 1}"
 
-  /** Stage (once) and return the paths of `n` synthetic idXML runs
-    * (cross-JVM-safe protocol: [[graft.sources.SynthStaging]]).
+  /** Stage (once) and return the paths of `n` synthetic idXML runs:
+    * fixture `idxml_runs` of [[graft.Fixtures]], keyed on the generator
+    * parameters. Bump its version whenever `runXml` changes what it
+    * writes.
     */
-  def stagedRuns(n: Int, pepsPerRun: Int, hitsPerPep: Int): Seq[String] =
-    graft.sources.SynthStaging.staged(
-      s"graft_idxml_runs_${n}_${pepsPerRun}_$hitsPerPep",
-      (1 to n).map(r => f"run$r%02d.idXML")) { (dir, name) =>
-      val r = name.stripPrefix("run").stripSuffix(".idXML").toInt
-      Files.writeString(dir.resolve(name), runXml(r, pepsPerRun, hitsPerPep))
+  def stagedRuns(n: Int, pepsPerRun: Int, hitsPerPep: Int): Seq[String] = {
+    val names = (1 to n).map(r => f"run$r%02d.idXML")
+    val dir = graft.Fixtures.stage("idxml_runs", 1,
+        graft.Fixtures.Params(n, pepsPerRun, hitsPerPep), names) { tmp =>
+      Files.createDirectories(tmp)
+      names.zipWithIndex.foreach { case (f, i) =>
+        Files.writeString(tmp.resolve(f), runXml(i + 1, pepsPerRun, hitsPerPep))
+      }
     }
+    names.map(dir.resolve(_).toString)
+  }
 
   /** One assembled-PSM row the `s2b_idxml_many_runs` projection must
     * produce (arrays pre-joined with '|'; options are SQL NULLs).

@@ -11,23 +11,27 @@ import java.util.zip.Deflater
   * MzmlManyFilesSpec proves the parallelism SHAPE (one DSv2 scan, one input
   * partition per file, no file mixing) at N=6 toy files; this synthesizer
   * gives that shape a wall-clock number: ~32 runs of zlib'd 64-bit spectra,
-  * staged once into the JVM tmpdir and scanned by the `s1b_mzml_many_runs`
-  * bench/verify entry. Content is purely arithmetic (no RNG), so every
-  * engine, run, and round sees byte-identical files; the staging key encodes
-  * the generator parameters, and `_SUCCESS` makes re-runs a no-op.
+  * staged once and scanned by the `s1b_mzml_many_runs` bench/verify entry.
+  * Content is purely arithmetic (no RNG), so every engine, run, and round
+  * sees byte-identical files.
   */
 object MzmlSynth {
 
-  /** Stage (once) and return the paths of `n` synthetic runs
-    * (cross-JVM-safe protocol: [[graft.sources.SynthStaging]]).
+  /** Stage (once) and return the paths of `n` synthetic runs: fixture
+    * `mzml_runs` of [[graft.Fixtures]], keyed on the generator parameters.
+    * Bump its version whenever `runXml` changes what it writes.
     */
-  def stagedRuns(n: Int, spectraPerRun: Int, peaks: Int): Seq[String] =
-    graft.sources.SynthStaging.staged(
-      s"graft_mzml_runs_${n}_${spectraPerRun}_$peaks",
-      (1 to n).map(r => f"run$r%02d.mzML")) { (dir, name) =>
-      val r = name.stripPrefix("run").stripSuffix(".mzML").toInt
-      Files.writeString(dir.resolve(name), runXml(r, spectraPerRun, peaks))
+  def stagedRuns(n: Int, spectraPerRun: Int, peaks: Int): Seq[String] = {
+    val names = (1 to n).map(r => f"run$r%02d.mzML")
+    val dir = graft.Fixtures.stage("mzml_runs", 1,
+        graft.Fixtures.Params(n, spectraPerRun, peaks), names) { tmp =>
+      Files.createDirectories(tmp)
+      names.zipWithIndex.foreach { case (f, i) =>
+        Files.writeString(tmp.resolve(f), runXml(i + 1, spectraPerRun, peaks))
+      }
     }
+    names.map(dir.resolve(_).toString)
+  }
 
   /** The per-run (file_name, n_spectra, n_ms1, tic_units) table the
     * `s1b_mzml_many_runs` aggregation must produce, computed from the SAME

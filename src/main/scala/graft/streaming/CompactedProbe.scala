@@ -39,7 +39,7 @@ object CompactedProbe {
     * dir re-stages, same rule as the SessionFrameCache.
     */
   private[graft] def compactedDir(spark: SparkSession, sfDir: String): String =
-    StagedEvents.stageOnceFixture("compacted", version = 1, sfDir) { tmp =>
+    graft.Fixtures.stage("compacted", 1, graft.Fixtures.Source(sfDir)) { tmp =>
       import graft.queries.Similarity
       // the compaction step: one writer task per cell = one file per list
       Similarity.ivfpqCellsShared(spark, sfDir)

@@ -72,8 +72,8 @@ object ContamGate {
       // as 8 files — a single-file batch puts the gate's whole
       // per-shingle map on ONE input partition, a fixture artifact (real
       // ingest arrives as many files). Sink + checkpoint stay per-run.
-      val staged = StagedEvents.stageOnceFixture("contam_arrivals", version = 1,
-        java.nio.file.Paths.get(sfDir, "documents.parquet").toString) { tmp =>
+      val staged = graft.Fixtures.stage("contam_arrivals", 1,
+        graft.Fixtures.Source(sfDir, "documents.parquet")) { tmp =>
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
           .select(col("doc_id"), col("source"), col("text"))
         require(docs.head(1).nonEmpty, s"$sfDir/documents.parquet is empty")

@@ -183,19 +183,19 @@ object EncodeIngest {
   /** Stage-once vec_id-ring arrival fixture for the encode-at-ingest
     * replays: the staged files are a pure function of the embeddings
     * table (4 mtime-ordered ring files per source), so they are written
-    * once per (embeddings content stamp, sources) and shared — the
-    * [[graft.queries.Relational]] partitionedEventsDir discipline (keyed
-    * by content fingerprint, `_SUCCESS`-marked, build-in-temp + atomic
-    * rename, StageBuildLog-attributed on a cold miss, prewarmed by
-    * SessionCaches). The DRAIN — the 4 triggers and all encode work —
-    * still runs per invocation; only the input-fixture WRITE (4 full
-    * jobs re-writing identical bytes per rep) leaves the timed path. A
-    * regenerated dataset flips the stamp and re-stages.
+    * once per (embeddings content stamp, sources) and shared through
+    * [[graft.Fixtures.stage]] (keyed by content fingerprint,
+    * `_SUCCESS`-marked, build-in-temp + atomic rename, StageBuildLog-
+    * attributed on a cold miss, prewarmed by SessionCaches). The DRAIN —
+    * the 4 triggers and all encode work — still runs per invocation; only
+    * the input-fixture WRITE (4 full jobs re-writing identical bytes per
+    * rep) leaves the timed path. A regenerated dataset flips the stamp and
+    * re-stages.
     */
   private[graft] def stagedRing(spark: SparkSession, sfDir: String,
       sources: Int): java.nio.file.Path =
-    StagedEvents.stageOnceFixture(s"encode_ring_$sources", version = 1,
-      java.nio.file.Paths.get(sfDir, "embeddings.parquet").toString) { root =>
+    graft.Fixtures.stage(s"encode_ring_$sources", 1,
+      graft.Fixtures.Source(sfDir, "embeddings.parquet")) { root =>
       val emb = graft.tables.Tables.embeddings(spark, sfDir)
       require(emb.head(1).nonEmpty,
         s"$sfDir/embeddings.parquet is empty — cannot stage an encode-at-ingest replay")

@@ -7,7 +7,7 @@ import org.apache.spark.sql.DataFrame
   * a failed micro-batch with the SAME batchId, so a sink that blind-appends
   * duplicates every row of a retried batch. Each batch commits under
   * `root/batch_id=<id>/` through the shared atomic-rename stage protocol
-  * ([[graft.ops.Multimodal.stageOnce]]): write to a UUID temp dir, re-check
+  * ([[graft.Fixtures.commit]]): write to a UUID temp dir, re-check
   * the `_SUCCESS` marker, atomic move — so a replayed batch finds the
   * marker and becomes a no-op (replace-nothing) instead of an append, and
   * a reader never sees a half-written batch directory. The `batch_id=`
@@ -24,15 +24,12 @@ object IdempotentBatchSink {
     */
   def commit(batch: DataFrame, root: String, batchId: Long,
       partitionCols: Seq[String] = Nil): Boolean =
-    // logBuild = false: micro-batch commits are part of every run by
-    // design, not one-time shared stages the bench should attribute.
-    // The return value is stageOnceCommitted's race outcome — whether the
+    // The return value is Fixtures.commit's race outcome — whether the
     // atomic move landed — NOT whether our write callback ran: a loser
     // whose tmp is discarded after another JVM's commit must report false.
-    graft.ops.Multimodal.stageOnceCommitted(
-        s"$root/batch_id=$batchId", logBuild = false) { tmp =>
+    graft.Fixtures.commit(s"$root/batch_id=$batchId") { tmp =>
       val w = batch.write.mode("overwrite")
-      // Spark's parquet commit drops the _SUCCESS marker stageOnce keys on
+      // Spark's parquet commit leaves the _SUCCESS marker Fixtures.commit keys on
       (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*) else w)
         .parquet(tmp)
     }

@@ -26,8 +26,8 @@ object PostingsIngest {
       // doc-parity arrival fixture: pure function of the documents table,
       // staged once per content stamp and shared (the sink + checkpoint
       // dirs stay per-invocation — the query writes them)
-      val staged = StagedEvents.stageOnceFixture("postings_ingest_src", version = 1,
-        java.nio.file.Paths.get(sfDir, "documents.parquet").toString) { tmp =>
+      val staged = graft.Fixtures.stage("postings_ingest_src", 1,
+        graft.Fixtures.Source(sfDir, "documents.parquet")) { tmp =>
         val docs = graft.tables.Tables.documents(spark, sfDir)
           .select(col("doc_id"), col("text"))
         require(docs.head(1).nonEmpty, s"$sfDir/documents.parquet is empty")

@@ -17,114 +17,17 @@ import org.apache.spark.sql.functions._
   */
 object StagedEvents {
 
-  /** Stage-once ARRIVAL FIXTURE dir for a streaming replay whose staged
-    * files are a pure function of one source table: keyed by the source's
-    * content fingerprint (the Relational partitionedEventsDir discipline),
-    * `_SUCCESS`-marked, built in temp + atomically renamed, and shared by
-    * every invocation until the dataset is regenerated (stamp flips →
-    * re-stage). Mod-time ordering within the dir is relative (strictly
-    * decreasing modSecsAgo at build time), so the file-source batch
-    * composition is frozen with the fixture. ONLY for read-only input
-    * fixtures — tables a query mutates (StreamForgetKeys), checkpoint
-    * dirs, and applied logs stay per-invocation.
-    *
-    * `version` is the fixture's format version, folded into the dir name
-    * next to the content stamp: bump it whenever `build` changes what it
-    * writes, or the stale fixture of the old `build` is silently reused
-    * until the dataset is regenerated.
-    *
-    * `build` writes into the temp dir; the root `_SUCCESS` commit marker
-    * (hidden to batch and stream readers) is then written last, replacing
-    * any that `build` left there (a Spark write straight into the temp dir
-    * does, and writes its `._SUCCESS.crc` after it), so no file in the
-    * fixture is newer than its commit.
-    *
-    * The dir is named `graft_<name>_<source>_v<version>_<stamp>`, where
-    * `<source>` is [[sourceKey]] of the path it was keyed on, so a
-    * fixture's source is read off its name and nothing but `build`'s
-    * output and `_SUCCESS` lands in it.
-    *
-    * A cold stage first evicts the fixtures it supersedes: `name`'s dirs of
-    * any other version and its legacy unversioned dirs, whatever their
-    * stamp or source, and its dirs of the same version and source under
-    * another stamp (the dataset there changed since). Dirs of the same
-    * version built from other sources (such as another scale) stay, and
-    * so do same-version dirs named before the source joined the name
-    * (their source is unknown), and every dir this JVM has handed out,
-    * since a lazily read frame may still scan it. Eviction is best effort
-    * and is not part of the build: a dir that cannot be listed or deleted
-    * (another user's, or one another JVM is evicting too) stays.
-    */
-  def stageOnceFixture(name: String, version: Int, sourcePath: String)(
-      build: Path => Unit): Path = {
-    val key = graft.queries.ContentStamp.of(sourcePath)
-    val source = sourceKey(sourcePath)
-    val tmpDir = Paths.get(sys.props("java.io.tmpdir"))
-    val dir = tmpDir.resolve(s"graft_${name}_${source}_v${version}_$key")
-    if (!Files.exists(dir.resolve("_SUCCESS"))) evictSuperseded(dir, name, version, source)
-    // logged under `graft_<name>_v<version>`, the same on every host and scale
-    graft.ops.Multimodal.stageOnce(dir.toString, logBuild = false) { tmp =>
-      val t0 = System.nanoTime()
-      val t = Paths.get(tmp)
-      build(t)
-      val done = t.resolve("_SUCCESS")
-      Files.deleteIfExists(done)
-      Files.createFile(done)
-      graft.queries.StageBuildLog.record(s"graft_${name}_v$version",
-        (System.nanoTime() - t0) / 1e9)
-    }
-    handedOut.add(dir.getFileName.toString)
-    dir
-  }
-
-  /** The 16 hex digits that name `sourcePath` in its fixtures' dir names:
-    * a hash of the absolute, normalized path, so two spellings of one path
-    * share their fixtures.
-    */
-  private[graft] def sourceKey(sourcePath: String): String =
-    java.security.MessageDigest.getInstance("SHA-256")
-      .digest(Paths.get(sourcePath).toAbsolutePath.normalize.toString.getBytes("UTF-8"))
-      .take(8).map("%02x".format(_)).mkString
-
-  /** Names of the fixture dirs [[stageOnceFixture]] has returned in this JVM. */
-  private val handedOut = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private def evictSuperseded(dir: Path, name: String, version: Int,
-      source: String): Unit = {
-    import scala.jdk.CollectionConverters._
-    // the stamp is ContentStamp's 32 hex digits, matched exactly, so a name
-    // never claims a longer name's dirs (events_zonemap vs events_zonemap_base)
-    val fixture =
-      s"graft_${java.util.regex.Pattern.quote(name)}(?:_([0-9a-f]{16}))?(?:_v(\\d+))?_[0-9a-f]{32}".r
-    def quietly(io: => Unit): Unit =
-      try io catch { case _: java.io.IOException | _: java.io.UncheckedIOException => () }
-    quietly {
-      val listing = Files.list(dir.getParent)
-      val stale =
-        try listing.iterator().asScala.filter { p =>
-          val n = p.getFileName.toString
-          n match {
-            case fixture(s, v) => !handedOut.contains(n) && p != dir &&
-              (v == null || v.toInt != version || s == source)
-            case _ => false
-          }
-        }.toVector
-        finally listing.close()
-      stale.foreach(p => quietly(deleteRecursively(p)))
-    }
-  }
-
   /** The event-time stream over `sfDir`'s events plus the per-user
     * sentinels — a pure function of the events table, staged ONCE per
-    * content stamp via [[stageOnceFixture]] and shared by the five
+    * content stamp via [[graft.Fixtures.stage]] and shared by the five
     * sentinel-closed stateful replays (sessionize, session-window,
     * latest-state, scd2, asof). `ts` is already event time
     * ([[graft.tables.Tables.toEventTime]]).
     */
   def eventStream(spark: SparkSession, sfDir: String): DataFrame = {
-    val src = java.nio.file.Paths.get(sfDir, "events.parquet").toString
+    val src = Paths.get(sfDir, "events.parquet").toString
     val schema = spark.read.parquet(src).schema
-    val dir = stageOnceFixture("staged_events", version = 1, src) { tmp =>
+    val dir = graft.Fixtures.stage("staged_events", 1, graft.Fixtures.Source(src)) { tmp =>
       stageInto(spark, sfDir, tmp)
     }
     spark.readStream.schema(schema).parquet(dir.toString)
@@ -179,7 +82,7 @@ object StagedEvents {
         // filesystems without symlink support fall back to a real copy
         Files.copy(f, stage.resolve(name))
       }
-    val src = java.nio.file.Paths.get(sfDir, "events.parquet").toAbsolutePath
+    val src = Paths.get(sfDir, "events.parquet").toAbsolutePath
     if (Files.isDirectory(src)) {
       // directory-shaped dataset (the cluster-scale layout): walk
       // RECURSIVELY (hive-partitioned layouts nest part files) and flat-link

@@ -30,8 +30,8 @@ object StreamCountMin {
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       // doc-parity arrival fixture: pure function of the documents table,
       // staged once per content stamp and shared across invocations
-      val staged = StagedEvents.stageOnceFixture("countmin_src", version = 1,
-        java.nio.file.Paths.get(sfDir, "documents.parquet").toString) { tmp =>
+      val staged = graft.Fixtures.stage("countmin_src", 1,
+        graft.Fixtures.Source(sfDir, "documents.parquet")) { tmp =>
         require(docs.head(1).nonEmpty,
           s"$sfDir/documents.parquet is empty — cannot stage an ingest replay")
         StagedEvents.writePart(docs.filter(col("doc_id") % 2 === 0),

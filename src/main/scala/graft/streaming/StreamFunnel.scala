@@ -35,10 +35,10 @@ object StreamFunnel {
     graft.tables.Tables.withShufflePartitions(spark, 4) {
       // the arrival fixture (events copy + per-leg sentinels) is a pure
       // function of the events table — staged once per content stamp and
-      // shared across invocations (StagedEvents.stageOnceFixture); each
+      // shared across invocations (graft.Fixtures); each
       // invocation still runs the full 3-trigger drain
-      val staged = StagedEvents.stageOnceFixture("funnel_src", version = 1,
-        java.nio.file.Paths.get(sfDir, "events.parquet").toString) { tmp =>
+      val staged = graft.Fixtures.stage("funnel_src", 1,
+        graft.Fixtures.Source(sfDir, "events.parquet")) { tmp =>
         val ev = spark.read.parquet(s"$sfDir/events.parquet")
           .select(col("event_id"), col("ts"), col("user_id"),
             col("event_type"), col("value"), col("props"))

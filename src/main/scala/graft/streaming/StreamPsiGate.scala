@@ -42,9 +42,9 @@ object StreamPsiGate {
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
       // the odd-slice arrival fixture is a pure function of the events
       // table — staged once per content stamp and shared across
-      // invocations (StagedEvents.stageOnceFixture)
-      val staged = StagedEvents.stageOnceFixture("psi_gate_src", version = 1,
-        java.nio.file.Paths.get(sfDir, "events.parquet").toString) { tmp =>
+      // invocations (graft.Fixtures)
+      val staged = graft.Fixtures.stage("psi_gate_src", 1,
+        graft.Fixtures.Source(sfDir, "events.parquet")) { tmp =>
         require(ev.head(1).nonEmpty,
           s"$sfDir/events.parquet is empty — cannot stage an ingest replay")
         val odd = ev.filter(col("event_id") % 2 =!= 0)

@@ -31,8 +31,8 @@ object StreamQuarantine {
       // doc-parity arrival fixture: pure function of the documents table,
       // staged once per content stamp and shared (sink + checkpoint dirs
       // stay per-invocation — the query writes them)
-      val staged = StagedEvents.stageOnceFixture("quarantine_src", version = 1,
-        java.nio.file.Paths.get(sfDir, "documents.parquet").toString) { tmp =>
+      val staged = graft.Fixtures.stage("quarantine_src", 1,
+        graft.Fixtures.Source(sfDir, "documents.parquet")) { tmp =>
         val docs = spark.read.parquet(s"$sfDir/documents.parquet")
           .select(col("doc_id"), col("text"), col("n_chars"))
         require(docs.head(1).nonEmpty, s"$sfDir/documents.parquet is empty")

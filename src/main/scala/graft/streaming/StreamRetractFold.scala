@@ -95,11 +95,11 @@ object StreamRetractFold {
         md5(concat(lit("rt"), col("event_id").cast("string"))), 1, 15), 16, 10)
         .cast("long") % 20 === 0
       // the CDC arrival fixture is a pure function of the events table —
-      // staged once per content stamp (StagedEvents.stageOnceFixture) and
+      // staged once per content stamp (graft.Fixtures) and
       // shared across invocations; each invocation still drains all 4
       // triggers through the stateful fold
-      val staged = StagedEvents.stageOnceFixture("retract_src", version = 1,
-        java.nio.file.Paths.get(sfDir, "events.parquet").toString) { tmp =>
+      val staged = graft.Fixtures.stage("retract_src", 1,
+        graft.Fixtures.Source(sfDir, "events.parquet")) { tmp =>
         require(ev.head(1).nonEmpty, s"$sfDir/events.parquet is empty")
         def cdc(df: DataFrame, mult: Long) = df.select(
           col("day"), col("event_type"), col("cents"), lit(mult).as("mult"))

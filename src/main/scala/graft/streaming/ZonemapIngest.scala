@@ -37,8 +37,8 @@ object ZonemapIngest {
     * only (the table as of the last compaction).
     */
   private def baseDir(s: SparkSession, d: String): String =
-    StagedEvents.stageOnceFixture("events_zonemap_base", version = 1,
-      java.nio.file.Paths.get(d, "events.parquet").toString) { tmp =>
+    graft.Fixtures.stage("events_zonemap_base", 1,
+      graft.Fixtures.Source(d, "events.parquet")) { tmp =>
       val base = graft.tables.Tables.events(s, d)
         .filter(col("event_id") % 8 =!= 0)
         .withColumn("ts", unix_micros(col("ts")))
@@ -60,8 +60,8 @@ object ZonemapIngest {
         // staged once per content stamp and shared; the SINK (the delta
         // files + manifest the query writes, the measurand) stays in the
         // per-invocation work dir.
-        val staged = StagedEvents.stageOnceFixture("zonemap_arrivals", version = 1,
-          java.nio.file.Paths.get(sfDir, "events.parquet").toString) { tmp =>
+        val staged = graft.Fixtures.stage("zonemap_arrivals", 1,
+          graft.Fixtures.Source(sfDir, "events.parquet")) { tmp =>
           val ev = graft.tables.Tables.events(spark, sfDir)
             .filter(col("event_id") % 8 === 0)
             .withColumn("ts", unix_micros(col("ts")))

@@ -77,29 +77,31 @@ class SharedCacheLifecycleSpec extends SparkSpec {
   test("content stamp: regenerating a dir in place forces a rebuild") {
     import graft.queries.SessionFrameCache
     val dir = java.nio.file.Files.createTempDirectory("graft_stamp_spec")
-    val f = dir.resolve("part-0.txt")
-    java.nio.file.Files.writeString(f, "v1")
-    var builds = 0
-    val cache = new SessionFrameCache(4)
-    def build() = cache.getOrBuild(spark, dir.toString) {
-      builds += 1
-      spark.read.textFile(f.toString).toDF("v")
-    }
-    val first = build()
-    assert(first.head().getString(0) == "v1" && builds == 1)
-    assert(build() eq first, "unchanged dir must serve the cached frame")
-    // regenerate the file at the same path (new size => new stamp even on
-    // coarse-mtime filesystems); stamps are memoized for ~1 s so cache
-    // HITS don't walk the directory — wait out the freshness window
-    java.nio.file.Files.writeString(f, "v2-regenerated")
-    Thread.sleep(1200)
-    val rebuilt = build()
-    assert(builds == 2, "stamp change must trigger a rebuild")
-    assert(!(rebuilt eq first))
-    assert(rebuilt.head().getString(0) == "v2-regenerated",
-      "rebuilt frame must read the LIVE file, not stale blocks")
-    cache.release(spark)
-    assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+    try {
+      val f = dir.resolve("part-0.txt")
+      java.nio.file.Files.writeString(f, "v1")
+      var builds = 0
+      val cache = new SessionFrameCache(4)
+      def build() = cache.getOrBuild(spark, dir.toString) {
+        builds += 1
+        spark.read.textFile(f.toString).toDF("v")
+      }
+      val first = build()
+      assert(first.head().getString(0) == "v1" && builds == 1)
+      assert(build() eq first, "unchanged dir must serve the cached frame")
+      // regenerate the file at the same path (new size => new stamp even on
+      // coarse-mtime filesystems); stamps are memoized for ~1 s so cache
+      // HITS don't walk the directory — wait out the freshness window
+      java.nio.file.Files.writeString(f, "v2-regenerated")
+      Thread.sleep(1200)
+      val rebuilt = build()
+      assert(builds == 2, "stamp change must trigger a rebuild")
+      assert(!(rebuilt eq first))
+      assert(rebuilt.head().getString(0) == "v2-regenerated",
+        "rebuilt frame must read the LIVE file, not stale blocks")
+      cache.release(spark)
+      assert(spark.sparkContext.getPersistentRDDs.isEmpty)
+    } finally graft.streaming.StagedEvents.deleteRecursively(dir)
   }
 
   test("shared CC labels: one components run feeds dedup_canonical, released clean") {

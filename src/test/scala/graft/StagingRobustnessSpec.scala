@@ -7,13 +7,15 @@ import scala.concurrent.duration.Duration
 
 import graft.sources.mzml.MzmlSynth
 
-/** Concurrent/crash robustness of the two staging protocols that share
-  * directories across JVMs (the round-7 ADVICE race fixes, pinned as
-  * tests): MzmlSynth's build-then-atomic-rename run staging, and the
-  * UUID-named bucketed-table staging that replaced the old
-  * check-then-delete `clearOrphan` (a name fresh per JVM can never
-  * collide with a live catalog's location, so no deletion of
-  * possibly-live dirs ever happens).
+/** Concurrent/crash robustness of the staging that shares directories
+  * across JVMs. There is one stage-once protocol, [[graft.Fixtures]]:
+  * build in a temp dir, atomic rename, one key, commit and eviction rule
+  * for every fixture, whether keyed on a source path (the event layouts,
+  * the replays' arrival dirs) or on a generator's parameters (the mzML
+  * and idXML runs, the media tables). Beside it stands the UUID-named
+  * bucketed-table staging that replaced the old check-then-delete
+  * `clearOrphan` (a name fresh per JVM can never collide with a live
+  * catalog's location, so no deletion of possibly-live dirs ever happens).
   */
 class StagingRobustnessSpec extends SparkSpec {
 
@@ -81,7 +83,7 @@ class StagingRobustnessSpec extends SparkSpec {
     val dir = s"${sys.props("java.io.tmpdir")}/graft_stageonce_race_${java.util.UUID.randomUUID()}"
     val root = Paths.get(dir)
     try {
-      val out = graft.ops.Multimodal.stageOnce(dir) { tmp =>
+      val committed = graft.Fixtures.commit(dir) { tmp =>
         // "JVM B" commits the real dir while "JVM A" is mid-write
         Files.createDirectories(root)
         Files.writeString(root.resolve("winner.txt"), "committed-by-winner")
@@ -90,7 +92,7 @@ class StagingRobustnessSpec extends SparkSpec {
         Files.createDirectories(Paths.get(tmp))
         Files.writeString(Paths.get(tmp).resolve("loser.txt"), "from-loser")
       }
-      assert(out == dir)
+      assert(!committed, "the loser must not report the commit")
       assert(Files.exists(root.resolve("_SUCCESS")), "winner's marker survives")
       assert(Files.readString(root.resolve("winner.txt")) == "committed-by-winner",
         "winner's committed content must never be deleted")
@@ -100,16 +102,18 @@ class StagingRobustnessSpec extends SparkSpec {
         .map(_.getName).filter(n => n.startsWith(root.getFileName.toString + ".") && n.endsWith(".tmp"))
       assert(leftovers.isEmpty, s"tmp dirs left behind: ${leftovers.mkString(",")}")
       // a second call is a pure no-op read of the winner's dir
-      graft.ops.Multimodal.stageOnce(dir) { _ => fail("must not re-stage a committed dir") }
+      graft.Fixtures.commit(dir) { _ => fail("must not re-stage a committed dir") }
     } finally graft.streaming.StagedEvents.deleteRecursively(root)
   }
 
   test("stage-once fixture: the same version reuses the dir, a bumped version re-stages") {
-    import graft.streaming.StagedEvents.{deleteRecursively, stageOnceFixture}
+    import graft.Fixtures.Source
+    import graft.streaming.StagedEvents.deleteRecursively
     val src = Files.createTempFile("graft-fixture-src", ".txt")
     Files.writeString(src, java.util.UUID.randomUUID().toString)
+    val key = Source(src.toString)
     var builds = 0
-    def stage(version: Int) = stageOnceFixture("spec_versioned", version, src.toString) { tmp =>
+    def stage(version: Int) = graft.Fixtures.stage("spec_versioned", version, key) { tmp =>
       builds += 1
       Files.createDirectories(tmp)
       Files.writeString(tmp.resolve("v.txt"), version.toString)
@@ -130,14 +134,15 @@ class StagingRobustnessSpec extends SparkSpec {
   }
 
   test("stage-once fixture: a cold stage evicts the versions it supersedes") {
-    import graft.streaming.StagedEvents.{deleteRecursively, stageOnceFixture}
+    import graft.Fixtures.{Source, stage}
+    import graft.streaming.StagedEvents.deleteRecursively
     val tmpDir = Paths.get(sys.props("java.io.tmpdir"))
     val name = s"spec_evict_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     val src = Files.createTempFile("graft-fixture-src", ".txt")
     Files.writeString(src, name)
     val stamp = graft.queries.ContentStamp.of(src.toString)
     val otherStamp = stamp.reverse
-    // left by earlier processes: superseded, another scale, and a longer name
+    // left by earlier processes: superseded, the old layout, and a longer name
     def fixture(dir: String) = {
       val d = tmpDir.resolve(dir)
       Files.createDirectories(d)
@@ -146,25 +151,26 @@ class StagingRobustnessSpec extends SparkSpec {
     }
     val superseded = Seq(s"graft_${name}_v1_$stamp", s"graft_${name}_$stamp",
       s"graft_${name}_v1_$otherStamp").map(fixture)
-    val otherScale = fixture(s"graft_${name}_v2_$otherStamp")
+    val oldLayout = fixture(s"graft_${name}_v2_$otherStamp")
     val longerName = fixture(s"graft_${name}_base_v1_$stamp")
     try {
-      val v2 = stageOnceFixture(name, 2, src.toString)(Files.createDirectories(_))
+      val v2 = stage(name, 2, Source(src.toString))(Files.createDirectories(_))
       assert(superseded.forall(!Files.exists(_)), "superseded versions must be evicted")
-      assert(Files.exists(otherScale), "the same version under another stamp must stay")
+      assert(!Files.exists(oldLayout), "an old-layout dir with no source must be evicted")
       assert(Files.exists(longerName), "another name's dirs must stay")
       val left = tmpDir.toFile.list().toSeq.filter(n =>
         n.startsWith(s"graft_${name}_") && n.endsWith(stamp) && !n.contains("_base_"))
       assert(left === Seq(v2.getFileName.toString))
       deleteRecursively(v2)
     } finally {
-      (superseded ++ Seq(otherScale, longerName)).foreach(deleteRecursively)
+      (superseded ++ Seq(oldLayout, longerName)).foreach(deleteRecursively)
       Files.delete(src)
     }
   }
 
   test("stage-once fixture: a cold stage evicts its source's dirs under other stamps only") {
-    import graft.streaming.StagedEvents.{deleteRecursively, sourceKey, stageOnceFixture}
+    import graft.Fixtures.{Source, sourceKey, stage}
+    import graft.streaming.StagedEvents.deleteRecursively
     val tmpDir = Paths.get(sys.props("java.io.tmpdir"))
     val name = s"spec_source_${java.util.UUID.randomUUID().toString.replace("-", "")}"
     val src = Files.createTempFile("graft-fixture-src", ".txt")
@@ -181,7 +187,7 @@ class StagingRobustnessSpec extends SparkSpec {
     val changed = fixture(s"graft_${name}_${sourceKey(src.toString)}_v1_${stamp.reverse}")
     val otherSource = fixture(s"graft_${name}_${sourceKey(otherSrc.toString)}_v1_${"0" * 32}")
     try {
-      val v1 = stageOnceFixture(name, 1, src.toString)(Files.createDirectories(_))
+      val v1 = stage(name, 1, Source(src.toString))(Files.createDirectories(_))
       try {
         assert(!Files.exists(changed), "the same source under another stamp must be evicted")
         assert(Files.exists(otherSource), "another source's dir must stay")
@@ -192,7 +198,7 @@ class StagingRobustnessSpec extends SparkSpec {
         // a dir this JVM handed out stays, even once its source changes
         Files.writeString(src, name + "-changed")
         Thread.sleep(1100) // ContentStamp serves a memoized stamp for 1 s
-        val v1b = stageOnceFixture(name, 1, src.toString)(Files.createDirectories(_))
+        val v1b = stage(name, 1, Source(src.toString))(Files.createDirectories(_))
         try {
           assert(v1b != v1, "changed contents must stage under a new stamp")
           assert(Files.exists(v1), "a handed-out dir must stay")
@@ -203,5 +209,54 @@ class StagingRobustnessSpec extends SparkSpec {
       Files.delete(src)
       Files.delete(otherSrc)
     }
+  }
+
+  test("stage-once fixture: parameter-keyed fixtures follow the same version rule") {
+    import graft.Fixtures.{Params, dirName, stage}
+    import graft.streaming.StagedEvents.deleteRecursively
+    val tmpDir = Paths.get(sys.props("java.io.tmpdir"))
+    val name = s"spec_params_${java.util.UUID.randomUUID().toString.replace("-", "")}"
+    // left by earlier processes: version 1 of these params, version 2 of others
+    def fixture(dir: String) = {
+      val d = tmpDir.resolve(dir)
+      Files.createDirectories(d)
+      Files.createFile(d.resolve("_SUCCESS"))
+      d
+    }
+    val oldVersion = fixture(dirName(name, 1, Params(3, 4)))
+    val otherParams = fixture(dirName(name, 2, Params(5, 6)))
+    var builds = 0
+    def stageV2() = stage(name, 2, Params(3, 4), Seq("v.txt")) { tmp =>
+      builds += 1
+      Files.createDirectories(tmp)
+      Files.writeString(tmp.resolve("v.txt"), "2")
+    }
+    val v2 = tmpDir.resolve(dirName(name, 2, Params(3, 4)))
+    try {
+      assert(stageV2() == v2 && builds == 1, "a bumped version must stage a new fixture")
+      assert(Files.readString(v2.resolve("v.txt")) == "2")
+      assert(!Files.exists(oldVersion), "a bumped version must evict the old version")
+      assert(Files.exists(otherParams), "other params' dirs of the same version must stay")
+      assert(stageV2() == v2 && builds == 1, "the same params must reuse the dir")
+      assert(dirName(name, 2, Params(34)) != dirName(name, 2, Params(3, 4)))
+      // a committed fixture missing one of its named files is re-staged
+      Files.delete(v2.resolve("v.txt"))
+      assert(stageV2() == v2 && builds == 2 && Files.exists(v2.resolve("v.txt")))
+    } finally Seq(oldVersion, otherParams, v2).foreach(deleteRecursively)
+  }
+
+  test("only Fixtures names the JVM temp root in main code") {
+    import scala.jdk.CollectionConverters._
+    // every stage-once dir goes through one store: a file that builds its
+    // own temp-root path is a staging mechanism beside it
+    val main = Paths.get("src", "main", "scala")
+    val walk = Files.walk(main)
+    val naming =
+      try walk.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala"))
+        .filter(p => Files.readString(p).contains("java.io.tmpdir"))
+        .map(main.relativize(_).toString).toVector
+      finally walk.close()
+    assert(naming === Vector(Paths.get("graft", "Fixtures.scala").toString))
   }
 }

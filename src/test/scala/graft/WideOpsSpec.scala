@@ -92,19 +92,22 @@ class WideOpsSpec extends SparkSpec {
 
   test("w8 splits evenly on a synthetic two-touch path") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_w8").toString
-    // u1: view, click, purchase(10.00)  -> 5.00 each to view and click
-    // u2: purchase(4.00) with no touches -> 4.00 to direct
-    Seq(
-      (1L, 1L, 1000L, "view", 0.0), (1L, 2L, 2000L, "click", 0.0),
-      (1L, 3L, 3000L, "purchase", 10.0), (2L, 4L, 1000L, "purchase", 4.0))
-      .toDF("user_id", "event_id", "us", "event_type", "value")
-      .withColumn("ts", timestamp_micros(col("us"))).drop("us")
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val got = SparkEntry.queries("w8_position_attribution")(spark, dir)
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap
-    assert(got == Map(
-      "view" -> (1L, 5.0), "click" -> (1L, 5.0), "direct" -> (1L, 4.0)), got.toString)
+    val tmp = java.nio.file.Files.createTempDirectory("graft_w8")
+    val dir = tmp.toString
+    try {
+      // u1: view, click, purchase(10.00)  -> 5.00 each to view and click
+      // u2: purchase(4.00) with no touches -> 4.00 to direct
+      Seq(
+        (1L, 1L, 1000L, "view", 0.0), (1L, 2L, 2000L, "click", 0.0),
+        (1L, 3L, 3000L, "purchase", 10.0), (2L, 4L, 1000L, "purchase", 4.0))
+        .toDF("user_id", "event_id", "us", "event_type", "value")
+        .withColumn("ts", timestamp_micros(col("us"))).drop("us")
+        .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      val got = SparkEntry.queries("w8_position_attribution")(spark, dir)
+        .collect().map(r => r.getString(0) -> (r.getLong(1), r.getDouble(2))).toMap
+      assert(got == Map(
+        "view" -> (1L, 5.0), "click" -> (1L, 5.0), "direct" -> (1L, 4.0)), got.toString)
+    } finally graft.streaming.StagedEvents.deleteRecursively(tmp)
   }
 
   test("emb_whitening: unit variance per component, zero cross-covariance") {
@@ -182,25 +185,28 @@ class WideOpsSpec extends SparkSpec {
 
   test("j9_nearest_asof picks the closer bracket, ties to the earlier") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_j9").toString
-    // u1: views at 0s and 100s; purchases at 40s (prev closer), 60s (next
-    // closer), 50s (exact tie -> earlier wins). u2: purchase, no views.
-    Seq(
-      (1L, 10L, 0L, "view", 0.0), (1L, 11L, 100000000L, "view", 0.0),
-      (1L, 12L, 40000000L, "purchase", 1.0), (1L, 13L, 60000000L, "purchase", 1.0),
-      (1L, 14L, 50000000L, "purchase", 1.0), (2L, 20L, 5000000L, "purchase", 1.0))
-      .toDF("user_id", "event_id", "us", "event_type", "value")
-      .withColumn("ts", timestamp_micros(col("us"))).drop("us")
-      .write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val got = SparkEntry.queries("j9_nearest_asof")(spark, dir)
-      .collect().map(r => r.getLong(0) ->
-        (Option(r.get(1)).map(_.asInstanceOf[Long]),
-          Option(r.get(2)).map(_.asInstanceOf[Long]))).toMap
-    assert(got == Map(
-      12L -> (Some(0L), Some(40000000L)),
-      13L -> (Some(100000000L), Some(40000000L)),
-      14L -> (Some(0L), Some(50000000L)),
-      20L -> (None, None)), got.toString)
+    val tmp = java.nio.file.Files.createTempDirectory("graft_j9")
+    val dir = tmp.toString
+    try {
+      // u1: views at 0s and 100s; purchases at 40s (prev closer), 60s (next
+      // closer), 50s (exact tie -> earlier wins). u2: purchase, no views.
+      Seq(
+        (1L, 10L, 0L, "view", 0.0), (1L, 11L, 100000000L, "view", 0.0),
+        (1L, 12L, 40000000L, "purchase", 1.0), (1L, 13L, 60000000L, "purchase", 1.0),
+        (1L, 14L, 50000000L, "purchase", 1.0), (2L, 20L, 5000000L, "purchase", 1.0))
+        .toDF("user_id", "event_id", "us", "event_type", "value")
+        .withColumn("ts", timestamp_micros(col("us"))).drop("us")
+        .write.mode("overwrite").parquet(s"$dir/events.parquet")
+      val got = SparkEntry.queries("j9_nearest_asof")(spark, dir)
+        .collect().map(r => r.getLong(0) ->
+          (Option(r.get(1)).map(_.asInstanceOf[Long]),
+            Option(r.get(2)).map(_.asInstanceOf[Long]))).toMap
+      assert(got == Map(
+        12L -> (Some(0L), Some(40000000L)),
+        13L -> (Some(100000000L), Some(40000000L)),
+        14L -> (Some(0L), Some(50000000L)),
+        20L -> (None, None)), got.toString)
+    } finally graft.streaming.StagedEvents.deleteRecursively(tmp)
   }
 
   test("f18_url_parse round-trips the fabricated URL fields") {
@@ -298,20 +304,23 @@ class WideOpsSpec extends SparkSpec {
 
   test("text_ngram_novelty: duplicated docs score 0, unique docs score 1") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_novelty").toString
-    val shared = "alpha beta gamma delta epsilon zeta eta theta"
-    Seq(
-      (1L, shared), (2L, shared), // exact twins: every shingle has df >= 2
-      (3L, "one two three four five six seven")) // disjoint: df == 1 shingles only
-      .toDF("doc_id", "text")
-      .write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    val got = SparkEntry.queries("text_ngram_novelty")(spark, dir)
-      .collect().map(r => r.getLong(0) -> r.getDouble(3)).toMap
-    assert(got == Map(1L -> 0.0, 2L -> 0.0, 3L -> 1.0), got.toString)
-    // and on the real corpus the score is a well-formed ratio
-    val real = q("text_ngram_novelty")
-      .agg(min(col("novelty")).as("lo"), max(col("novelty")).as("hi"),
-        sum((col("n_novel") > col("n_shingles")).cast("int")).as("bad")).head()
-    assert(real.getDouble(0) >= 0.0 && real.getDouble(1) <= 1.0 && real.getLong(2) == 0L)
+    val tmp = java.nio.file.Files.createTempDirectory("graft_novelty")
+    val dir = tmp.toString
+    try {
+      val shared = "alpha beta gamma delta epsilon zeta eta theta"
+      Seq(
+        (1L, shared), (2L, shared), // exact twins: every shingle has df >= 2
+        (3L, "one two three four five six seven")) // disjoint: df == 1 shingles only
+        .toDF("doc_id", "text")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val got = SparkEntry.queries("text_ngram_novelty")(spark, dir)
+        .collect().map(r => r.getLong(0) -> r.getDouble(3)).toMap
+      assert(got == Map(1L -> 0.0, 2L -> 0.0, 3L -> 1.0), got.toString)
+      // and on the real corpus the score is a well-formed ratio
+      val real = q("text_ngram_novelty")
+        .agg(min(col("novelty")).as("lo"), max(col("novelty")).as("hi"),
+          sum((col("n_novel") > col("n_shingles")).cast("int")).as("bad")).head()
+      assert(real.getDouble(0) >= 0.0 && real.getDouble(1) <= 1.0 && real.getLong(2) == 0L)
+    } finally graft.streaming.StagedEvents.deleteRecursively(tmp)
   }
 }

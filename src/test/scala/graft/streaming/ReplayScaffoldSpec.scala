@@ -21,8 +21,9 @@ class ReplayScaffoldSpec extends SparkSpec {
     "stream_postings_ingest", "stream_contam_gate", "stream_forget_keys",
     "mm_contam_gate", "stream_zonemap_ingest")
 
-  /** Every stage-once fixture dir (`graft_<name>_<source>_v<N>_<stamp>`)
-    * under the temp root, with each regular file's (size, mtime) — the listing
+  /** Every [[graft.Fixtures]] dir under the temp root
+    * (`graft_<name>_<key>_v<N>`, then `_<stamp>` for a source key), with
+    * each regular file's (size, mtime) — the listing
     * [[graft.queries.ContentStamp]] hashes, kept readable here so a
     * failure names the file that changed.
     */
@@ -32,7 +33,7 @@ class ReplayScaffoldSpec extends SparkSpec {
     val dirs =
       try ls.iterator().asScala
         .filter(p => Files.isDirectory(p) &&
-          p.getFileName.toString.matches("graft_.+_v\\d+_[0-9a-f]{32}"))
+          p.getFileName.toString.matches("graft_.+_v\\d+(?:_[0-9a-f]{32})?"))
         .toVector
       finally ls.close()
     dirs.map { d =>

@@ -27,12 +27,29 @@ class SessionWindowStreamSpec extends SparkSpec {
     // user 2: one singleton session
     (5L, ts(5, 0), 2L))
 
-  test("streaming session_window equals the batch sessions, boundary-exact") {
+  /** The fixture as an events table under `dir`. */
+  private def writeEvents(dir: java.nio.file.Path): Unit = {
     import spark.implicits._
-    val dir = Files.createTempDirectory("session-window-stream-spec")
     events.map { case (id, t, u) => (id, t, u, "view", 1.0, null: String) }
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
+  }
+
+  /** Run `body` on a fresh temp dir holding the fixture, then delete it. */
+  private def withEvents[T](prefix: String)(body: String => T): T = {
+    val dir = Files.createTempDirectory(prefix)
+    try {
+      writeEvents(dir)
+      body(dir.toString)
+    } finally StagedEvents.deleteRecursively(dir)
+  }
+
+  test("streaming session_window equals the batch sessions, boundary-exact") {
+    // the query stages its input as a `staged_events` fixture keyed on the
+    // source path: a fixed path, written once, lets every run reuse that
+    // fixture instead of staging a new one per run
+    val dir = java.nio.file.Paths.get("target", "session-window-stream-spec").toAbsolutePath
+    if (!Files.exists(dir.resolve("events.parquet").resolve("_SUCCESS"))) writeEvents(dir)
     val got = SessionWindowStream(spark, dir.toString)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val expected = Set(
@@ -51,13 +68,10 @@ class SessionWindowStreamSpec extends SparkSpec {
   // measurably double-counts: the re-delivery passes the still-zero
   // lagged late filter after dedup state was already evicted.)
   test("dedup→session chain: the re-delivered slice leaves no trace") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("session-dedup-stream-spec")
-    events.map { case (id, t, u) => (id, t, u, "view", 1.0, null: String) }
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val got = SessionDedupStream(spark, dir.toString)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val got = withEvents("session-dedup-stream-spec") { dir =>
+      SessionDedupStream(spark, dir)
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    }
     val expected = Set(
       (1L, 3L, 40 * 60.0),
       (1L, 1L, 0.0),
@@ -75,15 +89,12 @@ class SessionWindowStreamSpec extends SparkSpec {
   // (batch 0 reads 3, not 5).
   test("dedup→session chain metrics: " +
       "(0,5,0,5,3), (1,1,0,2,1), (2,1,1,2,1), (3,2,0,4,3)") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("session-dedup-metrics-spec")
-    events.map { case (id, t, u) => (id, t, u, "view", 1.0, null: String) }
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
-    val got = SessionDedupStream.metrics(spark, dir.toString)
-      .collect()
-      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
-      .toList.sortBy(_._1)
+    val got = withEvents("session-dedup-metrics-spec") { dir =>
+      SessionDedupStream.metrics(spark, dir)
+        .collect()
+        .map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+        .toList.sortBy(_._1)
+    }
     assert(got === List(
       (0, 5L, 0L, 5L, 3L),
       (1, 1L, 0L, 2L, 1L),
